@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.image.ImageOps
@@ -39,12 +38,7 @@ object Convert {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: Convert <images|text|audio|video|tar> <inGlob> <outDir>")
     val Array(kind, inGlob, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(appName = "graft-convert")
     kind match {
       case "images" =>
         spark.read.format("binaryFile").load(inGlob)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection CLI: print the executed plan of named queries (all
   * when none named) against an sf dir — the `.explain("formatted")`
   * loop the engine's performance discipline is built on, packaged so a
@@ -16,12 +14,7 @@ object Explain {
       if (args.length > 1 && args(1).nonEmpty) args(1).split(',').toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val mode = if (args.length > 2) args(2) else "formatted"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(appName = "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with scale-aware defaults.
   *
-  * The engine is designed for a large multi-executor cluster but tested on
-  * `local[32]`. Everything scale-relevant is expressed through the plan
+  * The engine is designed for a large multi-executor cluster but tested on a
+  * local master. Everything scale-relevant is expressed through the plan
   * (partitioning columns, broadcast hints, AQE) rather than hard-coded
   * parallelism, so the same code runs unchanged on a 1000-executor cluster.
   */
@@ -14,9 +14,13 @@ object Graft {
     * overridden by AQE coalescing (`spark.sql.adaptive.coalescePartitions`). */
   val LocalShufflePartitions = 32
 
-  def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+  /** The one place a `SparkSession` is built: tests, the CLI mains and
+    * the benchmark harness all share these extensions and confs. The
+    * default master is sized by `SPARK_GRAFT_CPUS` (`local[4]` if unset). */
+  def session(
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
+      appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(master)
       .appName(appName)

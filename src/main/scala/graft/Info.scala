@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{Catalog, Tables}
 
 /** Dataset metadata dump — the `fuel-info` CLI analog (reference:
@@ -9,12 +7,7 @@ import graft.sources.{Catalog, Tables}
 object Info {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(appName = "graft-info")
     val cat = Catalog.forTestData(spark, sfDir)
     val which = if (args.length > 1) Seq(args(1)) else Tables.all
     which.foreach { name =>

@@ -8,9 +8,8 @@ import graft.functions.{DotExpr, GatherSumExpr, Hash64Expr}
 
 /** SparkSessionExtensions hook — the engine's custom-expression tier made
   * available to the SQL entry point (SURVEY §4 "custom codegen Expression"
-  * + §2.6 UDF surface). Activate in code via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` (what
-  * [[graft.Graft.session]] does) or externally via
+  * + §2.6 UDF surface). [[graft.Graft.session]] installs it via the
+  * builder's `withExtensions`; outside that factory, activate it with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Registered functions (native codegen expressions, not UDFs):

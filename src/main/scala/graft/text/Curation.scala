@@ -154,7 +154,7 @@ object Curation {
     * THREE consumers (sig mins + both verify-join sides), and the
     * verify joins shuffle the shingle arrays regardless, so persisting
     * trades one cached write for two full re-hashings of the corpus
-    * (sf0.1 probe, BenchQ73: 3.4 s → 2.6 s for the stage; the win
+    * (sf0.1 stage probe: 3.4 s → 2.6 s for the stage; the win
     * compounds across every chain that embeds this stage). At 100 TB
     * the cache is corpus-token-scale — MEMORY_AND_DISK absorbs it; pass
     * `reuse = Recompute` when executor disk, not CPU, is the bound. */
@@ -315,7 +315,7 @@ object Curation {
   def curateFull(docs: DataFrame, benchmark: DataFrame, seqLen: Int = 512,
       reuse: Reuse = Persist, k: Int = 3, minOverlap: Int = 2): DataFrame = {
     // Two cache boundaries, each with its own reason (stage-timed at
-    // sf0.1/local[32], BenchQ59 — the full chain went 17.2 s → ~4 s):
+    // sf0.1/local[32] — the full chain went 17.2 s → ~4 s):
     //
     // 1. Under [[Persist]], the SCRUB output is what caches — not the
     //    gated frame. The gate's filter predicate is substituted through
@@ -527,7 +527,7 @@ object Curation {
     *
     * Output: (idCol, clean_text, n_lines, n_lines_removed, n_spans).
     * Scale shape: stages 1–3 are pure projections/filters; stage 4 is
-    * dedupSpans' two-scan dictionary chain over LINE windows — strictly
+    * dedupSpans' single count/min window pass over LINE windows — strictly
     * cheaper than the token-granularity q71 (windows per doc = lines,
     * not tokens). */
   def curateC4(raw: DataFrame, bannedWords: Seq[String] = Nil,

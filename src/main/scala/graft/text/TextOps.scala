@@ -396,7 +396,14 @@ object TextOps {
     * scalars (N, T) are computed ONCE and shared by round 1, the
     * expansion idf, and round 2 as a persisted ONE-ROW frame — without
     * it each stage re-paid a full corpus tokenize pass for two longs
-    * (3 passes → 1, measured r15). */
+    * (3 passes → 1, measured r15).
+    *
+    * Lifecycle: the scalars frame stays persisted after this returns —
+    * the returned round-2 frame reads it lazily, so it cannot be
+    * unpersisted here. It is released when the caller runs
+    * `spark.catalog.clearCache()`, as with every [[graft.transform.Cache]]
+    * site (see that class's session-lifecycle note); a long-lived session
+    * calling this repeatedly should clear at its own query boundaries. */
   def bm25PseudoFeedback(docs: DataFrame, idCol: String, toksCol: String,
       queries: Seq[(Long, Seq[String])], k: Int = 10, fbDocs: Int = 3,
       fbTerms: Int = 2, scale: Long = 10000L): DataFrame = {

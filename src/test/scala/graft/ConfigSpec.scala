@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** The four-layer config cascade ([[Graft.configValue]] — fuel's
   * config_parser re-expressed): conf > env > rc file > default, per key.
   * The env layer is process-global and so exercised implicitly (an unset
   * `GRAFT_*` var falls through); the other three layers are pinned here.
+  * Also pins that every entry point shares [[Graft.session]]'s config.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -29,5 +32,20 @@ class ConfigSpec extends SparkSpec {
     // a missing rc file is an empty layer, not an error (fuel skips a
     // missing ~/.fuelrc identically)
     assert(Graft.loadRc(Paths.get("/definitely/not/graftrc")).isEmpty)
+  }
+
+  test("Graft.session is the only place a SparkSession is built") {
+    // Tolerates whitespace and newlines around the dot, so a wrapped
+    // builder chain is caught too.
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val sources = Seq("src/main", "src/test").flatMap { root =>
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val builders = sources
+      .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.toString).toSet
+    assert(builders == Set("src/main/scala/graft/Graft.scala"))
   }
 }
