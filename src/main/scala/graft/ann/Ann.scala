@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopK
+import graft.sources.{Store, StoreKind}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -1214,107 +1215,91 @@ object Ann {
     * encode are [[ivfPqTopK]]'s verbatim, so a probe of the reloaded
     * artifact is bit-identical to the in-memory tier — q229 pins that
     * loop closure against the from-raw SQL rebuild. Reload through
-    * [[readPqIndex]] (`spark.table`), never a bare parquet path
-    * ([[graft.dedup.Dedup.writeStore]]'s bucket-spec trap). */
+    * [[readPqIndex]] (`spark.table`, the [[graft.sources.Store]]
+    * contract), never a bare parquet path.
+    *
+    * `growing` batch-partitions the encoded lists: at 100 TB the
+    * code-only index is the one that gets appended daily, so it takes
+    * [[appendPqBatch]]'s incremental path, with the seed corpus in
+    * partition `__batch_id = -1`. */
   def writePqIndex(corpus: DataFrame, table: String, path: String,
       idCol: String, vecCol: String, seed: Long = 42, nCentroids: Int = 16,
       m: Int = 4, ksub: Int = 16, iters: Int = 1, dim: Int = 64,
-      buckets: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    val (enc, coarse, cbs) =
+      buckets: Int = 16, growing: Boolean = false): Unit = {
+    val (_, coarse, cbs) =
       ivfPqEncode(corpus, idCol, vecCol, seed, nCentroids, m, ksub, iters, dim)
-    writePqSidecars(spark, path, coarse, cbs)
-    enc
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
+    writeQuantizer(corpus.sparkSession, path, coarse, cbs)
+    Store.write(corpus, pqLists(coarse, cbs, idCol, vecCol), table, path,
+      buckets, growing)
   }
 
-  /** The KB-sized quantizer sidecars of a persisted PQ index: coarse
-    * centroids and PQ codebooks (`coalesce(1)` is correct here — these
-    * are driver-side arrays, not data). */
-  private def writePqSidecars(spark: org.apache.spark.sql.SparkSession,
+  /** [[writePqIndex]] with `growing = true`. */
+  def writePqIndexPartitioned(corpus: DataFrame, table: String, path: String,
+      idCol: String, vecCol: String, seed: Long = 42, nCentroids: Int = 16,
+      m: Int = 4, ksub: Int = 16, iters: Int = 1, dim: Int = 64,
+      buckets: Int = 16): Unit =
+    writePqIndex(corpus, table, path, idCol, vecCol, seed, nCentroids, m,
+      ksub, iters, dim, buckets, growing = true)
+
+  /** The PQ inverted lists' [[graft.sources.Store]] layout: a
+    * [[pqEncodeFrozen]] pass (cid, idCol, codes, rnorm), bucketed and
+    * sorted by cid. The first write and [[appendPqBatch]] both encode
+    * through it, so an appended row is exactly what a rebuild over the
+    * same quantizers would store. */
+  private def pqLists(centroids: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]], idCol: String,
+      vecCol: String): StoreKind =
+    StoreKind("pq", pqEncodeFrozen(_, idCol, vecCol, centroids, codebooks),
+      Seq("cid"), sorted = true)
+
+  /** The KB-sized quantizer sidecars of a persisted IVF or PQ index:
+    * `<path>_centroids` (cid, cvec) and, for PQ, `<path>_codebooks` (j,
+    * cid, cv). `coalesce(1)` is correct here — these are driver-side
+    * arrays, not data. */
+  private def writeQuantizer(spark: org.apache.spark.sql.SparkSession,
       path: String, coarse: Array[Array[Double]],
-      cbs: Array[Array[Array[Double]]]): Unit = {
+      codebooks: Array[Array[Array[Double]]] = Array.empty): Unit = {
     import spark.implicits._
     coarse.toSeq.zipWithIndex
       .map { case (v, i) => (i, v.toSeq) }
       .toDF("cid", "cvec")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"${path}_centroids")
-    cbs.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
-      }.toSeq.toDF("j", "cid", "cv")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"${path}_codebooks")
+    if (codebooks.nonEmpty)
+      codebooks.zipWithIndex.flatMap { case (cb, j) =>
+          cb.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
+        }.toSeq.toDF("j", "cid", "cv")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"${path}_codebooks")
   }
 
-  /** [[writePqIndex]] with BATCH-PARTITIONED encoded lists — the
-    * growing-index form of the COMPRESSED artifact
-    * ([[writeIvfIndexPartitioned]]'s contract applied to codes): at
-    * 100 TB the code-only index is the one that gets appended daily
-    * (it is the 20-60× smaller object), so it needs the same
-    * incremental path as the float tier. The seed corpus lands in
-    * partition `__batch_id = -1`; each later batch lands via
-    * [[appendPqBatch]]'s INSERT OVERWRITE of its own partition
-    * (idempotent under foreachBatch replay). The bucket spec (cid) is
-    * shared by every partition, so [[pqProbe]]'s list-side join stays
-    * exchange-free as the index grows. */
-  def writePqIndexPartitioned(corpus: DataFrame, table: String, path: String,
-      idCol: String, vecCol: String, seed: Long = 42, nCentroids: Int = 16,
-      m: Int = 4, ksub: Int = 16, iters: Int = 1, dim: Int = 64,
-      buckets: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    val (enc, coarse, cbs) =
-      ivfPqEncode(corpus, idCol, vecCol, seed, nCentroids, m, ksub, iters, dim)
-    writePqSidecars(spark, path, coarse, cbs)
-    enc
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
-  }
-
-  /** Land one batch of NEW vectors in a [[writePqIndexPartitioned]]
-    * index: assignment AND encoding use the FROZEN quantizers
+  /** Land one batch of NEW vectors in a growing [[writePqIndex]] index:
+    * assignment AND encoding use the FROZEN quantizers
     * ([[pqEncodeFrozen]] — an index's centroids and codebooks are a
     * contract; retraining them would re-encode every stored row, which
-    * is a rebuild, not an append), and the landing is an INSERT
-    * OVERWRITE of the batch's own partition, so a replayed batch
-    * overwrites rather than duplicates ([[appendIvfBatch]]'s
-    * at-least-once argument). Spark buckets the insert by the table's
-    * (cid) spec — one batch-sized shuffle, the stored lists never move. */
+    * is a rebuild, not an append). The landing is
+    * [[graft.sources.Store.land]]: the batch's own partition is
+    * overwritten, so a replayed batch overwrites rather than duplicates,
+    * and the stored lists never move. */
   def appendPqBatch(batch: DataFrame, table: String,
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], batchId: Long,
-      idCol: String, vecCol: String): Unit = {
-    require(batchId >= 0, s"appendPqBatch: batchId $batchId is reserved " +
-      "(-1 is the seed corpus partition)")
-    val view = s"graft_pq_batch_$batchId"
-    pqEncodeFrozen(batch, idCol, vecCol, centroids, codebooks)
-      .createOrReplaceTempView(view)
-    try batch.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT cid, $idCol, codes, rnorm FROM $view")
-    finally { batch.sparkSession.catalog.dropTempView(view); () }
-  }
+      idCol: String, vecCol: String): Unit =
+    Store.land(batch, pqLists(centroids, codebooks, idCol, vecCol), table, batchId)
 
   /** Reload a [[writePqIndex]] artifact: the encoded lists with their
     * bucket spec intact, plus the coarse quantizer and the PQ codebooks
     * as the driver-side arrays [[pqProbe]] takes. */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       path: String): (DataFrame, Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cents = spark.read.parquet(s"${path}_centroids")
-      .orderBy("cid").select("cvec").collect()
-      .map(_.getSeq[Double](0).toArray)
+    val (lists, cents) = readIvfIndex(spark, table, path)
     val cbRows = spark.read.parquet(s"${path}_codebooks")
       .orderBy("j", "cid").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = cbRows.iterator.map(_._1).max + 1
     val cbs = Array.tabulate(m)(j =>
       cbRows.filter(_._1 == j).sortBy(_._2).map(_._3))
-    (spark.table(table), cents, cbs)
+    (lists, cents, cbs)
   }
 
   /** Query a persisted IVF-PQ index ([[readPqIndex]]'s output): probe-
@@ -1455,70 +1440,18 @@ object Ann {
           .as(Seq("tbl", "bucket")))
       .select(col("tbl"), col("bucket"), col(idCol), col("qvec"))
 
-  /** Materialize an [[embeddingStore]]'s sign-bucket rows bucketed by
-    * the FULL (tbl, bucket) join key —
-    * [[graft.dedup.Dedup.writeBandedStore]]'s cosine edition: admission's
-    * store-side near join reads buckets in place (only the batch
-    * shuffles; the subset-bucket-spec and bare-path traps are the same).
-    * Pass `spark.table(table)` to
-    * [[graft.text.Curation.admitEmbedding]]'s `storeBuckets`. */
-  def writeBucketedEmbeddingStore(store: DataFrame, table: String, path: String,
-      seed: Long = 42, tables: Int = 6, planes: Int = 8, dim: Int = 64,
-      buckets: Int = 64, idCol: String = "vec_id"): Unit =
-    signBucketRows(store, idCol, hyperplanes(seed, tables, planes, dim))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "tbl", "bucket").saveAsTable(table)
-
-  /** [[graft.dedup.Dedup.writeStorePartitioned]] at embedding parity:
-    * (vec_id, xkey, qvec) with a `__batch_id` partition column for
-    * idempotent micro-batch landings, bucketed+sorted by xkey so the
-    * exact-cross anti-join's store side stays exchange-free as batches
-    * accumulate. */
-  def writeEmbeddingStorePartitioned(store: DataFrame, table: String,
-      path: String, buckets: Int = 64): Unit =
-    store.select(col("vec_id"), col("xkey"), col("qvec"))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "xkey").sortBy("xkey")
-      .saveAsTable(table)
-
-  /** Land one micro-batch of embedding-store rows idempotently
-    * ([[graft.dedup.Dedup.overwriteStoreBatch]]'s INSERT OVERWRITE
-    * shape). */
-  def overwriteEmbeddingStoreBatch(sigs: DataFrame, table: String,
-      batchId: Long): Unit = {
-    val view = s"graft_emb_store_batch_$batchId"
-    sigs.select("vec_id", "xkey", "qvec").createOrReplaceTempView(view)
-    try sigs.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT vec_id, xkey, qvec FROM $view")
-    finally sigs.sparkSession.catalog.dropTempView(view)
-  }
-
-  /** Batch-partitioned [[writeBucketedEmbeddingStore]] — the growing
-    * store's near-side table. */
-  def writeBucketedEmbeddingStorePartitioned(store: DataFrame, table: String,
-      path: String, seed: Long = 42, tables: Int = 6, planes: Int = 8,
-      dim: Int = 64, buckets: Int = 64): Unit =
-    signBucketRows(store, "vec_id", hyperplanes(seed, tables, planes, dim))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "tbl", "bucket").saveAsTable(table)
-
-  /** Land one micro-batch's sign-bucket rows idempotently. */
-  def overwriteBucketedEmbeddingStoreBatch(sigs: DataFrame, table: String,
-      batchId: Long, seed: Long = 42, tables: Int = 6, planes: Int = 8,
-      dim: Int = 64): Unit = {
-    val view = s"graft_emb_bucket_batch_$batchId"
-    signBucketRows(sigs, "vec_id", hyperplanes(seed, tables, planes, dim))
-      .createOrReplaceTempView(view)
-    try sigs.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT tbl, bucket, vec_id, qvec FROM $view")
-    finally sigs.sparkSession.catalog.dropTempView(view)
-  }
+  /** The embedding near tier's [[graft.sources.Store]] layout: an
+    * [[embeddingStore]]'s [[signBucketRows]] bucketed by the FULL (tbl,
+    * bucket) join key — [[graft.dedup.Dedup.bandStore]]'s cosine
+    * edition. Admission's store-side near join reads buckets in place;
+    * only the batch shuffles. Pass `Store.read(spark, table)` to
+    * [[graft.text.Curation.admitEmbedding]]'s `storeBuckets`. The exact
+    * tier is [[graft.dedup.Dedup.exactStore]]`("qvec", "vec_id")`. */
+  def signBucketStore(seed: Long = 42, tables: Int = 6, planes: Int = 8,
+      dim: Int = 64): StoreKind =
+    StoreKind("sign_buckets",
+      signBucketRows(_, "vec_id", hyperplanes(seed, tables, planes, dim)),
+      Seq("tbl", "bucket"), sorted = false)
 
   /** Deterministic hyperplane matrix: `tables` x `planes` hyperplanes of
     * dimension `dim`, components in [-1, 1) derived from splitmix-style
@@ -1578,29 +1511,34 @@ object Ann {
     topKPerQuery(scored, k)
   }
 
-  /** The IVF index as a PERSISTED artifact — the ANN analog of
-    * [[graft.dedup.Dedup.writeStore]]: train once (the centroid sample
-    * and the corpus-wide nearest-centroid assignment — everything in
+  /** The IVF index as a PERSISTED artifact — the ANN analog of the
+    * signature stores: train once (the centroid sample and the
+    * corpus-wide nearest-centroid assignment — everything in
     * [[ivfTopK]] that touches the whole corpus), keep it, and serve
     * every future query batch by probe + in-list rerank with no
     * re-clustering and no corpus movement.
     *
-    * Two tables: `<table>` holds the inverted lists (cid, idCol, vecCol)
+    * Two pieces: `<table>` holds the inverted lists (cid, idCol, vecCol)
     * bucketed AND sorted by cid — HashPartitioning(cid) satisfies the
     * probe join's distribution, so the corpus side reads its buckets in
     * place and only the (small) query batch shuffles. `<path>_centroids`
     * holds the quantizer itself, (cid, cvec): nCentroids rows by the
     * [[sampleCentroids]] contract, which future sessions reload to
     * compute probe lists as a pure projection. Re-read through
-    * [[readIvfIndex]] (`spark.table`), never a bare parquet path — the
-    * bucket-spec trap [[graft.dedup.Dedup.writeStore]] documents applies
-    * unchanged. Vectors persist in their source type (float arrays stay
-    * float — exact under the double cast every kernel applies), so the
-    * artifact costs the corpus's own vector bytes, not 2x. */
+    * [[readIvfIndex]] (`spark.table`, the [[graft.sources.Store]]
+    * contract), never a bare parquet path. Vectors persist in their
+    * source type (float arrays stay float — exact under the double cast
+    * every kernel applies), so the artifact costs the corpus's own
+    * vector bytes, not 2x.
+    *
+    * `growing` batch-partitions the lists: the corpus seeds partition
+    * `__batch_id = -1` and each later vector batch lands via
+    * [[appendIvfBatch]]. The bucket spec (cid) is shared by every
+    * partition, so [[ivfProbe]]'s list-side join stays exchange-free as
+    * the index grows. */
   def writeIvfIndex(corpus: DataFrame, table: String, path: String,
       idCol: String, vecCol: String, seed: Long = 42, nCentroids: Int = 16,
-      buckets: Int = 16, refineIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
+      buckets: Int = 16, refineIters: Int = 0, growing: Boolean = false): Unit = {
     val sampled = sampleCentroids(corpus, idCol, vecCol, seed, nCentroids)
     // refineIters > 0: balance the inverted lists with [[kmeansRefine]]'s
     // Lloyd steps over the int8-quantized corpus before assignment — a
@@ -1611,74 +1549,30 @@ object Ann {
       if (refineIters == 0) sampled
       else kmeansRefine(quantize(corpus, idCol, vecCol), idCol, "qvec",
         sampled, refineIters)
-    import spark.implicits._
-    centroids.toSeq.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }
-      .toDF("cid", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"${path}_centroids")
-    withNearestCentroids(corpus, vecCol, centroids, 1, "__near")
-      .select(element_at(col("__near"), 1).as("cid"), col(idCol), col(vecCol))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
+    writeQuantizer(corpus.sparkSession, path, centroids)
+    Store.write(corpus, ivfLists(centroids, idCol, vecCol), table, path,
+      buckets, growing)
   }
 
-  /** [[writeIvfIndex]] with BATCH-PARTITIONED inverted lists — the
-    * growing-index analog of
-    * [[graft.dedup.Dedup.writeStorePartitioned]]: the initial corpus
-    * seeds partition `__batch_id = -1`, and each later vector batch
-    * lands via [[appendIvfBatch]]'s INSERT OVERWRITE of its own
-    * partition (idempotent under foreachBatch replay — the same
-    * at-least-once argument as the signature stores). The bucket spec
-    * (cid) is shared by every partition, so [[ivfProbe]]'s list-side
-    * join stays exchange-free as the index grows. */
-  def writeIvfIndexPartitioned(corpus: DataFrame, table: String, path: String,
-      idCol: String, vecCol: String, seed: Long = 42, nCentroids: Int = 16,
-      buckets: Int = 16, refineIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    val sampled = sampleCentroids(corpus, idCol, vecCol, seed, nCentroids)
-    val centroids =
-      if (refineIters == 0) sampled
-      else kmeansRefine(quantize(corpus, idCol, vecCol), idCol, "qvec",
-        sampled, refineIters)
-    import spark.implicits._
-    centroids.toSeq.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }
-      .toDF("cid", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"${path}_centroids")
-    withNearestCentroids(corpus, vecCol, centroids, 1, "__near")
-      .select(element_at(col("__near"), 1).as("cid"), col(idCol), col(vecCol))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
-  }
+  /** The IVF inverted lists' [[graft.sources.Store]] layout: each row's
+    * nearest centroid as (cid, idCol, vecCol), bucketed and sorted by
+    * cid — shared by [[writeIvfIndex]] and [[appendIvfBatch]]. */
+  private def ivfLists(centroids: Array[Array[Double]], idCol: String,
+      vecCol: String): StoreKind =
+    StoreKind("ivf", withNearestCentroids(_, vecCol, centroids, 1, "__near")
+        .select(element_at(col("__near"), 1).as("cid"), col(idCol), col(vecCol)),
+      Seq("cid"), sorted = true)
 
-  /** Land one batch of NEW vectors in a [[writeIvfIndexPartitioned]]
-    * index: assignment uses the FROZEN quantizer (an IVF index's
-    * centroids are a contract — retraining them would re-bucket every
-    * stored list, which is a rebuild, not an append), and the landing
-    * is an INSERT OVERWRITE of the batch's own partition, so a replayed
-    * batch overwrites rather than duplicates. Spark buckets the insert
-    * by the table's (cid) spec — one batch-sized shuffle, the stored
-    * lists never move. */
+  /** Land one batch of NEW vectors in a growing [[writeIvfIndex]] index:
+    * assignment uses the FROZEN quantizer (an IVF index's centroids are
+    * a contract — retraining them would re-bucket every stored list,
+    * which is a rebuild, not an append), and the landing is
+    * [[graft.sources.Store.land]] of the batch's own partition, so a
+    * replayed batch overwrites rather than duplicates. */
   def appendIvfBatch(batch: DataFrame, table: String,
       centroids: Array[Array[Double]], batchId: Long,
-      idCol: String, vecCol: String): Unit = {
-    require(batchId >= 0, s"appendIvfBatch: batchId $batchId is reserved " +
-      "(-1 is the seed corpus partition)")
-    val view = s"graft_ivf_batch_$batchId"
-    withNearestCentroids(batch, vecCol, centroids, 1, "__near")
-      .select(element_at(col("__near"), 1).as("cid"), col(idCol), col(vecCol))
-      .createOrReplaceTempView(view)
-    try batch.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT cid, $idCol, $vecCol FROM $view")
-    finally { batch.sparkSession.catalog.dropTempView(view); () }
-  }
+      idCol: String, vecCol: String): Unit =
+    Store.land(batch, ivfLists(centroids, idCol, vecCol), table, batchId)
 
   /** Embedding hygiene report — the one-row health check before any
     * ANN tier runs: zero-norm vectors make cosine undefined (every
@@ -1795,7 +1689,7 @@ object Ann {
     val cents = spark.read.parquet(s"${path}_centroids")
       .orderBy("cid").select("cvec").collect()
       .map(_.getSeq[Double](0).toArray)
-    (spark.table(table), cents)
+    (Store.read(spark, table), cents)
   }
 
   /** Query a persisted IVF index ([[readIvfIndex]]'s output): probe-list

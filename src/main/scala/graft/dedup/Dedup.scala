@@ -4,11 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stable
+import graft.sources.StoreKind
 
 /** Deduplication for training-data pipelines: exact, MinHash+LSH banding,
   * SimHash, n-gram Jaccard verification, benchmark decontamination, and
   * the incremental-admission machinery ([[signatureStore]] /
-  * [[writeStore]] / [[writeBandedStore]] / [[sigAgreement]]) that lets
+  * [[exactStore]] / [[bandStore]] / [[sigAgreement]]) that lets
   * future batches dedup against a frozen corpus without re-reading it.
   *
   * Scale discipline (the reason these exist as first-class operators):
@@ -916,182 +917,40 @@ object Dedup {
       md5(substring(col(textCol), 1, 40)).as("xkey"),
       simhashColumn(col(toksCol), bits).as("simhash"))
 
-  /** Materialize a [[signatureStore]] as a bucketed table so admission
-    * joins CO-LOCATE instead of reshuffling the store: the exact-cross
-    * anti-join's store side reads its buckets directly (HashPartitioning
-    * on xkey satisfies the join's distribution — no store-side Exchange;
-    * only the small batch side shuffles, StoreSpec pins the plan). At
+  /** The exact tier's [[graft.sources.Store]] layout: (idCol, xkey,
+    * sigCol) rows of a [[signatureStore]], [[simhashStore]] or
+    * [[graft.ann.Ann.embeddingStore]], bucketed AND sorted by xkey.
+    * Admission's exact-cross anti-join then reads the store's buckets in
+    * place: HashPartitioning on xkey satisfies the join's distribution,
+    * so only the small batch side shuffles (StoreSpec pins the plan). At
     * 100 TB the store is the big, stable side of every admission join,
     * so this is the difference between re-shuffling the corpus's
-    * signatures per batch and never moving them at all. Buckets are also
-    * sorted by xkey, so the sort-merge side skips its sort.
-    *
-    * `path` makes it an external table (files live there, not in the
-    * warehouse); bucket metadata lives in the session catalog — re-read
-    * through [[readStore]]/`spark.table`, NOT `spark.read.parquet`
-    * (a bare path read loses the bucket spec and reintroduces the
-    * exchange). For the near join's (band, bkey) keys, a second
-    * pre-banded table bucketed by bkey serves the same way —
-    * HashPartitioning(bkey) satisfies ClusteredDistribution(band, bkey). */
-  def writeStore(store: DataFrame, table: String, path: String,
-      buckets: Int = 64): Unit =
-    store.write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "xkey").sortBy("xkey")
-      .saveAsTable(table)
+    * signatures per batch and never moving them at all. */
+  def exactStore(sigCol: String = "sig", idCol: String = "doc_id"): StoreKind =
+    StoreKind("exact", _.select(idCol, "xkey", sigCol), Seq("xkey"), sorted = true)
 
-  /** Read back a [[writeStore]] table with its bucket spec intact. */
-  def readStore(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /** The near join's analog of [[writeStore]]: the store's [[banded]]
-    * rows (band, bkey, doc_id, sig), materialized bucketed by the FULL
-    * join key (band, bkey) — Spark's default co-partition check
-    * (`spark.sql.requireAllClusterKeysForCoPartition`) only exploits a
-    * bucket spec that matches the join keys exactly, and a subset spec
-    * gets the bucketed scan disabled by the planner outright. With it,
-    * admission's store-side near join reads buckets in place — without
-    * it, every admitted batch re-shuffles the corpus-sized banded
-    * signature stream (bands × corpus rows), which at 100 TB dwarfs the
-    * batch itself. Pass `spark.table(table)` to
+  /** The near join's store layout: the store's [[banded]] rows (band,
+    * bkey, doc_id, sig), bucketed by the FULL (band, bkey) join key.
+    * Admission's store-side near join then reads buckets in place;
+    * without it, every admitted batch re-shuffles the corpus-sized
+    * banded signature stream (bands × corpus rows), which at 100 TB
+    * dwarfs the batch itself. Pass `Store.read(spark, table)` to
     * [[graft.text.Curation.admit]]'s `storeBands`; AdmitSpec pins both
     * the plan and the equal-results-with-the-fused-path property. */
-  def writeBandedStore(store: DataFrame, table: String, path: String,
-      bands: Int, rowsPerBand: Int, buckets: Int = 64,
-      idCol: String = "doc_id", sigCol: String = "sig"): Unit =
-    banded(store.filter(col(sigCol).isNotNull), idCol, sigCol,
-        bands, rowsPerBand, "writeBandedStore")
-      .select(col("band"), col("bkey"), col(idCol).as("doc_id"), col(sigCol).as("sig"))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "band", "bkey").saveAsTable(table)
+  def bandStore(bands: Int, rowsPerBand: Int): StoreKind =
+    StoreKind("bands", df => banded(df.filter(col("sig").isNotNull), "doc_id",
+        "sig", bands, rowsPerBand, "bandStore")
+      .select(col("band"), col("bkey"), col("doc_id"), col("sig")),
+      Seq("band", "bkey"), sorted = false)
 
-  // ------------------------------------------- streaming store maintenance
-
-  /** [[writeStore]] for a store that GROWS per micro-batch
-    * ([[graft.streaming.Streaming.admitStream]]): same xkey bucket spec
-    * plus a `__batch_id` partition column, so each micro-batch lands via
-    * INSERT OVERWRITE of its OWN partition ([[overwriteStoreBatch]]) — a
-    * replayed batch (foreachBatch is at-least-once) replaces its rows
-    * instead of duplicating them. Bucketing holds per bucket id ACROSS
-    * batch partitions (all files of a bucket coalesce into one scan
-    * partition), so the store-side join stays exchange-free as batches
-    * accumulate; only the one-file-per-bucket SORT guarantee is lost, so
-    * sort-merge joins re-sort in place (no exchange — StreamingSpec pins
-    * it). `store` seeds partition `__batch_id = -1` (the frozen corpus). */
-  def writeStorePartitioned(store: DataFrame, table: String, path: String,
-      buckets: Int = 64): Unit =
-    store.select(col("doc_id"), col("xkey"), col("sig"))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "xkey").sortBy("xkey")
-      .saveAsTable(table)
-
-  /** Land one micro-batch of signatures in a [[writeStorePartitioned]]
-    * table, idempotently: INSERT OVERWRITE of the batch's own partition.
-    * Spark buckets the insert by the table's spec, so the write costs
-    * one batch-sized shuffle and the read-side guarantee is preserved. */
-  def overwriteStoreBatch(sigs: DataFrame, table: String, batchId: Long): Unit = {
-    val view = s"graft_store_batch_$batchId"
-    sigs.select("doc_id", "xkey", "sig").createOrReplaceTempView(view)
-    try sigs.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT doc_id, xkey, sig FROM $view")
-    finally sigs.sparkSession.catalog.dropTempView(view)
-  }
-
-  /** [[writeBandedStore]], batch-partitioned like [[writeStorePartitioned]]
-    * — the near join's growing-store analog. */
-  def writeBandedStorePartitioned(store: DataFrame, table: String, path: String,
-      bands: Int, rowsPerBand: Int, buckets: Int = 64): Unit =
-    banded(store.filter(col("sig").isNotNull), "doc_id", "sig",
-        bands, rowsPerBand, "writeBandedStore")
-      .select(col("band"), col("bkey"), col("doc_id"), col("sig"))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "band", "bkey").saveAsTable(table)
-
-  /** Land one micro-batch's banded rows in a
-    * [[writeBandedStorePartitioned]] table ([[overwriteStoreBatch]]'s
-    * idempotent INSERT OVERWRITE shape). */
-  def overwriteBandedStoreBatch(sigs: DataFrame, table: String, batchId: Long,
-      bands: Int, rowsPerBand: Int): Unit = {
-    val view = s"graft_banded_store_batch_$batchId"
-    banded(sigs.filter(col("sig").isNotNull), "doc_id", "sig",
-        bands, rowsPerBand, "overwriteBandedStoreBatch")
-      .select(col("band"), col("bkey"), col("doc_id"), col("sig"))
-      .createOrReplaceTempView(view)
-    try sigs.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT band, bkey, doc_id, sig FROM $view")
-    finally sigs.sparkSession.catalog.dropTempView(view)
-  }
-
-  // ------------------------------ simhash store maintenance (parity tier)
-
-  /** [[writeBandedStore]] at SimHash parity: the store's [[simhashBanded]]
-    * rows (band, bval, doc_id, simhash) bucketed by the FULL (band, bval)
-    * join key, so [[graft.text.Curation.admitSimhash]]'s store-side
-    * Hamming join reads buckets in place — the corpus-sized banded
-    * signature stream never re-shuffles per admitted batch (same
-    * co-partition-spec rule as the MinHash store; AdmitSpec pins plan
-    * and results). The exact side needs no parity writer: [[writeStore]]
-    * buckets whatever columns its frame carries, simhash stores
-    * included. */
-  def writeBandedSimhashStore(store: DataFrame, table: String, path: String,
-      bands: Int, bitsPerBand: Int, buckets: Int = 64): Unit =
-    simhashBanded(store.filter(col("simhash").isNotNull), "doc_id", "simhash",
-        bands, bitsPerBand)
-      .select(col("band"), col("bval"), col("doc_id"), col("simhash"))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "band", "bval").saveAsTable(table)
-
-  /** [[writeStorePartitioned]] at SimHash parity: (doc_id, xkey, simhash)
-    * under the same `__batch_id` partition + xkey bucket scheme, for the
-    * streaming admission loop's idempotent per-batch landings. */
-  def writeSimhashStorePartitioned(store: DataFrame, table: String, path: String,
-      buckets: Int = 64): Unit =
-    store.select(col("doc_id"), col("xkey"), col("simhash"))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "xkey").sortBy("xkey")
-      .saveAsTable(table)
-
-  /** [[overwriteStoreBatch]] at SimHash parity. */
-  def overwriteSimhashStoreBatch(sigs: DataFrame, table: String, batchId: Long): Unit = {
-    val view = s"graft_simhash_store_batch_$batchId"
-    sigs.select("doc_id", "xkey", "simhash").createOrReplaceTempView(view)
-    try sigs.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT doc_id, xkey, simhash FROM $view")
-    finally sigs.sparkSession.catalog.dropTempView(view)
-  }
-
-  /** [[writeBandedStorePartitioned]] at SimHash parity. */
-  def writeBandedSimhashStorePartitioned(store: DataFrame, table: String,
-      path: String, bands: Int, bitsPerBand: Int, buckets: Int = 64): Unit =
-    simhashBanded(store.filter(col("simhash").isNotNull), "doc_id", "simhash",
-        bands, bitsPerBand)
-      .select(col("band"), col("bval"), col("doc_id"), col("simhash"))
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("__batch_id")
-      .bucketBy(buckets, "band", "bval").saveAsTable(table)
-
-  /** [[overwriteBandedStoreBatch]] at SimHash parity. */
-  def overwriteBandedSimhashStoreBatch(sigs: DataFrame, table: String,
-      batchId: Long, bands: Int, bitsPerBand: Int): Unit = {
-    val view = s"graft_banded_simhash_store_batch_$batchId"
-    simhashBanded(sigs.filter(col("simhash").isNotNull), "doc_id", "simhash",
-        bands, bitsPerBand)
-      .select(col("band"), col("bval"), col("doc_id"), col("simhash"))
-      .createOrReplaceTempView(view)
-    try sigs.sparkSession.sql(
-      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $batchId) " +
-        s"SELECT band, bval, doc_id, simhash FROM $view")
-    finally sigs.sparkSession.catalog.dropTempView(view)
-  }
+  /** [[bandStore]] at SimHash parity: the store's [[simhashBanded]] rows
+    * (band, bval, doc_id, simhash) bucketed by the FULL (band, bval)
+    * join key, for [[graft.text.Curation.admitSimhash]]'s `storeBands`. */
+  def simhashBandStore(bands: Int, bitsPerBand: Int): StoreKind =
+    StoreKind("simhash_bands", df => simhashBanded(
+        df.filter(col("simhash").isNotNull), "doc_id", "simhash", bands, bitsPerBand)
+      .select(col("band"), col("bval"), col("doc_id"), col("simhash")),
+      Seq("band", "bval"), sorted = false)
 
   /** Cross-corpus LSH candidates: FRESH docs sharing any band key with a
     * STORE doc. Output (fresh_id, store_id), distinct. Both inputs are

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** All of a document's k-gram rolling hashes in one codegen pass.
   *
-  * The HOF form ([[graft.text.TextOps.ngramHashesRef]] —
+  * The HOF form (the tests' `ReferenceForms.ngramHashesRef` —
   * `transform(sequence(...), i => hash64(concat_ws(" ", slice(toks, i+1, k))))`)
   * pays the interpreted-lambda tax per OUTPUT GRAM, and each evaluation
   * re-slices k tokens and materializes a fresh gram string before

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /** A document's duplicate-n-gram repetition counts in one codegen pass:
   * `[n_2grams, top_2gram_count, n_3grams, dup_3gram_count]`.
   *
-  * The keyed-agg form ([[graft.text.TextOps.repetitionColumnsRef]] —
+  * The keyed-agg form (the tests' `ReferenceForms.repetitionColumnsRef` —
   * tag-union the hashed 2-/3-gram streams, explode, two corpus-wide
   * keyed aggs) shuffles one row per corpus gram. But every count is
   * per-document: gram occurrence counts never cross docs. So the whole

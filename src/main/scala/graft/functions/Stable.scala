@@ -22,14 +22,10 @@ object Stable {
   /** 60-bit non-negative hash of a string column: first 15 hex digits of md5.
     * DuckDB equivalent: `CAST(('0x'||substr(md5(x),1,15)) AS BIGINT)`.
     * Runs as the native codegen expression [[Hash64Expr]] (digest bytes →
-    * long, no hex-string round trip); [[hash64Composed]] keeps the
-    * built-in-composed form the DuckDB contract is defined by. */
+    * long, no hex-string round trip); the tests'
+    * `ReferenceForms.hash64Composed` keeps the built-in-composed form the
+    * DuckDB contract is defined by. */
   def hash64(c: Column): Column = Hash64Expr.hash64(c.cast("string"))
-
-  /** The built-in composition `conv(substring(md5(x),1,15),16,10)` —
-    * the reference definition [[Hash64Expr]] must match bit-for-bit. */
-  def hash64Composed(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("bigint")
 
   /** Seeded hash of one or more key columns. Separator \u0001 cannot occur
     * in the numeric/key columns this is used on, so the combination is

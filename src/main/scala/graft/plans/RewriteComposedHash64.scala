@@ -12,7 +12,7 @@ import graft.functions.Hash64Expr
   *   `CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT)`
   *
   * (the cross-engine contract form every oracle reproduces, see
-  * [[graft.functions.Stable.hash64Composed]]) — and replace it with the
+  * the tests' `ReferenceForms.hash64Composed`) — and replace it with the
   * native codegen [[Hash64Expr]], which computes the same 60-bit value
   * straight from the digest bytes with no hex-string round trip
   * (md5 → hex string → substring → base-16 parse → decimal string →

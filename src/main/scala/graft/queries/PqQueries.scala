@@ -170,7 +170,7 @@ object PqQueries {
           rerankCorpus = Some(emb), broadcastProbe = true)))
     }),
 
-    // The GROWING compressed index ([[Ann.writePqIndexPartitioned]] +
+    // The GROWING compressed index ([[Ann.writePqIndex]] `growing` +
     // [[Ann.appendPqBatch]]): quantizers train on the SEED corpus only
     // (4/5 of the vectors), a later batch (the remaining 1/5) encodes
     // against the frozen quantizers and lands as its own partition, and
@@ -187,8 +187,8 @@ object PqQueries {
       val tag = f"${dir.hashCode & 0x7fffffff}%08x"
       val table = s"graft_q233_index_$tag"
       val path = s"${System.getProperty("java.io.tmpdir")}/$table"
-      Ann.writePqIndexPartitioned(seedCorpus, table, path, "vec_id",
-        "embedding", seed = 42, nCentroids = 16, m = 4, ksub = 16, iters = 1)
+      Ann.writePqIndex(seedCorpus, table, path, "vec_id", "embedding",
+        seed = 42, nCentroids = 16, m = 4, ksub = 16, iters = 1, growing = true)
       val (_, cents, cbs) = Ann.readPqIndex(s, table, path)
       Ann.appendPqBatch(batch, table, cents, cbs, batchId = 0,
         "vec_id", "embedding")

@@ -80,8 +80,4 @@ object Tables {
         case _ => df
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Register every table as a temp view so `spark.sql` works on the dir. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -7,6 +7,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.ann.Ann
+import graft.dedup.Dedup
+import graft.sources.{Store, StoreKind}
+import graft.text.Curation
+
 /** Structured Streaming surface (SURVEY.md §2.6 streaming rows + the
   * ServerDataStream/start_server analog, reference: fuel/streams.py:186-256,
   * fuel/server.py:84-131).
@@ -134,146 +139,125 @@ object Streaming {
     * fuel/converters/base.py:50-104, with the reload happening per
     * micro-batch).
     *
-    * `storeTable` is a [[graft.dedup.Dedup.writeStorePartitioned]] table —
-    * bootstrap it from the existing corpus's signatureStore (or an empty
-    * frame for a from-scratch corpus). Reading through the catalog keeps
-    * the xkey bucket spec, so the exact-cross anti-join's store side
-    * never re-shuffles, however many batches have accumulated
-    * (StreamingSpec pins the plan after two). Pass `bandedTable`
-    * (a [[graft.dedup.Dedup.writeBandedStorePartitioned]] table) to give
-    * the NEAR join the same treatment — without it the fused path
+    * `storeTable` is a growing [[graft.dedup.Dedup.exactStore]]
+    * [[graft.sources.Store]] — bootstrap it from the existing corpus's
+    * signatureStore (or an empty frame for a from-scratch corpus).
+    * Reading through the catalog keeps the xkey bucket spec, so the
+    * exact-cross anti-join's store side never re-shuffles, however many
+    * batches have accumulated (StreamingSpec pins the plan after two).
+    * Pass `bandedTable` (a growing [[graft.dedup.Dedup.bandStore]]) to
+    * give the NEAR join the same treatment — without it the fused path
     * re-bands the store's signature stream each batch, which at corpus
-    * scale dwarfs the batch itself. foreachBatch is the right tool, not
-    * a stream-stream join: admission needs the store AS OF the batch
-    * boundary (a self-feeding loop no watermark can express), and each
-    * batch re-reads the table so the previous batch's landing is visible.
-    *
-    * Replay semantics: foreachBatch is at-least-once, so every sink here
-    * is keyed by `batchId` and OVERWRITES — the corpus write uses
-    * per-batch dynamic-partition overwrite, the store writes INSERT
-    * OVERWRITE their batch's own partition — making the whole batch
-    * idempotent: a crash between writes replays into the same
-    * partitions instead of re-appending (the r6 corruption hazard). The
-    * per-batch persists inside `admit` are batch-scoped, so the loop
-    * clears the session cache after each batch — run admission as its
-    * own job, not inside a session whose caches you need. */
+    * scale dwarfs the batch itself. The loop itself is
+    * [[admissionLoop]]'s. */
   def admitStream(docs: DataFrame, storeTable: String, corpusPath: String,
       checkpoint: String, bandedTable: Option[String] = None,
       bands: Int = 4, rowsPerBand: Int = 2): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = graft.dedup.Dedup.readStore(spark, storeTable)
-        // localCheckpoint (eager), not persist: INSERT OVERWRITE refuses a
-        // target its SELECT's lineage also reads, and the admitted frame's
-        // lineage reads the store table. Checkpointing truncates the plan
-        // to the materialized batch-sized RDD, which both store landings
-        // then reference. (Executor-local: a lost executor fails the
-        // batch — foreachBatch replays it, and every sink here overwrites.)
-        val admitted = graft.text.Curation.admit(
-          batch.withColumn("ts", graft.text.TextOps.tokens(col("text"))),
-          store, bands = bands, rowsPerBand = rowsPerBand,
-          storeBands = bandedTable.map(spark.table)).localCheckpoint(true)
-        admitted.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(corpusPath)
-        val sigs = graft.dedup.Dedup
-          .signatureStore(admitted, "doc_id", "text", "ts").persist()
-        graft.dedup.Dedup.overwriteStoreBatch(sigs, storeTable, batchId)
-        bandedTable.foreach(t => graft.dedup.Dedup
-          .overwriteBandedStoreBatch(sigs, t, batchId, bands, rowsPerBand))
-        sigs.unpersist()
-        spark.catalog.clearCache()
-        ()
-      }
-      .start()
+    admissionLoop(docs, storeTable, corpusPath, checkpoint,
+      Dedup.exactStore(), bandedTable.map(_ -> Dedup.bandStore(bands, rowsPerBand)),
+      admit = (batch, store, storeBands) => Curation.admit(withTokens(batch),
+        store, bands = bands, rowsPerBand = rowsPerBand, storeBands = storeBands),
+      signatures = Dedup.signatureStore(_, "doc_id", "text", "ts"))
 
   /** [[admitStream]] at SimHash parity — the streaming admission loop for
     * a corpus that dedups by Hamming distance: each micro-batch admits
     * via [[graft.text.Curation.admitSimhash]] against the simhash store
     * as of the batch boundary, lands the admitted docs and their
-    * (xkey, simhash) signatures idempotently (same batchId-keyed
-    * overwrite discipline), and grows the store for batch N+1.
-    * `storeTable` is a [[graft.dedup.Dedup.writeSimhashStorePartitioned]]
-    * table; pass `bandedTable`
-    * ([[graft.dedup.Dedup.writeBandedSimhashStorePartitioned]]) to keep
-    * the Hamming near join's store side exchange-free per batch. */
+    * (xkey, simhash) signatures idempotently, and grows the store for
+    * batch N+1. `storeTable` is a growing
+    * [[graft.dedup.Dedup.exactStore]]`("simhash")` store; pass
+    * `bandedTable` (a growing [[graft.dedup.Dedup.simhashBandStore]]) to
+    * keep the Hamming near join's store side exchange-free per batch. */
   def admitSimhashStream(docs: DataFrame, storeTable: String, corpusPath: String,
       checkpoint: String, bandedTable: Option[String] = None,
       bands: Int = 4, bitsPerBand: Int = 15, maxHamming: Int = 3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = graft.dedup.Dedup.readStore(spark, storeTable)
-        // localCheckpoint for admitStream's reason: INSERT OVERWRITE
-        // refuses a target its SELECT's lineage also reads
-        val admitted = graft.text.Curation.admitSimhash(
-          batch.withColumn("ts", graft.text.TextOps.tokens(col("text"))),
-          store, bands = bands, bitsPerBand = bitsPerBand, maxHamming = maxHamming,
-          storeBands = bandedTable.map(spark.table)).localCheckpoint(true)
-        admitted.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(corpusPath)
-        val sigs = graft.dedup.Dedup
-          .simhashStore(admitted, "doc_id", "text", "ts").persist()
-        graft.dedup.Dedup.overwriteSimhashStoreBatch(sigs, storeTable, batchId)
-        bandedTable.foreach(t => graft.dedup.Dedup
-          .overwriteBandedSimhashStoreBatch(sigs, t, batchId, bands, bitsPerBand))
-        sigs.unpersist()
-        spark.catalog.clearCache()
-        ()
-      }
-      .start()
+    admissionLoop(docs, storeTable, corpusPath, checkpoint,
+      Dedup.exactStore("simhash"),
+      bandedTable.map(_ -> Dedup.simhashBandStore(bands, bitsPerBand)),
+      admit = (batch, store, storeBands) => Curation.admitSimhash(withTokens(batch),
+        store, bands = bands, bitsPerBand = bitsPerBand, maxHamming = maxHamming,
+        storeBands = storeBands),
+      signatures = Dedup.simhashStore(_, "doc_id", "text", "ts"))
 
   /** [[admitStream]] at EMBEDDING parity — incremental admission for a
     * vector corpus that dedups by cosine: each micro-batch admits via
     * [[graft.text.Curation.admitEmbedding]] against the embedding store
     * as of the batch boundary, lands the admitted vectors and their
-    * (xkey, qvec) rows idempotently (the same batchId-keyed overwrite
-    * discipline), and grows the store for batch N+1. `storeTable` is an
-    * [[graft.ann.Ann.writeEmbeddingStorePartitioned]] table; pass
-    * `bucketTable` ([[graft.ann.Ann.writeBucketedEmbeddingStorePartitioned]])
-    * to keep the cosine near join's store side exchange-free per
-    * batch. */
+    * (xkey, qvec) rows idempotently, and grows the store for batch N+1.
+    * `storeTable` is a growing
+    * [[graft.dedup.Dedup.exactStore]]`("qvec", "vec_id")` store; pass
+    * `bucketTable` (a growing [[graft.ann.Ann.signBucketStore]]) to keep
+    * the cosine near join's store side exchange-free per batch. */
   def admitEmbeddingStream(vecs: DataFrame, storeTable: String,
       corpusPath: String, checkpoint: String,
       bucketTable: Option[String] = None, threshold: Double = 0.99,
       seed: Long = 42, tables: Int = 6, planes: Int = 8,
       dim: Int = 64): StreamingQuery =
-    vecs.writeStream
+    admissionLoop(vecs, storeTable, corpusPath, checkpoint,
+      Dedup.exactStore("qvec", "vec_id"),
+      bucketTable.map(_ -> Ann.signBucketStore(seed, tables, planes, dim)),
+      admit = (batch, store, storeBuckets) => Curation.admitEmbedding(batch,
+        store, threshold = threshold, seed = seed, tables = tables,
+        planes = planes, dim = dim, storeBuckets = storeBuckets),
+      signatures = Ann.embeddingStore(_, "vec_id", "embedding"))
+
+  private def withTokens(batch: DataFrame): DataFrame =
+    batch.withColumn("ts", graft.text.TextOps.tokens(col("text")))
+
+  /** The one foreachBatch body of the three admission streams. Each
+    * micro-batch is admitted against the exact store (and the near-tier
+    * table, when given) as of the batch boundary; the admitted rows land
+    * under `corpusPath`, and their `signatures` land in both stores via
+    * [[graft.sources.Store.land]], so batch N+1 sees everything admitted
+    * through batch N. foreachBatch is the right tool, not a
+    * stream-stream join: admission needs the store AS OF the batch
+    * boundary (a self-feeding loop no watermark can express), and each
+    * batch re-reads the table so the previous batch's landing is visible.
+    *
+    * Replay semantics: foreachBatch is at-least-once, so every sink here
+    * is keyed by `batchId` and OVERWRITES — the corpus write uses
+    * per-batch dynamic-partition overwrite, the store landings overwrite
+    * their batch's own partition — making the whole batch idempotent: a
+    * crash between writes replays into the same partitions instead of
+    * re-appending (the r6 corruption hazard). The per-batch persists
+    * inside the admit calls are batch-scoped, so the loop clears the
+    * session cache after each batch — run admission as its own job, not
+    * inside a session whose caches you need. */
+  private def admissionLoop(rows: DataFrame, storeTable: String,
+      corpusPath: String, checkpoint: String, exact: StoreKind,
+      near: Option[(String, StoreKind)],
+      admit: (DataFrame, DataFrame, Option[DataFrame]) => DataFrame,
+      signatures: DataFrame => DataFrame): StreamingQuery =
+    rows.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val store = graft.dedup.Dedup.readStore(spark, storeTable)
-        // localCheckpoint for admitStream's reason: INSERT OVERWRITE
-        // refuses a target its SELECT's lineage also reads
-        val admitted = graft.text.Curation.admitEmbedding(
-          batch, store, threshold = threshold, seed = seed, tables = tables,
-          planes = planes, dim = dim,
-          storeBuckets = bucketTable.map(spark.table)).localCheckpoint(true)
-        admitted.withColumn("__batch_id", lit(batchId))
+        // localCheckpoint (eager), not persist: a store landing refuses a
+        // target its SELECT's lineage also reads, and the admitted frame's
+        // lineage reads the store tables. Checkpointing truncates the plan
+        // to the materialized batch-sized RDD, which both landings then
+        // reference. (Executor-local: a lost executor fails the batch —
+        // foreachBatch replays it, and every sink here overwrites.)
+        val admitted = admit(batch, Store.read(spark, storeTable),
+          near.map { case (t, _) => Store.read(spark, t) }).localCheckpoint(true)
+        admitted.withColumn(Store.BatchCol, lit(batchId))
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id").parquet(corpusPath)
-        val sigs = graft.ann.Ann
-          .embeddingStore(admitted, "vec_id", "embedding").persist()
-        graft.ann.Ann.overwriteEmbeddingStoreBatch(sigs, storeTable, batchId)
-        bucketTable.foreach(t => graft.ann.Ann
-          .overwriteBucketedEmbeddingStoreBatch(sigs, t, batchId, seed,
-            tables, planes, dim))
+          .partitionBy(Store.BatchCol).parquet(corpusPath)
+        val sigs = signatures(admitted).persist()
+        Store.land(sigs, exact, storeTable, batchId)
+        near.foreach { case (t, kind) => Store.land(sigs, kind, t, batchId) }
         sigs.unpersist()
         spark.catalog.clearCache()
         ()
       }
       .start()
 
-  /** Maintain a [[graft.ann.Ann.writeIvfIndexPartitioned]] ANN index
+  /** Maintain a growing [[graft.ann.Ann.writeIvfIndex]] ANN index
     * from a vector stream: each micro-batch is assigned by the FROZEN
     * quantizer (`centroids` — retraining per batch would re-bucket the
     * stored lists, a rebuild, not maintenance) and lands via
-    * [[graft.ann.Ann.appendIvfBatch]]'s INSERT OVERWRITE of its own
-    * batch partition, so foreachBatch's at-least-once replay overwrites
+    * [[graft.ann.Ann.appendIvfBatch]]'s overwrite of its own batch
+    * partition, so foreachBatch's at-least-once replay overwrites
     * instead of duplicating — the admission streams' idempotency
     * discipline applied to the ANN index artifact. */
   def ivfIndexStream(vecs: DataFrame, indexTable: String,

@@ -681,7 +681,7 @@ object Curation {
     val withinRight = Dedup.banded(sigs, "doc_id", "sig", bands, rowsPerBand)
       .select(col("band"), col("bkey"), col("doc_id").as("rid"), col("sig").as("rsig"))
     val nearDrop = (storeBands match {
-      // Pre-banded bucketed store ([[graft.dedup.Dedup.writeBandedStore]]):
+      // Pre-banded bucketed store ([[graft.dedup.Dedup.bandStore]]):
       // join it SEPARATELY so its bucket partitioning survives (a union
       // with the batch bands would erase it) — the corpus-sized banded
       // stream then never re-shuffles per batch. Same drops as the fused
@@ -722,7 +722,7 @@ object Curation {
     * path, whose signatures are 8 longs). Recall is exactly 1 for
     * `maxHamming <= bands - 1` (pigeonhole, enforced); occupancy guard
     * on the batch side, [[admit]]'s exact-within-first rationale. Pass
-    * `storeBands` (a [[graft.dedup.Dedup.writeBandedSimhashStore]] table)
+    * `storeBands` (a [[graft.dedup.Dedup.simhashBandStore]] table)
     * to read the store's banded rows bucketed in place — [[admit]]'s
     * exchange-free store side, Hamming edition. */
   def admitSimhash(fresh: DataFrame, store: DataFrame, bits: Int = 60,
@@ -748,7 +748,7 @@ object Curation {
       .select(col("band"), col("bval"), col("doc_id").as("rid"),
         col("simhash").as("rsim"))
     val nearDrop = (storeBands match {
-      // Pre-banded bucketed store ([[graft.dedup.Dedup.writeBandedSimhashStore]]):
+      // Pre-banded bucketed store ([[graft.dedup.Dedup.simhashBandStore]]):
       // joined SEPARATELY so its (band, bval) bucket partitioning
       // survives — [[admit]]'s split-join rationale, Hamming edition.
       case Some(sb) =>
@@ -795,7 +795,7 @@ object Curation {
     * the same enforced ordering rationale as [[admit]]. Sizing:
     * `planes` grows with log2(corpus) ([[graft.ann.Ann.nearDupPairs]]'
     * rule); raise `tables` to buy back per-plane recall. Pass
-    * `storeBuckets` (a [[graft.ann.Ann.writeBucketedEmbeddingStore]]
+    * `storeBuckets` (a [[graft.ann.Ann.signBucketStore]]
     * table) to read the store's sign-bucket rows bucketed in place —
     * [[admit]]'s exchange-free store side, cosine edition. */
   def admitEmbedding(fresh: DataFrame, store: DataFrame,
@@ -830,7 +830,7 @@ object Curation {
     val withinRight = rows(w2)
       .select(col("tbl"), col("bucket"), col(idCol).as("rid"), col("qvec").as("rq"))
     val nearDrop = (storeBuckets match {
-      // Pre-bucketed store table ([[graft.ann.Ann.writeBucketedEmbeddingStore]]):
+      // Pre-bucketed store table ([[graft.ann.Ann.signBucketStore]]):
       // join it SEPARATELY so its bucket partitioning survives (the
       // [[admit]] rationale) — the store's sign-bucket stream then never
       // re-shuffles per batch.

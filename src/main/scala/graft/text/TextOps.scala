@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stable
+import graft.sources.{Store, StoreKind}
 
 /** Text path: tokenizer + dictionary lookup (reference: fuel/datasets/
   * text.py:7-144 — TextFile with BOS/EOS/UNK), plus the text-analysis
@@ -185,8 +186,8 @@ object TextOps {
     * [[graft.functions.RepetitionStatsExpr]]: grams digested
     * incrementally, counted in a per-doc map, four aggregates from one
     * scan of it. NO shuffle at all. (The previous keyed-agg form —
-    * retained as [[repetitionColumnsRef]], bit-equality pinned in
-    * TextDedupSpec — shuffled one row per corpus gram through two keyed
+    * retained in the tests as `ReferenceForms.repetitionColumnsRef`,
+    * bit-equality pinned in TextDedupSpec — shuffled one row per corpus gram through two keyed
     * aggs; its first version ran two explode+agg pairs and a join.) Gram
     * hashes are the same md5 form the oracle applies, so counts agree
     * bit-for-bit even in the astronomically-unlikely collision. The
@@ -204,29 +205,6 @@ object TextOps {
           element_at(col("__rs"), 1).cast("double")).as("top_2gram_frac"),
         (element_at(col("__rs"), 4).cast("double") /
           element_at(col("__rs"), 3).cast("double")).as("dup_3gram_frac"))
-
-  /** The keyed-agg reference form of [[repetitionColumns]]: tag-union the
-    * hashed 2-/3-gram streams in one projection, explode once, two
-    * map-side-combined keyed aggs. The definition the q65 oracle is
-    * written against; the native projection must match it bit-for-bit. */
-  def repetitionColumnsRef(df: DataFrame, idCol: String, toksCol: String): DataFrame = {
-    def tagged(n: Int): Column =
-      transform(ngramOccurrences(col(toksCol), n),
-        g => struct(lit(n).as("n"), Stable.hash64(g).as("g")))
-    df.select(col(idCol), explode(concat(tagged(2), tagged(3))).as("__ng"))
-      .select(col(idCol), col("__ng.n").as("__n"), col("__ng.g").as("__g"))
-      .groupBy(col(idCol), col("__n"), col("__g")).agg(count(lit(1)).as("__c"))
-      .groupBy(idCol).agg(
-        sum(when(col("__n") === 2, col("__c")).otherwise(0L)).as("__t2"),
-        max(when(col("__n") === 2, col("__c"))).as("__top2"),
-        sum(when(col("__n") === 3, col("__c")).otherwise(0L)).as("__t3"),
-        sum(when(col("__n") === 3 && col("__c") > 1, col("__c")).otherwise(0L)).as("__dup3"))
-      .filter(col("__t3") > 0)
-      .select(col(idCol),
-        col("__t2").cast("bigint").as("n_2grams"),
-        (col("__top2").cast("double") / col("__t2").cast("double")).as("top_2gram_frac"),
-        (col("__dup3").cast("double") / col("__t3").cast("double")).as("dup_3gram_frac"))
-  }
 
   /** TF-IDF top terms per document (keyword extraction / sparse document
     * representation): score_q = tf · idf_bits with idf QUANTIZED to
@@ -454,25 +432,25 @@ object TextOps {
   }
 
   /** Materialized inverted index for repeated [[bm25TopK]] retrieval —
-    * the [[graft.dedup.Dedup.writeStore]] move applied to search: a
-    * served corpus should not re-tokenize and re-explode per query
-    * batch. Two tables: `table` = the posting list (term, doc_id, dl,
-    * tf), BUCKETED AND SORTED BY term so a term-probe reads its buckets
-    * in place (bucket pruning on the literal isin — no shuffle, no full
-    * scan), and `table_stats` = the one-row (n, t) corpus scalars
-    * frozen AT INDEX TIME (scores stay comparable across query batches;
-    * rebuild to refresh). df is NOT stored: it re-aggregates at query
-    * time from the probed postings alone — a probe-sized agg, always
-    * consistent with the postings. */
+    * the signature store's [[graft.sources.Store]] move applied to
+    * search: a served corpus should not re-tokenize and re-explode per
+    * query batch. Two tables: `table` = the posting list (term, doc_id,
+    * dl, tf), BUCKETED AND SORTED BY term so a term-probe reads its
+    * buckets in place (bucket pruning on the literal isin — no shuffle,
+    * no full scan), and `table_stats` = the one-row (n, t) corpus
+    * scalars frozen AT INDEX TIME (scores stay comparable across query
+    * batches; rebuild to refresh). df is NOT stored: it re-aggregates at
+    * query time from the probed postings alone — a probe-sized agg,
+    * always consistent with the postings. */
   def writePostings(docs: DataFrame, idCol: String, toksCol: String,
       table: String, path: String, buckets: Int = 64): Unit = {
-    docs.select(col(idCol).as("doc_id"),
-        size(col(toksCol)).cast("bigint").as("dl"),
-        explode(col(toksCol)).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .select("term", "doc_id", "dl", "tf")
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "term").sortBy("term").saveAsTable(table)
+    val postings = StoreKind("postings", _.select(col(idCol).as("doc_id"),
+          size(col(toksCol)).cast("bigint").as("dl"),
+          explode(col(toksCol)).as("term"))
+        .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
+        .select("term", "doc_id", "dl", "tf"),
+      Seq("term"), sorted = true)
+    Store.write(docs, postings, table, path, buckets)
     docs.agg(
         coalesce(sum(when(size(col(toksCol)) > 0, 1L).otherwise(0L)), lit(0L)).as("__n"),
         coalesce(sum(size(col(toksCol)).cast("bigint")), lit(0L)).as("__t"))
@@ -531,7 +509,7 @@ object TextOps {
       table: String, queries: Seq[(Long, Seq[String])], k: Int = 10,
       scale: Long = 10000L): DataFrame = {
     val (qterms, termSet) = bm25Queries(spark, queries)
-    val tf = spark.table(table)
+    val tf = Store.read(spark, table)
       .filter(col("term").isin(termSet: _*))
       .select(col("doc_id"), col("dl").as("__dl"), col("term"), col("tf"))
     bm25Score(tf, spark.table(s"${table}_stats"), qterms, "doc_id", k, scale)
@@ -566,7 +544,7 @@ object TextOps {
         val d = ts.distinct
         d.map(tm => (qid, tm, d.size.toLong)) }
       .toDF("query_id", "term", "__nt")
-    spark.table(table)
+    Store.read(spark, table)
       .filter(col("term").isin(queries.flatMap(_._2).distinct: _*))
       .join(broadcast(qterms), Seq("term"))
       .groupBy("query_id", "doc_id")
@@ -1612,17 +1590,11 @@ object TextOps {
     * token bytes extracted once per row, grams digested incrementally
     * (the HOF form re-sliced and re-concatenated k tokens per gram,
     * interpreted — ~10 µs/gram on ExactSubstr's corpus-token-sized
-    * stream); [[ngramHashesRef]] keeps the built-in-composed reference
-    * definition the expression must match bit-for-bit (StableSpec). */
+    * stream); the tests' `ReferenceForms.ngramHashesRef` keeps the
+    * built-in-composed reference definition the expression must match
+    * bit-for-bit (StableSpec). */
   def ngramHashes(toks: Column, k: Int): Column =
     graft.functions.NgramHashesExpr.ngramHashes(toks, k)
-
-  /** The built-in-composed reference form of [[ngramHashes]] — the
-    * definition the DuckDB oracle contract is written against. */
-  def ngramHashesRef(toks: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), greatest(size(toks) - k, lit(0))),
-      i => Stable.hash64(concat_ws(" ", slice(toks, i + 1, lit(k)))))
 
   /** Winnowing minima: min hash of each window of `w` consecutive gram
     * hashes, deduped and sorted. `grams` MUST be a materialized column

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.sources.Store
 import graft.text.{Curation, TextOps}
 
 /** Incremental admission ([[Curation.admit]]): a new batch dedups against
@@ -91,8 +92,8 @@ class AdmitSpec extends SparkSpec {
   test("pre-bucketed embedding store: same admitted set, no store-side exchange in the cosine join") {
     val dir = java.nio.file.Files.createTempDirectory("graft_emb_store").toString
     // bucket count == session shuffle partitions (see StoreSpec)
-    graft.ann.Ann.writeBucketedEmbeddingStore(embStore, "admit_emb_bucket_spec",
-      s"$dir/buckets", dim = 8, buckets = 32)
+    Store.write(embStore, graft.ann.Ann.signBucketStore(dim = 8),
+      "admit_emb_bucket_spec", s"$dir/buckets", buckets = 32)
     val sb = spark.table("admit_emb_bucket_spec")
 
     val fused = Curation.admitEmbedding(embFresh, embStore,
@@ -162,8 +163,8 @@ class AdmitSpec extends SparkSpec {
   test("pre-banded bucketed store: same admitted set, no store-side exchange in the near join") {
     val dir = java.nio.file.Files.createTempDirectory("graft_banded_store").toString
     // bucket count == session shuffle partitions (see StoreSpec)
-    Dedup.writeBandedStore(store, "admit_banded_spec", s"$dir/bands",
-      bands = 4, rowsPerBand = 2, buckets = 32)
+    Store.write(store, Dedup.bandStore(bands = 4, rowsPerBand = 2),
+      "admit_banded_spec", s"$dir/bands", buckets = 32)
     val sb = spark.table("admit_banded_spec")
 
     val fused = Curation.admit(fresh, store)
@@ -245,8 +246,8 @@ class AdmitSpec extends SparkSpec {
 
   test("pre-banded simhash store: same admitted set, no store-side exchange in the Hamming join") {
     val dir = java.nio.file.Files.createTempDirectory("graft_banded_simstore").toString
-    Dedup.writeBandedSimhashStore(simStore, "simadmit_banded_spec", s"$dir/bands",
-      bands = 4, bitsPerBand = 15, buckets = 32)
+    Store.write(simStore, Dedup.simhashBandStore(bands = 4, bitsPerBand = 15),
+      "simadmit_banded_spec", s"$dir/bands", buckets = 32)
     val sb = spark.table("simadmit_banded_spec")
     try {
       val fused = Curation.admitSimhash(simFresh, simStore)

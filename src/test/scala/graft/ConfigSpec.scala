@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * config_parser re-expressed): conf > env > rc file > default, per key.
   * The env layer is process-global and so exercised implicitly (an unset
   * `GRAFT_*` var falls through); the other three layers are pinned here.
-  * Also pins that every entry point shares [[Graft.session]]'s config.
+  * Also pins that every entry point shares [[Graft.session]]'s config,
+  * and that [[graft.sources.Store]] alone lays out persisted stores.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -38,14 +39,27 @@ class ConfigSpec extends SparkSpec {
     // Tolerates whitespace and newlines around the dot, so a wrapped
     // builder chain is caught too.
     val builder = """SparkSession\s*\.\s*builder""".r
-    val sources = Seq("src/main", "src/test").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    val builders = sources
+    val builders = scalaFiles("src/main", "src/test")
       .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
       .map(_.toString).toSet
     assert(builders == Set("src/main/scala/graft/Graft.scala"))
+  }
+
+  test("graft.sources.Store is the only place in src/main that lays out a store") {
+    // Bucket specs and partition landings live in Store.write/Store.land;
+    // a module that spells either out itself has forked the layout.
+    val sources = scalaFiles("src/main")
+    for (needle <- Seq(".bucketBy(", "INSERT OVERWRITE")) {
+      val found = sources.filter(p => Files.readString(p).contains(needle))
+        .map(_.toString).toSet
+      assert(found == Set("src/main/scala/graft/sources/Store.scala"),
+        s"'$needle' outside Store.scala: $found")
+    }
+  }
+
+  private def scalaFiles(roots: String*) = roots.flatMap { root =>
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
   }
 }

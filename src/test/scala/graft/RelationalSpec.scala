@@ -34,8 +34,9 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("every oracle key names an implemented query, across ALL query groups") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet),
-      s"oracles without queries: ${SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)}")
+    val (oracles, queries) = (SparkEntry.oracleSql.keySet, SparkEntry.queries.keySet)
+    assert(oracles == queries, s"oracles without queries: ${oracles.diff(queries)}; " +
+      s"queries without oracles: ${queries.diff(oracles)}")
   }
 
   test("catalog default_stream folds the registered transformer chain") {

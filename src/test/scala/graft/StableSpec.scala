@@ -18,7 +18,7 @@ class StableSpec extends SparkSpec {
     val df = inputs.toDF("s")
     val mismatch = df.select(
         Stable.hash64(col("s")).as("native"),
-        Stable.hash64Composed(col("s")).as("composed"))
+        ReferenceForms.hash64Composed(col("s")).as("composed"))
       .filter(col("native") =!= col("composed"))
     assert(mismatch.count() == 0)
     // interpreted (non-codegen) eval path agrees too
@@ -46,7 +46,7 @@ class StableSpec extends SparkSpec {
     for (k <- Seq(1, 2, 3, 20)) {
       val bad = edge.select(
           TextOps.ngramHashes(col("ts"), k).as("native"),
-          TextOps.ngramHashesRef(col("ts"), k).as("ref"))
+          ReferenceForms.ngramHashesRef(col("ts"), k).as("ref"))
         .filter(!(col("native") <=> col("ref")))
       assert(bad.count() == 0, s"edge mismatch at k=$k")
     }
@@ -54,7 +54,7 @@ class StableSpec extends SparkSpec {
       .select(TextOps.tokens(col("text")).as("ts"))
     val bad = corpus.select(
         TextOps.ngramHashes(col("ts"), 20).as("native"),
-        TextOps.ngramHashesRef(col("ts"), 20).as("ref"))
+        ReferenceForms.ngramHashesRef(col("ts"), 20).as("ref"))
       .filter(!(col("native") <=> col("ref")))
     assert(bad.count() == 0, "corpus mismatch at k=20")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
 import graft.dedup.Dedup
+import graft.sources.Store
 import graft.text.TextOps
 
 /** The bucketed signature store: admission's exact-cross anti-join must
@@ -34,12 +35,12 @@ class StoreSpec extends SparkSpec {
 
   test("writeStore: exact-cross anti-join has no store-side exchange, batch side only") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
-    Dedup.writeStore(
-      Dedup.signatureStore(mkDocs(50, "st"), "doc_id", "text", "ts"),
+    Store.write(
+      Dedup.signatureStore(mkDocs(50, "st"), "doc_id", "text", "ts"), Dedup.exactStore(),
       // bucket count == session shuffle partitions: a mismatched count
       // makes EnsureRequirements re-shuffle the bucketed side to 32 anyway
       "admit_store_spec", s"$dir/store", buckets = 32)
-    val store = Dedup.readStore(spark, "admit_store_spec")
+    val store = Store.read(spark, "admit_store_spec")
     assert(store.count() == 50)
 
     val batch = Dedup.signatureStore(mkDocs(20, "ba"), "doc_id", "text", "ts")
@@ -223,8 +224,8 @@ class StoreSpec extends SparkSpec {
         (pmod(col("id") * (d + 3), lit(11)) - lit(5)).cast("float")): _*).as("vec"))
     val seedHalf = emb.filter(col("vec_id") < 100)
     val batch = emb.filter(col("vec_id") >= 100)
-    Ann.writeIvfIndexPartitioned(seedHalf, "ivf_index_part_spec", s"$dir/index",
-      "vec_id", "vec", seed = 42, nCentroids = 8, buckets = 32)
+    Ann.writeIvfIndex(seedHalf, "ivf_index_part_spec", s"$dir/index",
+      "vec_id", "vec", seed = 42, nCentroids = 8, buckets = 32, growing = true)
     val (_, cents) = Ann.readIvfIndex(spark, "ivf_index_part_spec", s"$dir/index")
     assert(spark.table("ivf_index_part_spec").count() == 100)
 
@@ -302,7 +303,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("readStore keeps the bucket spec a bare path read would lose") {
-    val store = Dedup.readStore(spark, "admit_store_spec")
+    val store = Store.read(spark, "admit_store_spec")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

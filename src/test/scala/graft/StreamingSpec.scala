@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.sources.{SplitSource, Synthetic}
+import graft.dedup.Dedup
+import graft.sources.{SplitSource, Store, Synthetic}
 import graft.streaming.Streaming
 
 /** Streaming surface + split source + synthetic generators. */
@@ -42,10 +43,10 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, txt("e"))).toDF("doc_id", "text")
         .withColumn("ts", graft.text.TextOps.tokens(col("text"))),
       "doc_id", "text", "ts")
-    graft.dedup.Dedup.writeStorePartitioned(boot,
-      "graft_admit_stream_store", s"$tmp/store", buckets = 32)
-    graft.dedup.Dedup.writeBandedStorePartitioned(boot,
-      "graft_admit_stream_banded", s"$tmp/banded", 4, 2, buckets = 32)
+    Store.write(boot, Dedup.exactStore(),
+      "graft_admit_stream_store", s"$tmp/store", buckets = 32, growing = true)
+    Store.write(boot, Dedup.bandStore(4, 2),
+      "graft_admit_stream_banded", s"$tmp/banded", buckets = 32, growing = true)
 
     val input = MemoryStream[(Long, String)]
     val q = Streaming.admitStream(
@@ -106,10 +107,10 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, txt("e"))).toDF("doc_id", "text")
         .withColumn("ts", graft.text.TextOps.tokens(col("text"))),
       "doc_id", "text", "ts")
-    graft.dedup.Dedup.writeSimhashStorePartitioned(boot,
-      "graft_simadmit_store", s"$tmp/store", buckets = 32)
-    graft.dedup.Dedup.writeBandedSimhashStorePartitioned(boot,
-      "graft_simadmit_banded", s"$tmp/banded", 4, 15, buckets = 32)
+    Store.write(boot, Dedup.exactStore("simhash"),
+      "graft_simadmit_store", s"$tmp/store", buckets = 32, growing = true)
+    Store.write(boot, Dedup.simhashBandStore(4, 15),
+      "graft_simadmit_banded", s"$tmp/banded", buckets = 32, growing = true)
 
     val input = MemoryStream[(Long, String)]
     val q = Streaming.admitSimhashStream(
@@ -153,10 +154,10 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_embadmit_bucket")
     val boot = graft.ann.Ann.embeddingStore(
       Seq(1L -> vec(0 -> 1.0)).toDF("vec_id", "embedding"), "vec_id", "embedding")
-    graft.ann.Ann.writeEmbeddingStorePartitioned(boot,
-      "graft_embadmit_store", s"$tmp/store", buckets = 32)
-    graft.ann.Ann.writeBucketedEmbeddingStorePartitioned(boot,
-      "graft_embadmit_bucket", s"$tmp/bucket", dim = 8, buckets = 32)
+    Store.write(boot, Dedup.exactStore("qvec", "vec_id"),
+      "graft_embadmit_store", s"$tmp/store", buckets = 32, growing = true)
+    Store.write(boot, graft.ann.Ann.signBucketStore(dim = 8),
+      "graft_embadmit_bucket", s"$tmp/bucket", buckets = 32, growing = true)
 
     val input = MemoryStream[(Long, Seq[Float])]
     val q = Streaming.admitEmbeddingStream(
@@ -200,8 +201,9 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_ivf_stream_idx")
     val seed = Seq(1L -> vec(0 -> 1.0), 2L -> vec(1 -> 1.0), 3L -> vec(2 -> 1.0))
       .toDF("vec_id", "embedding")
-    graft.ann.Ann.writeIvfIndexPartitioned(seed, "graft_ivf_stream_idx",
-      s"$tmp/index", "vec_id", "embedding", nCentroids = 3, buckets = 8)
+    graft.ann.Ann.writeIvfIndex(seed, "graft_ivf_stream_idx",
+      s"$tmp/index", "vec_id", "embedding", nCentroids = 3, buckets = 8,
+      growing = true)
     val (_, cents) = graft.ann.Ann.readIvfIndex(spark, "graft_ivf_stream_idx",
       s"$tmp/index")
     val input = MemoryStream[(Long, Seq[Float])]
@@ -228,26 +230,46 @@ class StreamingSpec extends SparkSpec {
 
   test("store batch landing is idempotent: a replayed batch overwrites its own partition") {
     def txt(tag: String) = (1 to 40).map(i => s"$tag$i").mkString(" ")
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+      .withColumn("ts", graft.text.TextOps.tokens(col("text")))
+    def minhash(rows: (Long, String)*) =
+      Dedup.signatureStore(docs(rows: _*), "doc_id", "text", "ts")
+    def simhash(rows: (Long, String)*) =
+      Dedup.simhashStore(docs(rows: _*), "doc_id", "text", "ts")
+    // unit vectors along distinct axes: distinct qvecs, 8 dims
+    def vecs(rows: (Long, Int)*) = graft.ann.Ann.embeddingStore(
+      rows.map { case (id, axis) => id -> Seq.tabulate(8)(d => if (d == axis) 1f else 0f) }
+        .toDF("vec_id", "embedding"), "vec_id", "embedding")
+    // Every growing store kind: (kind, seed rows, batch rows, stored rows
+    // per input row). The near tiers store one row per band / hash table.
+    val kinds = Seq(
+      (Dedup.exactStore(), minhash(1L -> txt("e")),
+        minhash(10L -> txt("a"), 11L -> txt("b")), 1),
+      (Dedup.bandStore(4, 2), minhash(1L -> txt("e")),
+        minhash(10L -> txt("a"), 11L -> txt("b")), 4),
+      (Dedup.simhashBandStore(4, 15), simhash(1L -> txt("e")),
+        simhash(10L -> txt("a"), 11L -> txt("b")), 4),
+      (graft.ann.Ann.signBucketStore(tables = 6, dim = 8), vecs(1L -> 0),
+        vecs(10L -> 3, 11L -> 4), 6))
     val tmp = java.nio.file.Files.createTempDirectory("graft_store_replay")
-    spark.sql("DROP TABLE IF EXISTS graft_replay_store")
-    val boot = graft.dedup.Dedup.signatureStore(
-      Seq((1L, txt("e"))).toDF("doc_id", "text")
-        .withColumn("ts", graft.text.TextOps.tokens(col("text"))),
-      "doc_id", "text", "ts")
-    graft.dedup.Dedup.writeStorePartitioned(boot,
-      "graft_replay_store", s"$tmp/store", buckets = 32)
-    val sigs = graft.dedup.Dedup.signatureStore(
-      Seq((10L, txt("a")), (11L, txt("b"))).toDF("doc_id", "text")
-        .withColumn("ts", graft.text.TextOps.tokens(col("text"))),
-      "doc_id", "text", "ts")
-    graft.dedup.Dedup.overwriteStoreBatch(sigs, "graft_replay_store", 7L)
-    val once = spark.table("graft_replay_store").count()
-    // the at-least-once replay: same batch id lands again
-    graft.dedup.Dedup.overwriteStoreBatch(sigs, "graft_replay_store", 7L)
-    assert(spark.table("graft_replay_store").count() == once,
-      "a replayed batch must overwrite its partition, not re-append")
-    assert(once == 3)
-    spark.sql("DROP TABLE IF EXISTS graft_replay_store")
+    for ((kind, boot, sigs, perRow) <- kinds) {
+      val t = s"graft_replay_${kind.name}"
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      try {
+        Store.write(boot, kind, t, s"$tmp/${kind.name}", buckets = 32, growing = true)
+        Store.land(sigs, kind, t, 7L)
+        val once = spark.table(t).count()
+        // the at-least-once replay: same batch id lands again
+        Store.land(sigs, kind, t, 7L)
+        assert(spark.table(t).count() == once,
+          s"${kind.name}: a replayed batch must overwrite its partition, not re-append")
+        assert(once == 3 * perRow, s"${kind.name}: seed + batch rows expected, got $once")
+        // batch -1 is the seed corpus: landing there would replace it
+        val ex = intercept[IllegalArgumentException](Store.land(sigs, kind, t, -1L))
+        assert(ex.getMessage.contains("reserved"))
+        assert(spark.table(t).count() == once, s"${kind.name}: the seed partition must survive")
+      } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
   test("stream-stream interval join matches pairs within the window, drops the rest") {

@@ -621,7 +621,7 @@ class TextDedupSpec extends SparkSpec {
     assert(badSim.isEmpty, "native simhash must bit-match the canonical chain")
     // repetition stats: projection vs keyed-agg reference
     val nativeRep = TextOps.repetitionColumns(docs, "doc_id", "ts")
-    val refRep = TextOps.repetitionColumnsRef(docs, "doc_id", "ts")
+    val refRep = ReferenceForms.repetitionColumnsRef(docs, "doc_id", "ts")
       .withColumnRenamed("n_2grams", "r1").withColumnRenamed("top_2gram_frac", "r2")
       .withColumnRenamed("dup_3gram_frac", "r3")
     val badRep = nativeRep.join(refRep, Seq("doc_id"), "full_outer")
