@@ -8,23 +8,24 @@ import org.apache.spark.sql.SparkSession
   * local master. Everything scale-relevant is expressed through the plan
   * (partitioning columns, broadcast hints, AQE) rather than hard-coded
   * parallelism, so the same code runs unchanged on a 1000-executor cluster.
+  * The one sized conf, `spark.sql.shuffle.partitions`, follows README's
+  * rule (2× total cores as the AQE ceiling) on a local master and is left
+  * to the deployment everywhere else.
   */
 object Graft {
-  /** Default shuffle parallelism for local runs; on a real cluster this is
-    * overridden by AQE coalescing (`spark.sql.adaptive.coalescePartitions`). */
-  val LocalShufflePartitions = 32
-
   /** The one place a `SparkSession` is built: tests, the CLI mains and
     * the benchmark harness all share these extensions and confs. The
-    * default master is sized by `SPARK_GRAFT_CPUS` (`local[4]` if unset). */
+    * default master is sized by `SPARK_GRAFT_CPUS` (`local[4]` if unset).
+    * A local master gets 2 shuffle partitions per thread; AQE coalesces
+    * below that. */
   def session(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
+      master: String = localMaster(sys.env.get("SPARK_GRAFT_CPUS")),
       appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", LocalShufflePartitions.toString)
+      .config(shufflePartitions(master).map("spark.sql.shuffle.partitions" -> _).toMap)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -36,6 +37,26 @@ object Graft {
     configValue(spark, "floatX").foreach(setFloatX)
     spark
   }
+
+  /** `local[$cpus]`, or `local[4]` when `cpus` is unset. */
+  private[graft] def localMaster(cpus: Option[String]): String = cpus match {
+    case None => "local[4]"
+    case Some(n) =>
+      require(n.forall(_.isDigit) && n.toIntOption.exists(_ > 0),
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$n'")
+      s"local[$n]"
+  }
+
+  private val LocalMaster = """local\[(\*|\d+)(?:\s*,\s*\d+)?\]""".r
+
+  /** 2 × the threads of a local master (`local`, `local[N]`, `local[N,F]`,
+    * `local[*]`, `local[*,F]`); `None` for any other master. */
+  private[graft] def shufflePartitions(master: String): Option[Int] = (master match {
+    case "local" => Some(1)
+    case LocalMaster("*") => Some(Runtime.getRuntime.availableProcessors)
+    case LocalMaster(n) => Some(n.toInt)
+    case _ => None
+  }).map(2 * _)
 
   /** fuel's four-layer config cascade (fuel/config_parser.py:127-213:
     * in-code value > environment variable > `~/.fuelrc` YAML > default)

@@ -91,7 +91,7 @@ class AdmitSpec extends SparkSpec {
 
   test("pre-bucketed embedding store: same admitted set, no store-side exchange in the cosine join") {
     val dir = java.nio.file.Files.createTempDirectory("graft_emb_store").toString
-    // bucket count == session shuffle partitions (see StoreSpec)
+    // the batch side shuffles to the bucket count (see StoreSpec)
     Store.write(embStore, graft.ann.Ann.signBucketStore(dim = 8),
       "admit_emb_bucket_spec", s"$dir/buckets", buckets = 32)
     val sb = spark.table("admit_emb_bucket_spec")
@@ -162,7 +162,7 @@ class AdmitSpec extends SparkSpec {
 
   test("pre-banded bucketed store: same admitted set, no store-side exchange in the near join") {
     val dir = java.nio.file.Files.createTempDirectory("graft_banded_store").toString
-    // bucket count == session shuffle partitions (see StoreSpec)
+    // the batch side shuffles to the bucket count (see StoreSpec)
     Store.write(store, Dedup.bandStore(bands = 4, rowsPerBand = 2),
       "admit_banded_spec", s"$dir/bands", buckets = 32)
     val sb = spark.table("admit_banded_spec")

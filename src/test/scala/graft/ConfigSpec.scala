@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * The env layer is process-global and so exercised implicitly (an unset
   * `GRAFT_*` var falls through); the other three layers are pinned here.
   * Also pins that every entry point shares [[Graft.session]]'s config,
-  * and that [[graft.sources.Store]] alone lays out persisted stores.
+  * how it sizes shuffles from the master's threads, and that
+  * [[graft.sources.Store]] alone lays out persisted stores.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -33,6 +34,25 @@ class ConfigSpec extends SparkSpec {
     // a missing rc file is an empty layer, not an error (fuel skips a
     // missing ~/.fuelrc identically)
     assert(Graft.loadRc(Paths.get("/definitely/not/graftrc")).isEmpty)
+  }
+
+  test("local masters get 2 shuffle partitions per thread; SPARK_GRAFT_CPUS must be a positive integer") {
+    val cores = Runtime.getRuntime.availableProcessors
+    for ((master, threads) <- Seq("local" -> 1, "local[3]" -> 3,
+        "local[3,2]" -> 3, "local[*]" -> cores))
+      assert(Graft.shufflePartitions(master).contains(2 * threads), master)
+    // any other master keeps the deployment's own setting
+    assert(Graft.shufflePartitions("spark://host:7077").isEmpty)
+    // the shared session (local[4]) and a session forked from it
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+    assert(spark.newSession().conf.get("spark.sql.shuffle.partitions") == "8")
+
+    assert(Graft.localMaster(None) == "local[4]")
+    assert(Graft.localMaster(Some("3")) == "local[3]")
+    for (bad <- Seq("", "0", "four", "-2", "*")) {
+      val e = intercept[IllegalArgumentException](Graft.localMaster(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
   }
 
   test("Graft.session is the only place a SparkSession is built") {

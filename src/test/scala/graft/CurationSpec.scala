@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
 
 import graft.schemes.SequentialScheme
@@ -39,6 +42,47 @@ class CurationSpec extends SparkSpec {
     // the stage-4 boundary IS the composed chain's survivor set
     val survivors = Curation.dedupe(Curation.gate(Curation.scrub(raw)))
     assert(nDocs(3) == survivors.count())
+  }
+
+  test("curatePublished: no stage that reads a shuffle runs more than 2 × defaultParallelism tasks") {
+    // A load-independent counter on the curation chain: a few hundred docs
+    // fit in a handful of tasks, so an un-coalesced shuffle wider than the
+    // session's 2 partitions per thread is pure per-task overhead.
+    val raw = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val sc = spark.sparkContext
+    val tag = "graft.spec.curation"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val tagged = mutable.Set[Int]()
+    val shuffleReadTasks = mutable.ArrayBuffer[(Int, Int)]()
+    def tagOf(p: java.util.Properties) = Option(p).map(_.getProperty(tag)).orNull
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tagOf(e.properties) == "chain") tagged += e.stageInfo.stageId
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val s = e.stageInfo
+        if (tagged(s.stageId) && s.parentIds.nonEmpty) shuffleReadTasks += s.stageId -> s.numTasks
+      }
+      // events reach a listener in order: the marker job starting means
+      // every chain stage's completion has been seen
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tagOf(e.properties) == "flush") flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "chain")
+      Curation.curatePublished(raw, raw.filter(col("doc_id") % 41 === 0))
+        .write.format("noop").mode("overwrite").save()
+      sc.setLocalProperty(tag, "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    val cap = 2 * sc.defaultParallelism
+    assert(shuffleReadTasks.nonEmpty, "the chain must read at least one shuffle")
+    val wide = shuffleReadTasks.filter(_._2 > cap)
+    assert(wide.isEmpty, s"(stage, tasks) over $cap tasks")
   }
 
   test("published order: line scrub precedes normalization, repetition gate drops the spam") {

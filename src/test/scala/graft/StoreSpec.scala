@@ -37,8 +37,8 @@ class StoreSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
     Store.write(
       Dedup.signatureStore(mkDocs(50, "st"), "doc_id", "text", "ts"), Dedup.exactStore(),
-      // bucket count == session shuffle partitions: a mismatched count
-      // makes EnsureRequirements re-shuffle the bucketed side to 32 anyway
+      // any bucket count is read in place: EnsureRequirements keeps the
+      // un-shuffled bucketed side and shuffles the batch side to match it
       "admit_store_spec", s"$dir/store", buckets = 32)
     val store = Store.read(spark, "admit_store_spec")
     assert(store.count() == 50)
