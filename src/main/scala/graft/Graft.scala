@@ -16,8 +16,9 @@ object Graft {
   /** The one place a `SparkSession` is built: tests, the CLI mains and
     * the benchmark harness all share these extensions and confs. The
     * default master is sized by `SPARK_GRAFT_CPUS` (`local[4]` if unset).
-    * A local master gets 2 shuffle partitions per thread; AQE coalesces
-    * below that. */
+    * A local master gets 2 shuffle partitions per core it runs on (its
+    * threads, capped at the available processors); AQE coalesces below
+    * that. */
   def session(
       master: String = localMaster(sys.env.get("SPARK_GRAFT_CPUS")),
       appName: String = "graft"): SparkSession = {
@@ -38,25 +39,31 @@ object Graft {
     spark
   }
 
-  /** `local[$cpus]`, or `local[4]` when `cpus` is unset. */
+  /** `local[$cpus]`, or `local[4]` when `cpus` is unset; `*` gives
+    * `local[*]`. */
   private[graft] def localMaster(cpus: Option[String]): String = cpus match {
     case None => "local[4]"
     case Some(n) =>
-      require(n.forall(_.isDigit) && n.toIntOption.exists(_ > 0),
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$n'")
+      require(n == "*" || n.forall(_.isDigit) && n.toIntOption.exists(_ > 0),
+        s"SPARK_GRAFT_CPUS must be a positive integer or *, got '$n'")
       s"local[$n]"
   }
 
   private val LocalMaster = """local\[(\*|\d+)(?:\s*,\s*\d+)?\]""".r
 
-  /** 2 × the threads of a local master (`local`, `local[N]`, `local[N,F]`,
-    * `local[*]`, `local[*,F]`); `None` for any other master. */
-  private[graft] def shufflePartitions(master: String): Option[Int] = (master match {
-    case "local" => Some(1)
-    case LocalMaster("*") => Some(Runtime.getRuntime.availableProcessors)
-    case LocalMaster(n) => Some(n.toInt)
-    case _ => None
-  }).map(2 * _)
+  /** 2 × the cores a local master runs on: its threads (`local`,
+    * `local[N]`, `local[N,F]`, `local[*]`, `local[*,F]`), capped at the
+    * JVM's available processors, since threads beyond them only add
+    * per-task overhead. `None` for any other master. */
+  private[graft] def shufflePartitions(master: String): Option[Int] = {
+    val cores = Runtime.getRuntime.availableProcessors
+    (master match {
+      case "local" => Some(1)
+      case LocalMaster("*") => Some(cores)
+      case LocalMaster(n) => Some(math.min(n.toInt, cores))
+      case _ => None
+    }).map(2 * _)
+  }
 
   /** fuel's four-layer config cascade (fuel/config_parser.py:127-213:
     * in-code value > environment variable > `~/.fuelrc` YAML > default)

@@ -36,20 +36,23 @@ class ConfigSpec extends SparkSpec {
     assert(Graft.loadRc(Paths.get("/definitely/not/graftrc")).isEmpty)
   }
 
-  test("local masters get 2 shuffle partitions per thread; SPARK_GRAFT_CPUS must be a positive integer") {
+  test("local masters get 2 shuffle partitions per core; SPARK_GRAFT_CPUS must be a positive integer or *") {
     val cores = Runtime.getRuntime.availableProcessors
+    // threads count up to the cores; more threads than cores add none
     for ((master, threads) <- Seq("local" -> 1, "local[3]" -> 3,
-        "local[3,2]" -> 3, "local[*]" -> cores))
-      assert(Graft.shufflePartitions(master).contains(2 * threads), master)
+        "local[3,2]" -> 3, "local[*]" -> cores, s"local[${8 * cores}]" -> cores))
+      assert(Graft.shufflePartitions(master).contains(2 * math.min(threads, cores)), master)
     // any other master keeps the deployment's own setting
     assert(Graft.shufflePartitions("spark://host:7077").isEmpty)
     // the shared session (local[4]) and a session forked from it
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
-    assert(spark.newSession().conf.get("spark.sql.shuffle.partitions") == "8")
+    val shared = (2 * math.min(4, cores)).toString
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shared)
+    assert(spark.newSession().conf.get("spark.sql.shuffle.partitions") == shared)
 
     assert(Graft.localMaster(None) == "local[4]")
     assert(Graft.localMaster(Some("3")) == "local[3]")
-    for (bad <- Seq("", "0", "four", "-2", "*")) {
+    assert(Graft.localMaster(Some("*")) == "local[*]")
+    for (bad <- Seq("", "0", "four", "-2", "**")) {
       val e = intercept[IllegalArgumentException](Graft.localMaster(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
     }

@@ -47,7 +47,7 @@ class CurationSpec extends SparkSpec {
   test("curatePublished: no stage that reads a shuffle runs more than 2 × defaultParallelism tasks") {
     // A load-independent counter on the curation chain: a few hundred docs
     // fit in a handful of tasks, so an un-coalesced shuffle wider than the
-    // session's 2 partitions per thread is pure per-task overhead.
+    // session's 2 partitions per core is pure per-task overhead.
     val raw = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val sc = spark.sparkContext
     val tag = "graft.spec.curation"
