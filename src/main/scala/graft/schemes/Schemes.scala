@@ -72,7 +72,8 @@ object Schemes {
 
   /** Contiguous position column in the total order `order` — distributed
     * sort + InternalRow-level zipWithIndex (see [[Indexed]] for why not a
-    * window, and why not `df.rdd`). */
+    * window, and why not `df.rdd`). The result declares its `__pos` order,
+    * so the epoch iterator's `orderBy(__pos)` costs no second sort. */
   private def posIn(df: DataFrame, order: Seq[Column], posName: String): DataFrame =
     Indexed.withIdx(df, order, posName)
 

@@ -25,6 +25,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * 2-3x the cost of the whole sort on wide tables. Here the index column
   * is appended with a reused JoinedRow, no copies; downstream operators
   * follow SparkPlan's copy-if-buffering contract.
+  *
+  * `zipWithIndex` numbers partition 0 first, so the index ascends within
+  * and across partitions whatever the data order, and the frame declares
+  * that ([[Bridge.indexOrderedDataFrame]]): `orderBy(__idx)` — or of a
+  * column aliasing it, like a scheme's `__pos` — is free, with no exchange
+  * and no sort (pinned in PlanSpec, the declaration checked in
+  * PropertiesSpec).
   */
 object Indexed {
   val Idx = "__idx"
@@ -39,7 +46,7 @@ object Indexed {
         joined(r, idxRow): org.apache.spark.sql.catalyst.InternalRow
       }
     }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, schema)
+    Bridge.indexOrderedDataFrame(df.sparkSession, rdd, schema, idxName)
   }
 
   /** Append a contiguous 0-based `__idx` in the total order of `order`.

@@ -3,6 +3,8 @@ package graft.stream
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
+import scala.jdk.CollectionConverters._
+
 import graft.schemes.{ConcatenatedScheme, IterationScheme, Schemes,
   SequentialExampleScheme, ShuffledExampleScheme, ShuffledScheme}
 import graft.sources.Indexed
@@ -70,42 +72,28 @@ final class DataStream(val source: DataFrame, val scheme: IterationScheme,
   def resumeFrom(cursor: Long, epoch: Int = 0): Iterator[Seq[Row]] =
     epochFrom(resumedPlan(cursor, epoch))
 
+  /** Pulls `df` in `__pos` order and groups consecutive rows that share a
+    * key into batches: `__batch_id` for batch schemes, `__pos` itself for
+    * example schemes (batches of one). Batch ids are monotone in `__pos`
+    * for every scheme, so `__pos` alone orders the batches too — and
+    * where the compiled frame declares its zipped `__pos` order
+    * ([[Indexed]]) the planner drops this sort and its exchange. */
   private def epochFrom(df: DataFrame): Iterator[Seq[Row]] = {
-    val hasBatch = df.columns.contains(Schemes.BatchId)
-    if (!hasBatch) {
-      val it = df.orderBy(col(Schemes.Pos))
-        .selectExpr((Schemes.Pos +: dataCols): _*)
-        .toLocalIterator()
-      new Iterator[Seq[Row]] {
-        def hasNext = it.hasNext
-        def next() = Seq(stripFirst(it.next()))
-      }
-    } else {
-      val it = df.orderBy(col(Schemes.BatchId), col(Schemes.Pos))
-        .selectExpr((Schemes.BatchId +: dataCols): _*)
-        .toLocalIterator()
-      // Group consecutive rows sharing a batch id.
-      new Iterator[Seq[Row]] {
-        private var pending: Row = if (it.hasNext) it.next() else null
-        def hasNext: Boolean = pending != null
-        def next(): Seq[Row] = {
-          val bid = pending.getLong(0)
-          val buf = scala.collection.mutable.ArrayBuffer[Row](stripFirst(pending))
-          pending = null
-          var done = false
-          while (!done && it.hasNext) {
-            val r = it.next()
-            if (r.getLong(0) == bid) buf += stripFirst(r)
-            else { pending = r; done = true }
-          }
-          buf.toSeq
-        }
+    val key = if (df.columns.contains(Schemes.BatchId)) Schemes.BatchId else Schemes.Pos
+    val rows = df.orderBy(col(Schemes.Pos))
+      .selectExpr((key +: dataCols): _*)
+      .toLocalIterator().asScala.buffered
+    new Iterator[Seq[Row]] {
+      def hasNext: Boolean = rows.hasNext
+      def next(): Seq[Row] = {
+        val k = rows.head.getLong(0)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+        while (rows.hasNext && rows.head.getLong(0) == k)
+          buf += Row.fromSeq(rows.next().toSeq.drop(1))
+        buf.toSeq
       }
     }
   }
-
-  private def stripFirst(r: Row): Row =
-    Row.fromSeq(r.toSeq.drop(1))
 
   /** Endless epochs (fuel/streams.py:113-119 `iterate_epochs`). With
     * `reshuffle` (default, fuel-faithful) shuffled schemes visit in a

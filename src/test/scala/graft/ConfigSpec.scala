@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * The env layer is process-global and so exercised implicitly (an unset
   * `GRAFT_*` var falls through); the other three layers are pinned here.
   * Also pins that every entry point shares [[Graft.session]]'s config,
-  * how it sizes shuffles from the master's threads, and that
-  * [[graft.sources.Store]] alone lays out persisted stores.
+  * how it sizes shuffles from the master's threads, that
+  * [[graft.sources.Store]] alone lays out persisted stores, and that
+  * only the Spark bridge declares a plan's order over an RDD.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -78,6 +79,17 @@ class ConfigSpec extends SparkSpec {
       assert(found == Set("src/main/scala/graft/sources/Store.scala"),
         s"'$needle' outside Store.scala: $found")
     }
+  }
+
+  test("Bridge is the only place in src/main that declares a plan's order over an RDD") {
+    // A LogicalRDD declares an ordering and partitioning the planner
+    // trusts without checking; Bridge.indexOrderedDataFrame makes that
+    // declaration only for zipped indices, which hold it by construction.
+    val found = scalaFiles("src/main")
+      .filter(p => Files.readString(p).contains("LogicalRDD("))
+      .map(_.toString).toSet
+    assert(found == Set("src/main/scala/org/apache/spark/sql/graft/Bridge.scala"),
+      s"'LogicalRDD(' outside Bridge.scala: $found")
   }
 
   private def scalaFiles(roots: String*) = roots.flatMap { root =>

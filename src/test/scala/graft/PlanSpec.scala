@@ -445,6 +445,34 @@ class PlanSpec extends SparkSpec {
         s"per-iteration corpus shuffle; re-justify and re-pin:\n${diffs.mkString("\n")}")
   }
 
+  test("epoch order: orderBy(__pos) over a zipped position plans no exchange and no sort") {
+    // Indexed declares the zipWithIndex order, so the epoch iterator's
+    // orderBy(__pos) is free wherever __pos is a zipped index (Shuffled,
+    // ShuffledExample) or an alias of one (Sequential, Constant).
+    // sortedIndices re-ranks __pos in a window and Concatenated unions
+    // shifted segments: neither carries the order, and the planner must
+    // still sort them.
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.col
+    import graft.schemes._
+    val supplier = graft.sources.Tables.load(spark, sf, "supplier")
+    def nodes(scheme: IterationScheme) = allNodes(
+      graft.stream.DataStream(supplier, scheme, Seq(col("s_suppkey")))
+        .compiledForEpoch(1).orderBy(col(Schemes.Pos)).queryExecution.executedPlan)
+    for (scheme <- Seq(ShuffledScheme(3, seed = 1), ShuffledExampleScheme(seed = 1),
+        SequentialScheme(3), ConstantScheme(4, numExamples = Some(7)))) {
+      val ns = nodes(scheme)
+      assert(ns.count(_.isInstanceOf[ShuffleExchangeLike]) == 0 &&
+        ns.count(_.isInstanceOf[SortExec]) == 0,
+        s"$scheme: the declared __pos order was not used:\n${ns.head}")
+    }
+    for (scheme <- Seq(ShuffledScheme(3, seed = 1, sortedIndices = true),
+        ConcatenatedScheme(Seq(SequentialScheme(4), ShuffledScheme(4, seed = 5)))))
+      assert(nodes(scheme).exists { case s: SortExec => s.global; case _ => false },
+        s"$scheme carries no __pos order, so it must plan a global sort")
+  }
+
   test("global audit: no unpartitioned Window, no CartesianProduct, in any query") {
     import org.apache.spark.sql.execution.joins.CartesianProductExec
     import org.apache.spark.sql.execution.window.WindowExec

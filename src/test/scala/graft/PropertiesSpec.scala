@@ -275,6 +275,51 @@ class PropertiesSpec extends SparkSpec {
       "withStorageIdx must be deterministic for an unchanged source layout")
   }
 
+  test("law: the zipped index's declared order holds — partition ranges ascend, never overlap") {
+    // Indexed declares [__idx ASC] and range partitioning on __idx, and the
+    // planner drops sorts on that word alone. Check it against the data:
+    // within each partition __idx ascends, and each non-empty partition's
+    // [min, max] lies wholly below the next one's. Shuffles stay
+    // uncoalesced so the sorted inputs keep several partitions.
+    import graft.sources.{Indexed, Tables}
+    import graft.schemes.ShuffledScheme
+    import graft.stream.DataStream
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val base = Tables.load(spark, sf, "customer").select("c_custkey", "c_name")
+    def assertDeclared(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val idx = df.select(col(Indexed.Idx)).rdd
+      val ranges = idx.mapPartitionsWithIndex { (p, rows) =>
+        val xs = rows.map(_.getLong(0)).toVector
+        if (xs.isEmpty) Iterator.empty
+        else Iterator((p, xs.head, xs.last, xs == xs.sorted))
+      }.collect().sortBy(_._1)
+      assert(ranges.forall(_._4), s"$what: __idx descends inside a partition")
+      assert(ranges.sliding(2).forall {
+        case Array(a, b) => a._3 < b._2
+        case _ => true
+      }, s"$what: partition ranges overlap or descend: ${ranges.mkString(", ")}")
+      df.queryExecution.executedPlan.outputPartitioning match {
+        case RangePartitioning(_, n) => assert(n == idx.getNumPartitions, what)
+        case other => fail(s"$what: declares $other, not a range partitioning")
+      }
+    }
+    val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      for (parts <- Seq(1, 2, 32))
+        assertDeclared(Indexed.withIdx(base.repartition(parts), Seq(col("c_custkey"))),
+          s"withIdx over $parts partitions")
+      assertDeclared(Indexed.withStorageIdx(base.repartition(32)), "withStorageIdx")
+    } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+    // An input with no partitions at all declares nothing and still builds,
+    // plans and iterates an (empty) epoch.
+    val empty = Indexed.withIdx(base.filter(lit(false)), Seq(col("c_custkey")))
+    assert(empty.rdd.getNumPartitions == 0)
+    assert(!empty.queryExecution.executedPlan.outputPartitioning.isInstanceOf[RangePartitioning])
+    val stream = DataStream(empty, ShuffledScheme(3, seed = 1), Seq(col("c_custkey")))
+    assert(stream.epochIterator(1).isEmpty)
+  }
+
   test("law: packDocSpans tiles every sequence exactly — no gaps, no overlaps, full cover") {
     // For any (doc sizes, seqLen): within each seq_id the spans, sorted by
     // start, must begin at 0, abut exactly, and sum to seqLen (the final

@@ -175,4 +175,38 @@ class SchemesSpec extends SparkSpec {
     val tail = stream.resumeFrom(6).toSeq
     assert(tail.map(_.map(_.toSeq)) == batches.drop(2).map(_.map(_.toSeq)))
   }
+
+  test("epochIterator and resumeFrom equal a driver-side sort of the compiled epoch") {
+    // The iterator orders by __pos alone and lets the planner skip the sort
+    // where the frame declares it; the reference collects the compiled
+    // frame and sorts by (__batch_id, __pos) on the driver, grouping by
+    // batch id (batch schemes) or one row per batch (example schemes).
+    def reference(df: org.apache.spark.sql.DataFrame, cursor: Long): Seq[Seq[Seq[Any]]] = {
+      val hasBatch = df.columns.contains(Schemes.BatchId)
+      val data = df.columns.filterNot(Set(Indexed.Idx, Schemes.Pos, Schemes.BatchId)).toSeq
+      def key(r: Row) = r.getAs[Long](if (hasBatch) Schemes.BatchId else Schemes.Pos)
+      df.collect().toSeq
+        .filter(_.getAs[Long](Schemes.Pos) >= cursor)
+        .sortBy(r => (key(r), r.getAs[Long](Schemes.Pos)))
+        .groupBy(key).toSeq.sortBy(_._1)
+        .map(_._2.map(r => data.map(c => r.getAs[Any](c))))
+    }
+    // Uncoalesced shuffles keep the zipped frames multi-partition, so the
+    // declared order is exercised across partition boundaries.
+    val customers = Tables.load(spark, sf, "customer").select("c_custkey", "c_name")
+    val schemes = Seq(SequentialScheme(3), SequentialExampleScheme(), ShuffledScheme(3, seed = 1),
+      ShuffledScheme(3, seed = 1, sortedIndices = true), ShuffledExampleScheme(seed = 2),
+      ConstantScheme(4, numExamples = Some(70)),
+      ConcatenatedScheme(Seq(ConstantScheme(4, numExamples = Some(70)), ShuffledScheme(4, seed = 5))))
+    val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try for (scheme <- schemes; epoch <- Seq(0, 1)) {
+      val stream = DataStream(customers, scheme, Seq(col("c_custkey")))
+      assert(stream.epochIterator(epoch).map(_.map(_.toSeq)).toSeq ==
+        reference(stream.compiledForEpoch(epoch), 0), s"$scheme epoch $epoch")
+      // cursor 61 is mid-batch for both batch sizes
+      assert(stream.resumeFrom(61, epoch).map(_.map(_.toSeq)).toSeq ==
+        reference(stream.compiledForEpoch(epoch), 61), s"$scheme resumed at 61, epoch $epoch")
+    } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+  }
 }
