@@ -20,7 +20,7 @@ object Pipeline {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SequentialScheme: consecutive batches in key order. Columns are
     // pruned BEFORE indexing: Catalyst cannot push pruning through the
-    // zipWithIndex RDD boundary, so an unpruned withIdx would sort and
+    // index scan's RDD boundary, so an unpruned withIdx would sort and
     // carry the full 16-column row to index 2 of them.
     "q13_scheme_sequential" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").select("l_orderkey", "l_linenumber")

@@ -71,7 +71,7 @@ object Schemes {
   val BatchId = "__batch_id"
 
   /** Contiguous position column in the total order `order` — distributed
-    * sort + InternalRow-level zipWithIndex (see [[Indexed]] for why not a
+    * sort + InternalRow-level index scan (see [[Indexed]] for why not a
     * window, and why not `df.rdd`). The result declares its `__pos` order,
     * so the epoch iterator's `orderBy(__pos)` costs no second sort. */
   private def posIn(df: DataFrame, order: Seq[Column], posName: String): DataFrame =

@@ -26,8 +26,8 @@ object Ilsvrc {
     * SORTED distinct wnids — deterministic and devkit-free; the
     * distinct-wnid collect is class-count-bounded (ILSVRC: 1,000 —
     * driver-scale, like a codebook). idx: [[Indexed.withIdx]] over
-    * (targets, filename) — a distributed range-partitioned sort +
-    * zipWithIndex, NOT a single-partition window; ingest is the
+    * (targets, filename) — a distributed range-partitioned sort + index
+    * scan, NOT a single-partition window; ingest is the
     * one-time materialization where that sort amortizes (the reference
     * converter itself does a full shuffle-to-disk pass here). */
   def shapeTrain(entries: DataFrame,

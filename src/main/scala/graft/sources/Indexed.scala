@@ -2,9 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Stable, contiguous 0-based row addressing — the engine's analog of fuel's
   * IndexableDataset (reference: fuel/datasets/base.py:316-388). Every scheme
@@ -12,42 +9,23 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * builds on `__idx`.
   *
   * Scale design: a `row_number()` over an empty window forces all rows into
-  * ONE partition — a non-starter at 100 TB. Instead: distributed range-
-  * partitioned sort, then `RDD.zipWithIndex`, which computes per-partition
-  * offsets with one lightweight count job (the sort's shuffle files are
-  * reused, not recomputed) and assigns indices fully in parallel. Values
-  * are identical to `row_number() OVER (ORDER BY ...) - 1` (which is what
-  * the DuckDB oracle computes), but the plan scales.
+  * ONE partition — a non-starter at 100 TB. Instead the index is an
+  * exclusive prefix sum of the literal 1: [[PrefixSum]]'s shared two-phase
+  * scan, counting rows — a distributed range-partitioned sort, one
+  * lightweight count job over all partitions but the last (none for a
+  * single partition), then fully parallel numbering. Values are identical
+  * to `row_number() OVER (ORDER BY ...) - 1` (which is what the DuckDB
+  * oracle computes), but the plan scales.
   *
-  * The zip runs at the InternalRow layer ([[Bridge.internalRdd]]): the
-  * public `df.rdd` route deserializes every row to an external `Row`
-  * (per-field boxing) and re-encodes it through a reflective RowEncoder —
-  * 2-3x the cost of the whole sort on wide tables. Here the index column
-  * is appended with a reused JoinedRow, no copies; downstream operators
-  * follow SparkPlan's copy-if-buffering contract.
-  *
-  * `zipWithIndex` numbers partition 0 first, so the index ascends within
-  * and across partitions whatever the data order, and the frame declares
-  * that ([[Bridge.indexOrderedDataFrame]]): `orderBy(__idx)` — or of a
+  * The scan numbers partition 0 first, so the index ascends within and
+  * across partitions whatever the data order, and the frame declares that
+  * (`[__idx ASC]` and range partitioning on it): `orderBy(__idx)` — or of a
   * column aliasing it, like a scheme's `__pos` — is free, with no exchange
   * and no sort (pinned in PlanSpec, the declaration checked in
   * PropertiesSpec).
   */
 object Indexed {
   val Idx = "__idx"
-
-  private def zipIdx(df: DataFrame, idxName: String): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField(idxName, LongType, nullable = false))
-    val rdd = Bridge.internalRdd(df).zipWithIndex().mapPartitions { it =>
-      val joined = new JoinedRow
-      val idxRow = new GenericInternalRow(1)
-      it.map { case (r, i) =>
-        idxRow.setLong(0, i)
-        joined(r, idxRow): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    Bridge.indexOrderedDataFrame(df.sparkSession, rdd, schema, idxName)
-  }
 
   /** Append a contiguous 0-based `__idx` in the total order of `order`.
     * The order must be total (tie-free) for the index to be deterministic —
@@ -56,7 +34,7 @@ object Indexed {
     * the input's partitioning or row order (PropertiesSpec law — the same
     * frame shuffled 2-way and 32-way indexes identically). */
   def withIdx(df: DataFrame, order: Seq[Column], idxName: String = Idx): DataFrame =
-    zipIdx(df.sort(order: _*), idxName)
+    PrefixSum.scan(df.sort(order: _*), None, isMax = false, idxName, total = false)._1
 
   /** Index in the source's existing partition/row order (no sort) — the
     * analog of iterating an IterableDataset in storage order
@@ -67,7 +45,7 @@ object Indexed {
     * split) renumbers the same rows (asserted in PropertiesSpec). Use it
     * only directly over a source whose layout is the order you mean. */
   def withStorageIdx(df: DataFrame, idxName: String = Idx): DataFrame =
-    zipIdx(df, idxName)
+    PrefixSum.scan(df, None, isMax = false, idxName, total = false)._1
 
   /** fuel's Subset slice over an indexed stream (reference:
     * fuel/utils/__init__.py:30-397, IndexableDataset start/stop,

@@ -24,7 +24,7 @@ object TextFileSource {
     * many-similar-files corpus layout this mirrors (1B-word ships 100
     * partition files; gzip is unsplittable anyway, so the scan itself is
     * already per-file). For a single giant splittable file, number lines
-    * with [[Indexed.withStorageIdx]] (distributed zipWithIndex) instead
+    * with [[Indexed.withStorageIdx]] (the distributed index scan) instead
     * and treat the whole corpus as one sequence. */
   def lines(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val raw = spark.read.textFile(paths: _*)

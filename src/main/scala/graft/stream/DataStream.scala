@@ -76,7 +76,7 @@ final class DataStream(val source: DataFrame, val scheme: IterationScheme,
     * key into batches: `__batch_id` for batch schemes, `__pos` itself for
     * example schemes (batches of one). Batch ids are monotone in `__pos`
     * for every scheme, so `__pos` alone orders the batches too — and
-    * where the compiled frame declares its zipped `__pos` order
+    * where the compiled frame declares its indexed `__pos` order
     * ([[Indexed]]) the planner drops this sort and its exchange. */
   private def epochFrom(df: DataFrame): Iterator[Seq[Row]] = {
     val key = if (df.columns.contains(Schemes.BatchId)) Schemes.BatchId else Schemes.Pos

@@ -30,21 +30,24 @@ import graft.transform.Cache
   */
 object Curation {
 
-  /** Reuse policy for the gated frame, which feeds ~5 consumers (the
-    * exact-dedup key build, the exact-kept join, the shingle rows for
-    * signatures, and both sides of the Jaccard verify join).
-    *
-    * The trade (README "Recompute vs persist", measured at sf0.1):
-    *   - [[Recompute]] re-derives the gated frame per consumer from the
-    *     narrow, pruned corpus scan. Wins while N·(pruned scan + gate
-    *     projection) < materialize + N·read — which holds here because the
-    *     gates are cheap codegen and the scan reads 2 pruned columns.
-    *   - [[Persist]] materializes the gated frame once via the [[Cache]]
-    *     transformer and shares it. Wins once the corpus scan dominates
-    *     (wide rows, remote storage, or a gate too expensive to re-run —
-    *     at 100 TB, five corpus scans is the pipeline's biggest cost
-    *     lever, so flip this on a real cluster when the scan is the
-    *     bottleneck).
+  /** Reuse policy for a multi-consumer frame: re-derive it per consumer,
+    * or materialize it once and share it. The trade (README "Recompute vs
+    * persist", measured at sf0.1):
+    *   - [[Recompute]] wins while N·(re-derivation) < materialize + N·read.
+    *     The chain entry points ([[curatedDocs]], [[curate]],
+    *     [[materialize]], [[materializeTokens]]) always recompute the
+    *     gated frame, which feeds ~5 consumers (the exact-dedup key build,
+    *     the exact-kept join, the shingle rows for signatures, and both
+    *     sides of the Jaccard verify join): its gates are cheap codegen
+    *     over a scan of 2 pruned columns.
+    *   - [[Persist]] materializes via the [[Cache]] transformer. It wins
+    *     once the re-derivation dominates — wide rows, remote storage, or
+    *     a stage too expensive to re-run: [[curateFull]] persists its
+    *     regex scrub and [[nearDedupedGrouped]] its MinHash features.
+    * Only [[nearDeduped]] takes the policy as a parameter, because its
+    * callers differ: [[dedupe]] persists the feature frame, while
+    * [[report]] and [[reportPublished]] recompute it from a stage they
+    * have already cached.
     */
   sealed trait Reuse
   case object Recompute extends Reuse
@@ -183,16 +186,11 @@ object Curation {
     * cross-shard collisions never meet and the occupancy guard counts
     * per shard). The ordering rule still applies, per shard: exact
     * dedup first, keyed on (group, content-key). */
-  def nearDedupedGrouped(exactKept: DataFrame, groupCol: String,
-      reuse: Reuse = Persist): DataFrame = {
-    val feat0 = exactKept
+  def nearDedupedGrouped(exactKept: DataFrame, groupCol: String): DataFrame = {
+    // persisted, for the same three-consumer rationale as [[nearDeduped]]
+    val feat = Cache()(exactKept
       .select(col("doc_id"), col(groupCol), Dedup.minhashFeatures(col("ts")).as("__mf"))
-      .filter(col("__mf").isNotNull)
-    // same three-consumer persist rationale as [[nearDeduped]]
-    val feat = reuse match {
-      case Persist => Cache()(feat0)
-      case Recompute => feat0
-    }
+      .filter(col("__mf").isNotNull))
     val shSets = feat.select(col("doc_id"), col("__mf")("shingles").as("sh"))
     val sig = feat.select(col("doc_id"), col(groupCol), col("__mf")("sig").as("sig"))
     val cand = Dedup.lshCandidatesGrouped(sig, "doc_id", "sig", groupCol,
@@ -229,15 +227,9 @@ object Curation {
     survivors.join(drop, Seq("doc_id"), "left_anti")
   }
 
-  /** The curated survivor set (doc_id, text, ts), under the chosen
-    * [[Reuse]] policy for the multi-consumer gated frame. */
-  def curatedDocs(docs: DataFrame, reuse: Reuse = Recompute): DataFrame = {
-    val gated = gate(docs)
-    dedupe(reuse match {
-      case Recompute => gated
-      case Persist   => Cache()(gated)
-    })
-  }
+  /** The curated survivor set (doc_id, text, ts). The multi-consumer
+    * gated frame is [[Recompute]]d, not persisted (see [[Reuse]]). */
+  def curatedDocs(docs: DataFrame): DataFrame = dedupe(gate(docs))
 
   /** Stage 4c — benchmark decontamination ([[Dedup.contaminated]]):
     * drop survivors sharing >= `minOverlap` distinct k-shingles with the
@@ -313,19 +305,19 @@ object Curation {
     * actually packs. Output: q51's shape — (doc_id, n_tokens,
     * tok_offset, first_seq, last_seq) over the curated survivors. */
   def curateFull(docs: DataFrame, benchmark: DataFrame, seqLen: Int = 512,
-      reuse: Reuse = Persist, k: Int = 3, minOverlap: Int = 2): DataFrame = {
+      k: Int = 3, minOverlap: Int = 2): DataFrame = {
     // Two cache boundaries, each with its own reason (stage-timed at
     // sf0.1/local[32] — the full chain went 17.2 s → ~4 s):
     //
-    // 1. Under [[Persist]], the SCRUB output is what caches — not the
-    //    gated frame. The gate's filter predicate is substituted through
-    //    the projection by predicate pushdown, and filter codegen does no
+    // 1. The SCRUB output is what caches — not the gated frame. The
+    //    gate's filter predicate is substituted through the projection
+    //    by predicate pushdown, and filter codegen does no
     //    subexpression elimination, so every reference in the predicate
     //    re-evaluates the `ts` tree it was substituted with. With scrub
     //    inlined that tree is 4 regex passes + a split PER REFERENCE
     //    (measured: gate alone 3.7-7.2 s); with scrub cached, `ts` is an
     //    in-memory ATTRIBUTE and the same predicate costs 0.9 s. q51
-    //    tolerates Recompute because its `ts` is one regex-free split.
+    //    ([[curate]]) recomputes because its `ts` is one regex-free split.
     //
     // 2. The survivor frame persists UNCONDITIONALLY: it feeds three
     //    consumers (decontamination's shingle stream, its anti-join, and
@@ -333,11 +325,8 @@ object Curation {
     //    policy governs, its lineage holds every dedup SHUFFLE — one
     //    cache write of the chain's smallest frame beats re-executing
     //    its joins and aggregations twice over at any scale.
-    val scrubbed = reuse match {
-      case Persist   => Cache()(scrub(docs))
-      case Recompute => scrub(docs)
-    }
-    val survivors = Cache()(curatedDocs(scrubbed, Recompute))
+    val scrubbed = Cache()(scrub(docs))
+    val survivors = Cache()(curatedDocs(scrubbed))
     val clean = decontaminate(survivors, scrub(benchmark), k, minOverlap)
     TextOps.packSequences(
         clean.select(col("doc_id"), size(col("ts")).cast("bigint").as("n_tokens")),
@@ -610,9 +599,9 @@ object Curation {
   /** Stage 5: survivors packed into `seqLen`-token training sequences —
     * each doc's global token offset (distributed prefix sum) and the
     * first/last sequence ids it lands in. */
-  def curate(docs: DataFrame, seqLen: Int = 512, reuse: Reuse = Recompute): DataFrame =
+  def curate(docs: DataFrame, seqLen: Int = 512): DataFrame =
     TextOps.packSequences(
-        curatedDocs(docs, reuse)
+        curatedDocs(docs)
           .select(col("doc_id"), size(col("ts")).cast("bigint").as("n_tokens")),
         "doc_id", "n_tokens", seqLen)
       .select("doc_id", "n_tokens", "tok_offset", "first_seq", "last_seq")
@@ -1026,10 +1015,9 @@ object Curation {
     * iterable via [[graft.stream.DataStream]]. */
   def materialize(docs: DataFrame, path: String, seqLen: Int = 512,
       seed: Long = 7,
-      weights: Seq[(String, Double)] = Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1),
-      reuse: Reuse = Recompute): Unit =
+      weights: Seq[(String, Double)] = Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1)): Unit =
     SplitSource.write(
-      SplitSource.assignSplit(curate(docs, seqLen, reuse), col("doc_id"), seed, weights),
+      SplitSource.assignSplit(curate(docs, seqLen), col("doc_id"), seed, weights),
       path)
 
   /** [[materialize]] for the tensor-ready artifact: the curated corpus
@@ -1041,9 +1029,8 @@ object Curation {
     * through [[graft.stream.DataStream]] (CurationSpec). */
   def materializeTokens(docs: DataFrame, path: String, seqLen: Int = 512,
       topK: Int = 50, seed: Long = 7,
-      weights: Seq[(String, Double)] = Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1),
-      reuse: Reuse = Recompute): Unit =
-    writeTokenArtifact(curatedDocs(docs, reuse), path, seqLen, topK, seed, weights)
+      weights: Seq[(String, Double)] = Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1)): Unit =
+    writeTokenArtifact(curatedDocs(docs), path, seqLen, topK, seed, weights)
 
   /** The tensor-artifact tail shared by [[materializeTokens]] and
     * [[materializeMixture]]: dictionary over the given docs, tokenize,

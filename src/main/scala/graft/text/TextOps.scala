@@ -34,7 +34,7 @@ object TextOps {
 
   /** Top-`topK` dictionary by (count DESC, word ASC): (word, token_id) with
     * ids from [[FirstWordId]]. The rank runs AFTER the top-K truncation (on
-    * `topK` rows) and uses the distributed sort + zipWithIndex path from
+    * `topK` rows) and uses the distributed sort + index scan from
     * [[graft.sources.Indexed]] rather than an unpartitioned rank window —
     * no single-partition WindowExec anywhere in the dictionary build. */
   def buildDictionary(df: DataFrame, textCol: String, topK: Int): DataFrame = {
@@ -686,11 +686,9 @@ object TextOps {
           - ilog2(col("__tg") + col("__v"))).as("w"))
     // Deterministic TopK tiebreak: the term must become the aggregator's
     // LONG key, so the vocabulary needs a dense term-ASC rank — via
-    // [[graft.sources.PrefixSum]] (range-partitioned, the engine's
+    // [[graft.sources.Indexed]] (range-partitioned, the engine's
     // no-unpartitioned-window rule; the vocabulary is corpus-scale).
-    val termRank = graft.sources.PrefixSum.withPrefixSum(
-        ct.withColumn("__one", lit(1L)), Seq(col("term").asc),
-        "__one", "__trb")
+    val termRank = graft.sources.Indexed.withIdx(ct, Seq(col("term").asc), "__trb")
       .select(col("term"), (col("__trb") + 1L).as("__tr"))
     scored.join(termRank, Seq("term"))
       .groupBy(col("__g"))
@@ -780,8 +778,9 @@ object TextOps {
     * curve.
     *
     * Scale shape: one map-side-combined vocab-keyed count agg, then a
-    * TakeOrdered top-k (never a full vocab sort); the running totals
-    * over the k survivors use [[graft.sources.PrefixSum]] — the
+    * TakeOrdered top-k (never a full vocab sort); the running total and
+    * the rank over the k survivors are two [[graft.sources.PrefixSum]]
+    * scans, the second over the first's declared order (no re-sort) — the
     * engine's "no unpartitioned window" rule holds even here, where the
     * frame is only `topK` rows — and the corpus-wide occurrence total
     * rides in as a broadcast one-row frame (the [[tfidfTopTerms]]
@@ -794,10 +793,9 @@ object TextOps {
     val top = docs.select(explode(col(toksCol)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(order: _*).limit(topK)
-      .withColumn("__one", lit(1L))
-    val cum = graft.sources.PrefixSum.withPrefixSum(
+    val cum = graft.sources.Indexed.withIdx(
       graft.sources.PrefixSum.withPrefixSum(top, order, "cnt", "__cum_before"),
-      order, "__one", "__rank_before")
+      order, "__rank_before")
     cum.crossJoin(broadcast(total))
       .select((col("__rank_before") + 1L).as("rank"), col("word"), col("cnt"),
         (col("__cum_before") + col("cnt")).as("cum_cnt"),

@@ -83,13 +83,28 @@ class ConfigSpec extends SparkSpec {
 
   test("Bridge is the only place in src/main that declares a plan's order over an RDD") {
     // A LogicalRDD declares an ordering and partitioning the planner
-    // trusts without checking; Bridge.indexOrderedDataFrame makes that
-    // declaration only for zipped indices, which hold it by construction.
+    // trusts without checking; Bridge.orderedDataFrame, the one rebuild
+    // call, makes that declaration only for PrefixSum's scan outputs,
+    // which hold it by construction.
     val found = scalaFiles("src/main")
       .filter(p => Files.readString(p).contains("LogicalRDD("))
       .map(_.toString).toSet
     assert(found == Set("src/main/scala/org/apache/spark/sql/graft/Bridge.scala"),
       s"'LogicalRDD(' outside Bridge.scala: $found")
+  }
+
+  test("PrefixSum.scala holds the one ordered scan in src/main") {
+    // Indices, running sums and running maxima are one two-phase scan; a
+    // second module reading a plan's rows or numbering an RDD has forked
+    // it. `zipWithIndex()` with parentheses is the RDD call — the
+    // collections' `zipWithIndex` takes none.
+    for (needle <- Seq("Bridge.internalRdd(", "zipWithIndex()")) {
+      val found = scalaFiles("src/main")
+        .filter(p => Files.readString(p).contains(needle))
+        .map(_.toString).toSet
+      assert(found.subsetOf(Set("src/main/scala/graft/sources/PrefixSum.scala")),
+        s"'$needle' outside PrefixSum.scala: $found")
+    }
   }
 
   private def scalaFiles(roots: String*) = roots.flatMap { root =>

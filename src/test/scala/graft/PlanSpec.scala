@@ -164,6 +164,35 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("a scan over a scan in the same order shuffles once: lineage shuffle counts pinned") {
+    // A prefix scan declares the sort it ran, so a second scan in the same
+    // order over its output plans no range exchange: KS drift (__v, __v),
+    // the hazard curve (dur, dur) and vocabulary coverage (running sum,
+    // then rank). The count walks the executed RDD lineage, so the
+    // construction-time scans hidden behind the RDD bridge count too; each
+    // ShuffleDependency counts once however many paths reach it.
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    def shuffles(q: String): Int = {
+      val rdds = scala.collection.mutable.Set.empty[Int]
+      val ids = scala.collection.mutable.Set.empty[Int]
+      def walk(r: RDD[_]): Unit = if (rdds.add(r.id)) r.dependencies.foreach { d =>
+        d match {
+          case s: ShuffleDependency[_, _, _] => ids += s.shuffleId
+          case _ =>
+        }
+        walk(d.rdd)
+      }
+      walk(SparkEntry.queries(q)(spark, sf).queryExecution.toRdd)
+      ids.size
+    }
+    spark.catalog.clearCache()
+    val pinned = Map("q201_ks_drift" -> 2, "q203_retention_hazard" -> 3,
+      "q93_vocab_coverage" -> 1)
+    val got = pinned.map { case (q, _) => q -> shuffles(q) }
+    assert(got == pinned, s"lineage shuffle counts changed: $got (pinned $pinned)")
+  }
+
   test("q51 curation: the Recompute reuse policy costs a PINNED number of corpus scans") {
     // Under Curation.Recompute every consumer of the gated frame re-derives
     // it from the pruned documents scan (measured faster than Persist at

@@ -276,46 +276,60 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("law: the zipped index's declared order holds — partition ranges ascend, never overlap") {
-    // Indexed declares [__idx ASC] and range partitioning on __idx, and the
+    // Every scan output declares an order — the index [__idx ASC], a
+    // prefix scan the sort it ran — and range partitioning on it, and the
     // planner drops sorts on that word alone. Check it against the data:
-    // within each partition __idx ascends, and each non-empty partition's
-    // [min, max] lies wholly below the next one's. Shuffles stay
-    // uncoalesced so the sorted inputs keep several partitions.
-    import graft.sources.{Indexed, Tables}
+    // within each partition the order key ascends, and each non-empty
+    // partition's [min, max] lies wholly below the next one's. Shuffles
+    // stay uncoalesced so the sorted inputs keep several partitions.
+    import graft.sources.{Indexed, PrefixSum, Tables}
     import graft.schemes.ShuffledScheme
     import graft.stream.DataStream
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     val base = Tables.load(spark, sf, "customer").select("c_custkey", "c_name")
-    def assertDeclared(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
-      val idx = df.select(col(Indexed.Idx)).rdd
-      val ranges = idx.mapPartitionsWithIndex { (p, rows) =>
+      .withColumn("v", (col("c_custkey") * 7 % 11).cast("bigint"))
+    def assertDeclared(df: DataFrame, key: Column, what: String): Unit = {
+      val keys = df.select(key.cast("bigint")).rdd
+      val ranges = keys.mapPartitionsWithIndex { (p, rows) =>
         val xs = rows.map(_.getLong(0)).toVector
         if (xs.isEmpty) Iterator.empty
         else Iterator((p, xs.head, xs.last, xs == xs.sorted))
       }.collect().sortBy(_._1)
-      assert(ranges.forall(_._4), s"$what: __idx descends inside a partition")
+      assert(ranges.forall(_._4), s"$what: the order key descends inside a partition")
       assert(ranges.sliding(2).forall {
         case Array(a, b) => a._3 < b._2
         case _ => true
       }, s"$what: partition ranges overlap or descend: ${ranges.mkString(", ")}")
       df.queryExecution.executedPlan.outputPartitioning match {
-        case RangePartitioning(_, n) => assert(n == idx.getNumPartitions, what)
+        case RangePartitioning(_, n) => assert(n == keys.getNumPartitions, what)
         case other => fail(s"$what: declares $other, not a range partitioning")
       }
     }
+    // the prefix max runs in DESCENDING key order, so its ascending key
+    // is the negated one
+    val scans = Seq[(String, DataFrame => DataFrame, Column)](
+      ("withIdx", Indexed.withIdx(_, Seq(col("c_custkey"))), col(Indexed.Idx)),
+      ("withPrefixSum", PrefixSum.withPrefixSum(_, Seq(col("c_custkey")), "v"), col("c_custkey")),
+      ("withPrefixMax", PrefixSum.withPrefixMax(_, Seq(col("c_custkey").desc), "v"), -col("c_custkey")))
     val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      for (parts <- Seq(1, 2, 32))
-        assertDeclared(Indexed.withIdx(base.repartition(parts), Seq(col("c_custkey"))),
-          s"withIdx over $parts partitions")
-      assertDeclared(Indexed.withStorageIdx(base.repartition(32)), "withStorageIdx")
+      for ((name, scan, key) <- scans; parts <- Seq(1, 2, 32))
+        assertDeclared(scan(base.repartition(parts)), key, s"$name over $parts partitions")
+      assertDeclared(Indexed.withStorageIdx(base.repartition(32)), col(Indexed.Idx),
+        "withStorageIdx")
     } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
-    // An input with no partitions at all declares nothing and still builds,
-    // plans and iterates an (empty) epoch.
+    // An input with no partitions at all declares nothing and still builds
+    // and plans; the empty index still iterates an (empty) epoch.
+    for ((name, scan, _) <- scans) {
+      val empty = scan(base.filter(lit(false)))
+      assert(empty.rdd.getNumPartitions == 0, name)
+      assert(!empty.queryExecution.executedPlan.outputPartitioning
+        .isInstanceOf[RangePartitioning], name)
+      assert(empty.collect().isEmpty, name)
+    }
     val empty = Indexed.withIdx(base.filter(lit(false)), Seq(col("c_custkey")))
-    assert(empty.rdd.getNumPartitions == 0)
-    assert(!empty.queryExecution.executedPlan.outputPartitioning.isInstanceOf[RangePartitioning])
     val stream = DataStream(empty, ShuffledScheme(3, seed = 1), Seq(col("c_custkey")))
     assert(stream.epochIterator(1).isEmpty)
   }

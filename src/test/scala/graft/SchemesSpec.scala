@@ -80,13 +80,39 @@ class SchemesSpec extends SparkSpec {
       .na.fill(0, Seq("off"))
       .orderBy("s_suppkey").select("s_suppkey", "off")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val colSum = df.agg(sum("v")).head.getLong(0)
     for (parts <- Seq(1, 3, 8)) {
       val got = PrefixSum
         .withPrefixSum(df.repartition(parts), Seq(col("s_suppkey")), "v", "off")
         .orderBy("s_suppkey").select("s_suppkey", "off")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(got == expected, s"prefix sum diverged at $parts input partitions")
+      val (_, total) = PrefixSum
+        .withPrefixSumTotal(df.repartition(parts), Seq(col("s_suppkey")), "v", "off")
+      assert(total == colSum, s"prefix sum total diverged at $parts input partitions")
     }
+    assertNullFails(df, PrefixSum.withPrefixSum(_, Seq(col("s_suppkey")), "v", "off"))
+  }
+
+  /** A NULL value fails loudly wherever it lands: at 1 partition phase 1
+    * starts no job and phase 2 catches it when the frame is read; at 8
+    * (uncoalesced) phase 1 reads partition 0, where the NULL row's smallest
+    * key sorts, and fails while the frame is built. */
+  private def assertNullFails(df: org.apache.spark.sql.DataFrame,
+      scan: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    val withNull = df.withColumn("v",
+      when(col("s_suppkey") === 1, lit(null).cast("bigint")).otherwise(col("v")))
+    def message(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val one = scan(withNull.coalesce(1))
+    val late = intercept[Exception](one.collect())
+    assert(message(late).contains("NULL in value column 'v'"), message(late))
+    val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val early = intercept[Exception](scan(withNull.repartition(8)))
+      assert(message(early).contains("NULL in value column 'v'"), message(early))
+    } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
   }
 
   test("PrefixMax equals the window cumulative max at any input partitioning") {
@@ -105,6 +131,7 @@ class SchemesSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(got == expected, s"prefix max diverged at $parts input partitions")
     }
+    assertNullFails(df, PrefixSum.withPrefixMax(_, Seq(col("s_suppkey")), "v", "pm"))
   }
 
   test("ConcatenatedScheme closed-form offsets are exact with bounded Constant segments") {
