@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * local master. Everything scale-relevant is expressed through the plan
   * (partitioning columns, broadcast hints, AQE) rather than hard-coded
   * parallelism, so the same code runs unchanged on a 1000-executor cluster.
-  * The one sized conf, `spark.sql.shuffle.partitions`, follows README's
-  * rule (2× total cores as the AQE ceiling) on a local master and is left
-  * to the deployment everywhere else.
+  * The one conf sized by the cluster, `spark.sql.shuffle.partitions`,
+  * follows README's rule (2× total cores as the AQE ceiling) on a local
+  * master and is left to the deployment everywhere else.
   */
 object Graft {
   /** The one place a `SparkSession` is built: tests, the CLI mains and
@@ -18,7 +18,18 @@ object Graft {
     * default master is sized by `SPARK_GRAFT_CPUS` (`local[4]` if unset).
     * A local master gets 2 shuffle partitions per core it runs on (its
     * threads, capped at the available processors); AQE coalesces below
-    * that. */
+    * that.
+    *
+    * Generated code compiles once per session, not once per pass. Spark
+    * keys its codegen cache on (task context classloader, source), and
+    * every persist runs under a session clone ([[graft.transform.Cache]]).
+    * With artifact isolation on, each clone got its own executor
+    * classloader, so tasks recompiled byte-identical classes every pass.
+    * graft adds no session artifacts (no `addArtifact`, no `addJar`), so
+    * isolation is off and all sessions share one loader. The cache holds
+    * 500 entries: a curation pass generates 94 distinct classes and the
+    * benchmark's query mix 97, and Spark's default 100 entries are split
+    * over 4 LRU segments, which thrash at that traffic. */
   def session(
       master: String = localMaster(sys.env.get("SPARK_GRAFT_CPUS")),
       appName: String = "graft"): SparkSession = {
@@ -31,6 +42,8 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "500")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

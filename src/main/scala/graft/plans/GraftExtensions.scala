@@ -32,6 +32,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Canonicalization rewrite: the portable md5-composition hash form
     // becomes the native codegen Hash64Expr (see RewriteComposedHash64).
     ext.injectOptimizerRule(_ => RewriteComposedHash64)
+    // The session's memo of table read plans (see Tables.load).
+    ext.injectCheckRule(_ => new graft.sources.Tables.PlanMemo)
     ext.injectFunction((FunctionIdentifier("graft_hash64"),
       info("graft_hash64", "md5-derived 60-bit hash of a string"),
       (exprs: Seq[Expression]) => {

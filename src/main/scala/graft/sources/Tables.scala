@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Catalog of the named test tables (TPC-H-ish star schema + events/documents/
   * embeddings). Mirrors fuel's named-dataset registry (reference:
@@ -22,39 +23,36 @@ object Tables {
     * memoized is METADATA (an immutable DataFrame = unresolved scan +
     * schema — the thing a production engine keeps in its catalog/
     * metastore); no rows, no results, no intermediates are held, and
-    * every execution still scans the parquet files. Keyed by session so
-    * a memo can never leak across SparkSession lifecycles (Verify and
-    * Bench each build their own session; tests build many).
+    * every execution still scans the parquet files.
     *
-    * Assumes STATIC DATA PER SESSION (ADVICE r14): the memoized frame
-    * pins the parquet file listing captured at first load, so a harness
-    * that regenerates a table mid-session must call [[clearMemo]] (or
-    * use a fresh session) — previously each load re-listed. Entries are
-    * evicted when the underlying SparkContext ends (ADVICE r14: stopped
-    * test sessions otherwise stayed strongly reachable, with their file
-    * indexes, for the sbt JVM's lifetime). */
-  private val planMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  private val evictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+    * Assumes STATIC DATA PER SESSION: the memoized frame pins the parquet
+    * file listing captured at first load, so a harness that regenerates
+    * a table mid-session must use a fresh session.
+    *
+    * The memo lives in its session (a [[PlanMemo]]), not in a global map:
+    * every memoized frame holds its session, so a global map, even one
+    * with weak session keys, would keep every session that ever loaded a
+    * table reachable. A discarded session is collected with its memo. A
+    * session built without [[graft.plans.GraftExtensions]] has no memo
+    * and re-reads on every load. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    memo(spark) match {
+      case Some(m) => m.plans.computeIfAbsent((dir, name), _ => doLoad(spark, dir, name))
+      case None => doLoad(spark, dir, name)
+    }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (evictionHooked.add(spark))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            planMemo.keySet.removeIf(_._1 eq spark)
-            evictionHooked.remove(spark)
-          }
-        })
-    planMemo.computeIfAbsent((spark, dir, name),
-      _ => doLoad(spark, dir, name))
+  /** One session's read plans. Spark has no slot for engine state on a
+    * session, so [[graft.plans.GraftExtensions]] injects this as an
+    * analyzer check that checks nothing: Spark builds one per session
+    * state (clones included) and only that state holds it. */
+  private[graft] final class PlanMemo extends (LogicalPlan => Unit) {
+    val plans = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    def apply(plan: LogicalPlan): Unit = ()
   }
 
-  /** Drop every memoized plan (all sessions) — for harnesses that
-    * regenerate test data under a live session. */
-  def clearMemo(): Unit = planMemo.clear()
+  private def memo(spark: SparkSession): Option[PlanMemo] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.analyzer.extendedCheckRules.collectFirst { case m: PlanMemo => m }
 
   private def doLoad(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {

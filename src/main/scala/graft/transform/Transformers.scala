@@ -167,7 +167,13 @@ final case class FilterSources(sources: Seq[String]) extends Transform {
   * sessions). A long-lived interactive session issuing many engine
   * queries accumulates MEMORY_AND_DISK blocks until LRU eviction — call
   * `spark.catalog.clearCache()` (or unpersist the returned frames) at
-  * its own query boundaries. */
+  * its own query boundaries.
+  *
+  * Each persist runs under a clone of the session (Spark's CacheManager
+  * switches off the confs that could change a cached plan's
+  * partitioning). The clone no longer costs a classloader of its own and
+  * a recompile of the pass's generated code: [[graft.Graft.session]]
+  * turns artifact isolation off. */
 final case class Cache(level: org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) extends Transform {
   def apply(df: DataFrame): DataFrame = df.persist(level)

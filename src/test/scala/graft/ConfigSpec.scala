@@ -4,12 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
+
 /** The four-layer config cascade ([[Graft.configValue]] — fuel's
   * config_parser re-expressed): conf > env > rc file > default, per key.
   * The env layer is process-global and so exercised implicitly (an unset
   * `GRAFT_*` var falls through); the other three layers are pinned here.
   * Also pins that every entry point shares [[Graft.session]]'s config,
-  * how it sizes shuffles from the master's threads, that
+  * how it sizes shuffles from the master's threads, that sessions share
+  * one executor classloader (so generated code compiles once), that
   * [[graft.sources.Store]] alone lays out persisted stores, and that
   * only the Spark bridge declares a plan's order over an RDD.
   */
@@ -57,6 +60,24 @@ class ConfigSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](Graft.localMaster(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
     }
+  }
+
+  test("sessions and their forks share one executor classloader and a 500-entry codegen cache") {
+    // Spark's codegen cache is keyed on (task context classloader, source):
+    // a loader per session, or per persist's session clone, recompiles
+    // every generated class per pass.
+    val forked = spark.newSession()
+    for (s <- Seq(spark, forked)) {
+      assert(s.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "500")
+    }
+    def taskLoader(s: SparkSession): Int = {
+      import s.implicits._
+      s.range(1).map(_ => System.identityHashCode(Thread.currentThread.getContextClassLoader))
+        .head()
+    }
+    assert(taskLoader(forked) == taskLoader(spark),
+      "a forked session's tasks run under a classloader of their own")
   }
 
   test("Graft.session is the only place a SparkSession is built") {

@@ -44,6 +44,26 @@ class CurationSpec extends SparkSpec {
     assert(nDocs(3) == survivors.count())
   }
 
+  test("curatePublished: a second pass compiles at most 4 new generated classes") {
+    // Each pass persists intermediates, and every persist runs under a
+    // clone of the session. Spark keys its codegen cache on the task's
+    // classloader, so a loader per clone recompiled every class per pass.
+    val raw = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def pass(): Long = {
+      val before = compiles.getCount
+      Curation.curatePublished(raw, raw.filter(col("doc_id") % 41 === 0))
+        .write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
+      compiles.getCount - before
+    }
+    pass()
+    val second = pass()
+    assert(second <= 4, s"the second pass compiled $second classes; only dedupLines's " +
+      "limit(n + 1) guard may recompile, since Spark numbers its _limit_counter " +
+      "variables from a JVM-wide counter")
+  }
+
   test("curatePublished: no stage that reads a shuffle runs more than 2 × defaultParallelism tasks") {
     // A load-independent counter on the curation chain: a few hundred docs
     // fit in a handful of tasks, so an un-coalesced shuffle wider than the

@@ -23,6 +23,33 @@ import graft.transform._
   */
 class LifecycleSpec extends SparkSpec {
 
+  test("Tables.load memoizes per session, and a discarded newSession that used it is garbage-collected") {
+    // The session is made and dropped inside `use`; only the weak
+    // reference outlives it. Tables.load's memo must not pin it. The
+    // join is planned, not run: a run also pins the session for a while
+    // in Spark's own query-stage pool threads, which inherit the session
+    // active where they are spawned and keep it until they idle out.
+    def use(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+      val s = spark.newSession()
+      val orders = Tables.load(s, sf, "orders")
+      // memoized per session: a second load is the same frame, and the
+      // shared session has its own
+      assert(Tables.load(s, sf, "orders") eq orders)
+      assert(Tables.load(spark, sf, "orders") ne orders)
+      orders.join(Tables.load(s, sf, "customer"), col("o_custkey") === col("c_custkey"))
+        .queryExecution.executedPlan
+      new java.lang.ref.WeakReference(s)
+    }
+    val ref = use()
+    var rounds = 0
+    while (ref.get != null && rounds < 50) {
+      System.gc()
+      Thread.sleep(20)
+      rounds += 1
+    }
+    assert(ref.get == null, s"the session is still reachable after $rounds GCs")
+  }
+
   test("canonical program: split -> shuffled scheme -> defaults -> epoch loop") {
     // 1. split-aware load (H5PYDataset which_sets analog)
     val table = Tables.load(spark, sf, "customer")
