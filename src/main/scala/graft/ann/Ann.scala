@@ -3,7 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopK
+import graft.functions.{Guards, TopK}
 import graft.sources.{Store, StoreKind}
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -37,61 +37,18 @@ object Ann {
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** The enforced broadcast contract shared by [[bruteForceTopK]] and
-    * [[lshTopK]] ([[graft.dedup.Dedup.contaminated]]'s pattern): a bounded
-    * probe — one column-pruned scan of at most `maxQueryRows + 1` query
-    * ids — fails fast AT THE CALL SITE with the fix in the message. The
-    * alternative is the forced broadcast either OOMing the driver or
-    * blowing Spark's broadcast limit mid-job, an error whose stack trace
-    * points at an executor instead of at the oversized query set. */
-  /** Enforce the broadcast-side row contract TWICE: an eager call-site
-    * probe (a clean IllegalArgumentException naming the fix, raised
-    * before any job the oversized broadcast would OOM) and an IN-PLAN
-    * one-row raise_error gate crossed onto the frame. The gate
-    * re-enforces the bound at every execution — a lazily re-derived
-    * query frame can grow between probe time and run time — and is the
-    * plan-visible marker PlanSpec's global BroadcastNestedLoopJoin
-    * audit keys on (an eager-only probe leaves no trace in the plan).
-    * Costs one bounded (≤ max+1 rows) scan per side; the gate itself
-    * broadcasts as a one-row frame. Callers MUST build on the RETURNED
-    * frame. */
-  private def probeQueries(queries: DataFrame, idCol: String, op: String,
-      maxQueryRows: Int, fix: String): DataFrame =
-    probeQueriesCounted(queries, idCol, op, maxQueryRows, fix)._1
-
-  /** [[probeQueries]] returning the probe's row count too — the count is
-    * already paid for by the contract check, so hint decisions (e.g.
-    * [[pqProbe]]'s broadcastProbe cap) can reuse it instead of adding a
-    * second action. */
-  private def probeQueriesCounted(queries: DataFrame, idCol: String, op: String,
-      maxQueryRows: Int, fix: String): (DataFrame, Long) = {
-    val msg =
-      s"$op: query set exceeds $maxQueryRows rows — a corpus-sized query side " +
-        s"cannot broadcast. $fix, or raise maxQueryRows if the driver " +
-        "genuinely fits the larger broadcast"
-    val probed = queries.select(col(idCol)).limit(maxQueryRows + 1).count()
-    require(probed <= maxQueryRows, msg)
-    (inPlanGate(queries, idCol, maxQueryRows, msg), probed)
-  }
-
-  /** The in-plan half of a broadcast-side contract: a one-row gate frame
-    * (bounded count → raise_error past `maxRows`) crossed onto `df`. The
-    * `where` keeps the gate column live against column pruning; the gate
-    * itself broadcasts as a scalar frame, so the extra join is free at
-    * any scale and the `raise_error` marker survives into the executed
-    * plan for PlanSpec's audit. */
-  private def inPlanGate(df: DataFrame, keyCol: String, maxRows: Int,
-      msg: String): DataFrame = {
-    val gate = df.select(col(keyCol)).limit(maxRows + 1)
-      .agg(when(count(lit(1)) > maxRows, raise_error(lit(msg)))
-        .otherwise(lit(true)).as("__probed"))
-    df.crossJoin(broadcast(gate)).where(col("__probed")).drop("__probed")
-  }
+  /** The message of the ANN operators' query-side broadcast bound,
+    * which they enforce with [[graft.functions.Guards.atMost]]. */
+  private def queryBoundMsg(op: String, maxQueryRows: Int, fix: String): String =
+    s"$op: query set exceeds $maxQueryRows rows — a corpus-sized query side " +
+      s"cannot broadcast. $fix, or raise maxQueryRows if the driver " +
+      "genuinely fits the larger broadcast"
 
   /** Exact top-k neighbors for each query vector.
     *
     * The query side broadcasts BY CONTRACT (the standard ANN-serving
-    * shape) — enforced by [[probeQueries]], not advisory.
+    * shape) — enforced in the plan by [[graft.functions.Guards.atMost]],
+    * not advisory: an oversized query set fails at the first action.
     *
     * @param corpus  (idCol, vecCol) corpus rows
     * @param queries (idCol, vecCol) query rows — must be broadcastable
@@ -101,9 +58,10 @@ object Ann {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       maxQueryRows: Int = 1000000): DataFrame = {
-    val guarded = probeQueries(queries, idCol, "bruteForceTopK", maxQueryRows,
-      "use lshTopK(broadcastQueries = false) for an unbounded query set " +
-        "(or nearDupPairs for corpus-vs-itself search)")
+    val guarded = Guards.atMost(queries, maxQueryRows,
+      queryBoundMsg("bruteForceTopK", maxQueryRows,
+        "use lshTopK(broadcastQueries = false) for an unbounded query set " +
+          "(or nearDupPairs for corpus-vs-itself search)"))
     val q = broadcast(guarded
       .select(col(idCol).as("query_id"), col(vecCol).as("__qvec")))
     val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
@@ -201,7 +159,7 @@ object Ann {
     *
     * Scale shape: this is the EXACT tier — the pair generator is the
     * [[bruteForceTopK]] broadcast shape (source side broadcasts by
-    * contract, enforced by the bounded probe), and the pair frame is
+    * contract, enforced by the in-plan row bound), and the pair frame is
     * deliberately NOT persisted: it is a projection off a broadcast
     * join, and at |A|·|B| rows recomputing its three consumers (x-sums,
     * y-sums, forward-best) is strictly cheaper than materializing the
@@ -216,9 +174,10 @@ object Ann {
       k: Int = 4, tauNum: Long = 105, tauDen: Long = 100,
       maxQueryRows: Int = 1000000): DataFrame = {
     require(k >= 1, s"marginMine: k must be >= 1, got $k")
-    val guardedA = probeQueries(a, idCol, "marginMine", maxQueryRows,
-      "generate candidates with lshTopK(broadcastQueries = false) and " +
-        "apply the margin filter to that bounded pair frame")
+    val guardedA = Guards.atMost(a, maxQueryRows,
+      queryBoundMsg("marginMine", maxQueryRows,
+        "generate candidates with lshTopK(broadcastQueries = false) and " +
+          "apply the margin filter to that bounded pair frame"))
     val av = broadcast(guardedA.select(col(idCol).as("src_id"),
       col(vecCol).cast("array<double>").as("__av")))
     val pairs = b
@@ -543,15 +502,16 @@ object Ann {
     * Scale shape: candidate scoring streams the corpus past the
     * broadcast reduced queries ONCE at outDim doubles per vector
     * (that byte cut is the point); the candidate list (nQueries ·
-    * k·oversample ids) is bounded by the [[probeQueries]] contract, so
+    * k·oversample ids) is bounded by the query-side row bound, so
     * the rerank BROADCASTS it into one corpus pass — the corpus never
     * shuffles. All arithmetic integer-in-double (quantize → project),
     * so candidates AND rerank are oracle-exact. */
   def jlTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, outDim: Int = 32, oversample: Int = 20,
       seed: Long = 77, dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame = {
-    val guarded = probeQueries(queries, idCol, "jlTopK", maxQueryRows,
-      "use lshTopK(broadcastQueries = false) for an unbounded query set")
+    val guarded = Guards.atMost(queries, maxQueryRows,
+      queryBoundMsg("jlTopK", maxQueryRows,
+        "use lshTopK(broadcastQueries = false) for an unbounded query set"))
     def reduced(df: DataFrame): DataFrame =
       signProject(quantize(df, idCol, vecCol), idCol, "qvec", outDim, seed, dim)
     val candScored = reduced(corpus)
@@ -564,7 +524,7 @@ object Ann {
     val cand = topKPerQuery(candScored, k * oversample)
     // Raw query frame here: the in-plan gate rides the candidate tier
     // (always executed — cand feeds the rerank), so re-gating this
-    // reference would only repeat the gate's limit+agg scan (r8 advice).
+    // reference would only repeat the gate's counting scan.
     val rerank = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
       .join(broadcast(cand.select("query_id", "neighbor_id")), Seq("neighbor_id"))
@@ -812,8 +772,9 @@ object Ann {
     require(oversample >= 1, s"pqTopK: oversample must be >= 1, got $oversample")
     val dsub = dim / m
     val cbs = pqCodebooks(corpus, idCol, vecCol, m, ksub, seed, iters, dim)
-    val guarded = probeQueries(queries, idCol, "pqTopK", maxQueryRows,
-      "use lshTopK(broadcastQueries = false) for an unbounded query set")
+    val guarded = Guards.atMost(queries, maxQueryRows,
+      queryBoundMsg("pqTopK", maxQueryRows,
+        "use lshTopK(broadcastQueries = false) for an unbounded query set"))
     val enc = pqEncode(corpus, idCol, vecCol, cbs)
     val qlut = quantize(guarded, idCol, vecCol)
       .select(col(idCol).as("query_id"),
@@ -1078,8 +1039,8 @@ object Ann {
       s"pqProbeResidual: nProbe=$nProbe outside [1, ${centroids.length}]")
     require(oversample >= 1,
       s"pqProbeResidual: oversample must be >= 1, got $oversample")
-    val (guarded, nQueries) = probeQueriesCounted(queries, idCol,
-      "pqProbeResidual", maxQueryRows, "probe in bounded query batches")
+    val guarded = Guards.atMost(queries, maxQueryRows,
+      queryBoundMsg("pqProbeResidual", maxQueryRows, "probe in bounded query batches"))
     val m = codebooks.length
     val dsub = codebooks.head.head.length
     val qlut = quantize(
@@ -1096,7 +1057,7 @@ object Ann {
             col("qvec").cast("array<double>"), qCentroids),
           col("__cid") + 1).as("__qdotc"))
     // same broadcastProbe contract (and batch-size cap) as [[pqProbe]]
-    val qlutH = if (broadcastProbe && nQueries <= broadcastProbeMaxRows)
+    val qlutH = if (broadcastProbe && guarded.count() <= broadcastProbeMaxRows)
       broadcast(qlut) else qlut
     val candScored = index
       .select(col("cid").as("__cid"), col(idCol).as("neighbor_id"),
@@ -1164,8 +1125,9 @@ object Ann {
     require(nProbe >= 1 && nProbe <= nCentroids,
       s"ivfPqTopK: nProbe=$nProbe outside [1, nCentroids=$nCentroids]")
     require(oversample >= 1, s"ivfPqTopK: oversample must be >= 1, got $oversample")
-    val guarded = probeQueries(queries, idCol, "ivfPqTopK", maxQueryRows,
-      "use lshTopK(broadcastQueries = false) for an unbounded query set")
+    val guarded = Guards.atMost(queries, maxQueryRows,
+      queryBoundMsg("ivfPqTopK", maxQueryRows,
+        "use lshTopK(broadcastQueries = false) for an unbounded query set"))
     val (encIdx, coarse, cbs) =
       ivfPqEncode(corpus, idCol, vecCol, seed, nCentroids, m, ksub, iters, dim)
     val enc = encIdx.select(col("cid").as("__cid"),
@@ -1317,8 +1279,8 @@ object Ann {
       oversample: Int = 20, rerankCorpus: Option[DataFrame] = None,
       maxQueryRows: Int = 1000000, broadcastProbe: Boolean = false,
       broadcastProbeMaxRows: Int = 10000): DataFrame = {
-    val (guarded, nQueries) = probeQueriesCounted(queries, idCol, "pqProbe",
-      maxQueryRows, "probe in bounded query batches")
+    val guarded = Guards.atMost(queries, maxQueryRows,
+      queryBoundMsg("pqProbe", maxQueryRows, "probe in bounded query batches"))
     val qlut0 = pqQueryLut(guarded, idCol, vecCol, centroids, nProbe, codebooks)
     // `broadcastProbe = true` is the serving shape for a KNOWN-small
     // batch: the index side — bucketed artifact or a persisted encode
@@ -1333,9 +1295,9 @@ object Ann {
     // grows with sf and would force an unbounded broadcast): past
     // `broadcastProbeMaxRows` LUT rows (~2.6 KB each at the m=4 default
     // → ~26 MB hinted build side at the cap) the hint degrades to the
-    // unhinted plan instead of an executor OOM. The count is the one
-    // probeQueries already paid for.
-    val qlut = if (broadcastProbe && nQueries <= broadcastProbeMaxRows)
+    // unhinted plan instead of an executor OOM. The batch is counted
+    // only when the hint is asked for.
+    val qlut = if (broadcastProbe && guarded.count() <= broadcastProbeMaxRows)
       broadcast(qlut0) else qlut0
     val candScored = index
       .select(col("cid").as("__cid"), col(idCol).as("neighbor_id"),
@@ -1367,9 +1329,9 @@ object Ann {
     * so the right plan is a broadcast nested-loop with the threshold as
     * the join condition — each corpus row streams past the broadcast
     * bench vectors once, codegen'd integer dots, no shuffle of the
-    * corpus at all; only HIT rows reach the one keyed agg. The bound is
-    * probed up front ([[graft.dedup.Dedup.contaminated]]'s enforced
-    * contract).
+    * corpus at all; only HIT rows reach the one keyed agg. The bench
+    * row bound is enforced in the plan
+    * ([[graft.dedup.Dedup.contaminated]]'s contract).
     *
     * The threshold compare is PURE INTEGER arithmetic (exact in double,
     * so the oracle reproduces every flag bit-for-bit): cos ≥ τ ⟺
@@ -1393,10 +1355,8 @@ object Ann {
         "corpus-sized 'benchmark' cannot broadcast; use nearDupPairs' " +
         "LSH machinery for corpus-vs-corpus similarity, or raise " +
         "maxBenchRows if the eval side genuinely fits the broadcast budget"
-    val probed = benchmark.select(col(benchIdCol)).limit(maxBenchRows + 1).count()
-    require(probed <= maxBenchRows, msg)
     val c = corpus.select(col(idCol), col(qvecCol).cast("array<double>").as("__cv"))
-    val b = inPlanGate(benchmark, benchIdCol, maxBenchRows, msg)
+    val b = Guards.atMost(benchmark, maxBenchRows, msg)
       .select(col(benchIdCol).as("__bid"),
         col(benchQvecCol).cast("array<double>").as("__bv"))
     val d = dot(col("__cv"), col("__bv"))
@@ -1768,9 +1728,9 @@ object Ann {
     * tiers, domains, toxicity flags) extends to a whole corpus without
     * training a model.
     *
-    * Scale shape: the labeled side is bounded (a seed set — probed,
-    * [[contaminatedSemantic]]'s enforced contract) and broadcasts; the
-    * corpus streams past it once (BroadcastNestedLoopJoin — the q30
+    * Scale shape: the labeled side is bounded (a seed set — an in-plan
+    * row bound, [[contaminatedSemantic]]'s enforced contract) and
+    * broadcasts; the corpus streams past it once (BroadcastNestedLoopJoin — the q30
     * pattern), [[graft.functions.TopK]] bounds every group to k rows
     * BEFORE the shuffle (map-side partial aggregation), and the vote is
     * a per-id count + argmax over ≤ k rows. The corpus itself never
@@ -1789,10 +1749,8 @@ object Ann {
         "corpus-sized 'seed set' cannot broadcast; label propagation " +
         "wants a bounded hand-labeled side, or raise maxLabeledRows if " +
         "it genuinely fits the broadcast budget"
-    val probed = labeled.select(col(labeledIdCol)).limit(maxLabeledRows + 1).count()
-    require(probed <= maxLabeledRows, msg)
     val c = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__cv"))
-    val l = inPlanGate(labeled, labeledIdCol, maxLabeledRows, msg)
+    val l = Guards.atMost(labeled, maxLabeledRows, msg)
       .select(col(labeledIdCol).as("__lid"),
         col(labeledVecCol).cast("array<double>").as("__lv"),
         col(labelCol).cast("long").as("__lab"))
@@ -2028,14 +1986,16 @@ object Ann {
     * shuffle joins instead of OOMing the driver with a forced broadcast
     * (a corpus-vs-ITSELF search still belongs in [[nearDupPairs]] — the
     * self-join shape dedups pairs instead of ranking twice). The contract
-    * is ENFORCED by [[probeQueries]] whenever the hint is on. */
+    * is ENFORCED in the plan ([[graft.functions.Guards.atMost]]) whenever
+    * the hint is on. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, seed: Long = 42, tables: Int = 4, planes: Int = 12, dim: Int = 64,
       broadcastQueries: Boolean = true, maxQueryRows: Int = 1000000): DataFrame = {
     val q0 =
       if (broadcastQueries)
-        probeQueries(queries, idCol, "lshTopK", maxQueryRows,
-          "pass broadcastQueries = false to plan key-partitioned shuffle joins")
+        Guards.atMost(queries, maxQueryRows,
+          queryBoundMsg("lshTopK", maxQueryRows,
+            "pass broadcastQueries = false to plan key-partitioned shuffle joins"))
       else queries
     // planes = 0 auto-derives from the corpus (queries are the bounded
     // side by the broadcast contract; corpus occupancy governs the work).
@@ -2055,7 +2015,7 @@ object Ann {
     // The vector rejoin references the RAW query frame: the in-plan gate
     // rides the candidates subtree (which always executes — it feeds the
     // final plan), so a second gated reference would only re-execute the
-    // gate's limit+agg scan without adding enforcement (r8 advice).
+    // gate's counting scan without adding enforcement.
     val scored = candidates
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec")),
         Seq("neighbor_id"))
@@ -2089,9 +2049,10 @@ object Ann {
     * Scale shape: greedy selection is inherently sequential (k
     * driver-looped rounds, each one jobs over the pool), so the pool is
     * a BOUNDED CANDIDATE TIER by contract — the output of an ANN /
-    * BM25 / RRF top-k, not a corpus — enforced by an eager probe like
-    * [[probeQueries]]. Each round is one map-side-combined min-struct
-    * agg over the persisted pool (selected vectors ride in as
+    * BM25 / RRF top-k, not a corpus — enforced by an in-plan row bound
+    * on the pool, which fails the first round. Each round is one
+    * map-side-combined min-struct agg over the persisted pool (selected
+    * vectors ride in as
     * literals); nothing shuffles. Output: (rank, idCol) — rank 1..k in
     * selection order. */
   def mmrSelect(candidates: DataFrame, idCol: String, vecCol: String,
@@ -2100,14 +2061,13 @@ object Ann {
     require(k >= 1, s"mmrSelect: k must be >= 1, got $k")
     require(0 < lambdaNum && lambdaNum <= lambdaDen,
       s"mmrSelect: need 0 < lambdaNum <= lambdaDen, got $lambdaNum/$lambdaDen")
-    val probed = candidates.select(col(idCol)).limit(maxCandidates + 1).count()
-    require(probed <= maxCandidates,
-      s"mmrSelect: candidate pool exceeds $maxCandidates rows — greedy " +
-        "selection runs k passes over the pool; feed it a bounded candidate " +
-        "tier (an ANN/BM25/RRF top-k), or raise maxCandidates deliberately")
     val spark = candidates.sparkSession
     import spark.implicits._
-    val pool = candidates.select(col(idCol).cast("bigint").as("__id"),
+    val pool = Guards.atMost(candidates, maxCandidates,
+        s"mmrSelect: candidate pool exceeds $maxCandidates rows — greedy " +
+          "selection runs k passes over the pool; feed it a bounded candidate " +
+          "tier (an ANN/BM25/RRF top-k), or raise maxCandidates deliberately")
+      .select(col(idCol).cast("bigint").as("__id"),
         col(vecCol).cast("array<double>").as("__v"),
         col(relCol).cast("double").as("__rel"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2115,30 +2075,31 @@ object Ann {
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Double])]
     val taken = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)] // (rank, id)
     var exhausted = false
-    for (t <- 1 to k if !exhausted) {
-      val maxSim: Column =
-        if (selected.isEmpty) lit(0.0)
+    try {
+      for (t <- 1 to k if !exhausted) {
+        val maxSim: Column =
+          if (selected.isEmpty) lit(0.0)
+          else {
+            val sims = selected.map { case (_, v) => cosine(col("__v"), typedlit(v)) }
+            if (sims.size == 1) sims.head else greatest(sims.toSeq: _*)
+          }
+        val score = lit(lambdaNum.toDouble) * col("__rel") - lit(penalty) * maxSim
+        val remaining =
+          if (selected.isEmpty) pool
+          else pool.filter(!col("__id").isInCollection(selected.map(_._1)))
+        val best = remaining
+          .select(col("__id"), col("__v"), score.as("__m"))
+          .filter(col("__m").isNotNull && !isnan(col("__m")))
+          .agg(min(struct((-col("__m")).as("n"), col("__id").as("i"), col("__v").as("v"))).as("b"))
+          .head().getStruct(0)
+        if (best == null) exhausted = true
         else {
-          val sims = selected.map { case (_, v) => cosine(col("__v"), typedlit(v)) }
-          if (sims.size == 1) sims.head else greatest(sims.toSeq: _*)
+          val id = best.getLong(1)
+          taken += ((t.toLong, id))
+          selected += ((id, best.getSeq[Double](2)))
         }
-      val score = lit(lambdaNum.toDouble) * col("__rel") - lit(penalty) * maxSim
-      val remaining =
-        if (selected.isEmpty) pool
-        else pool.filter(!col("__id").isInCollection(selected.map(_._1)))
-      val best = remaining
-        .select(col("__id"), col("__v"), score.as("__m"))
-        .filter(col("__m").isNotNull && !isnan(col("__m")))
-        .agg(min(struct((-col("__m")).as("n"), col("__id").as("i"), col("__v").as("v"))).as("b"))
-        .head().getStruct(0)
-      if (best == null) exhausted = true
-      else {
-        val id = best.getLong(1)
-        taken += ((t.toLong, id))
-        selected += ((id, best.getSeq[Double](2)))
       }
-    }
-    pool.unpersist()
+    } finally pool.unpersist()
     taken.toSeq.toDF("rank", idCol)
   }
 }

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Stable
+import graft.functions.{Guards, Stable}
 import graft.sources.StoreKind
 
 /** Deduplication for training-data pipelines: exact, MinHash+LSH banding,
@@ -401,17 +401,18 @@ object Dedup {
     * the per-doc distinct count. `minOverlap > 1` guards against
     * single-shingle coincidences in overlapping vocabularies.
     *
-    * The broadcast contract is ENFORCED, not advisory: a bounded probe
-    * (one column-pruned scan of at most `maxBenchRows + 1` benchmark ids)
-    * fails fast with the fix in the message — the alternative is the
-    * broadcast either OOMing the driver or silently exceeding Spark's
-    * broadcast threshold mid-job, an error that would point at an
-    * executor instead of at this call site. */
+    * The broadcast contract is ENFORCED, not advisory: an in-plan row
+    * bound on the benchmark ([[graft.functions.Guards.atMost]]) fails
+    * the first action with the fix in the message — the alternative is
+    * the broadcast either OOMing the driver or silently exceeding
+    * Spark's broadcast threshold mid-job, an error that would point at
+    * an executor instead of at the oversized benchmark. The bound counts
+    * benchmark rows, so `benchIdCol` is not read; it stays in the
+    * signature for existing callers, as in [[benchmarkOverlap]]. */
   def contaminated(corpus: DataFrame, idCol: String, toksCol: String,
       benchmark: DataFrame, benchIdCol: String, benchToksCol: String,
       k: Int = 3, minOverlap: Int = 2, maxBenchRows: Int = 1000000): DataFrame = {
-    val probed = benchmark.select(col(benchIdCol)).limit(maxBenchRows + 1).count()
-    require(probed <= maxBenchRows,
+    val bench = Guards.atMost(benchmark, maxBenchRows,
       s"contaminated: benchmark exceeds $maxBenchRows rows — a corpus-sized " +
         "'benchmark' cannot broadcast; use Dedup.lshCandidates' near-dup " +
         "machinery for corpus-vs-corpus overlap, or raise maxBenchRows if " +
@@ -423,7 +424,7 @@ object Dedup {
         explode_outer(minhashFeatures(col(toksCol), k, 1)("shingles")).as("sh"))
       .filter(col("sh").isNotNull)
       .join(broadcast(
-          benchmark.select(
+          bench.select(
               explode_outer(minhashFeatures(col(benchToksCol), k, 1)("shingles")).as("sh"))
             .filter(col("sh").isNotNull)
             .distinct()),
@@ -442,7 +443,7 @@ object Dedup {
     *
     * Scale shape: identical to [[contaminated]] — the benchmark's
     * distinct gram set broadcasts under the same ENFORCED `maxBenchRows`
-    * probe, the corpus gram stream is a pure projection
+    * bound, the corpus gram stream is a pure projection
     * (minhashFeatures' per-doc-distinct shingles) that never shuffles to
     * find its matches, and the only shuffle is the per-doc count agg,
     * map-side combined to ~one row per doc. The fraction is a long/long
@@ -450,13 +451,11 @@ object Dedup {
   def benchmarkOverlap(corpus: DataFrame, idCol: String, toksCol: String,
       benchmark: DataFrame, benchIdCol: String, benchToksCol: String,
       k: Int = 3, maxBenchRows: Int = 1000000): DataFrame = {
-    val probed = benchmark.select(col(benchIdCol)).limit(maxBenchRows + 1).count()
-    require(probed <= maxBenchRows,
-      s"benchmarkOverlap: benchmark exceeds $maxBenchRows rows — a " +
-        "corpus-sized 'benchmark' cannot broadcast; use Dedup.lshCandidates' " +
-        "near-dup machinery for corpus-vs-corpus overlap, or raise " +
-        "maxBenchRows if the eval side genuinely fits the broadcast budget")
-    val benchGrams = benchmark
+    val benchGrams = Guards.atMost(benchmark, maxBenchRows,
+        s"benchmarkOverlap: benchmark exceeds $maxBenchRows rows — a " +
+          "corpus-sized 'benchmark' cannot broadcast; use Dedup.lshCandidates' " +
+          "near-dup machinery for corpus-vs-corpus overlap, or raise " +
+          "maxBenchRows if the eval side genuinely fits the broadcast budget")
       .select(explode_outer(minhashFeatures(col(benchToksCol), k, 1)("shingles")).as("sh"))
       .filter(col("sh").isNotNull)
       .distinct().withColumn("__hit", lit(1L))
@@ -498,8 +497,9 @@ object Dedup {
     *
     * Driver-side action is bounded: the distinct bit POSITIONS (at most
     * `mBits` longs, i.e. ≤ mBits·8 bytes) collect to the driver and fold
-    * into the word array. The benchmark row bound is probed up front,
-    * [[contaminated]]-style. */
+    * into the word array. The benchmark row bound is enforced in the
+    * plan, [[contaminated]]-style, so an oversized benchmark fails the
+    * collect. */
   def bloomBits(benchmark: DataFrame, toksCol: String, k: Int = 3,
       mBits: Int = 1 << 20, numHashes: Int = 4,
       maxBenchRows: Int = 1000000): Array[Long] = {
@@ -507,12 +507,10 @@ object Dedup {
       s"bloomBits: mBits must be a positive multiple of 64, got $mBits")
     require(numHashes >= 1 && numHashes <= 16,
       s"bloomBits: numHashes out of range: $numHashes")
-    val probed = benchmark.limit(maxBenchRows + 1).count()
-    require(probed <= maxBenchRows,
-      s"bloomBits: benchmark exceeds $maxBenchRows rows — a corpus-sized " +
-        "'benchmark' is not a decontamination list; raise maxBenchRows " +
-        "only if the eval side is genuinely bounded")
-    val positions = benchmark
+    val positions = Guards.atMost(benchmark, maxBenchRows,
+        s"bloomBits: benchmark exceeds $maxBenchRows rows — a corpus-sized " +
+          "'benchmark' is not a decontamination list; raise maxBenchRows " +
+          "only if the eval side is genuinely bounded")
       .select(explode_outer(minhashFeatures(col(toksCol), k, 1)("shingles")).as("sh"))
       .filter(col("sh").isNotNull)
       .distinct()

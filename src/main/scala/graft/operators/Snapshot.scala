@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Guards
+
 /** Dataset versioning — the snapshot-diff audit every recurring crawl
   * needs ("what changed between CC-2026-08 and CC-2026-09?"): row-level
   * added/removed/changed status between two corpus snapshots, and the
@@ -75,11 +77,12 @@ object Snapshot {
     * (groupCol, nCol, sumCol) — the same shape as `oldAgg`.
     *
     * The changeset-bounded contract is ENFORCED (the [[graft.dedup
-    * .Dedup.contaminated]] probe style): the old rows being retracted
-    * are fetched by a BROADCAST semi-join of the changeset-id union
-    * against the corpus — the corpus is scanned once with a pushed
-    * filter and never shuffles — so a corpus-sized "changeset" must
-    * fail at the call site, not OOM the driver mid-broadcast.
+    * .Dedup.contaminated]] style): the old rows being retracted are
+    * fetched by a BROADCAST semi-join of the changeset-id union against
+    * the corpus — the corpus is scanned once with a pushed filter and
+    * never shuffles — so an in-plan row bound on that union makes a
+    * corpus-sized "changeset" fail the first action with the fix in the
+    * message, not OOM the driver mid-broadcast.
     *
     * Scale shape: every agg runs over changeset-sized frames
     * (map-side combined, group-keyed); the final merge is a
@@ -88,10 +91,9 @@ object Snapshot {
       upserts: DataFrame, deleteIds: DataFrame, idCol: String,
       groupCol: String, valCol: String, nCol: String = "n_rows",
       sumCol: String = "sum_val", maxChangeRows: Int = 1000000): DataFrame = {
-    val changeIds = upserts.select(col(idCol))
-      .union(deleteIds.select(col(idCol))).distinct()
-    val probed = changeIds.limit(maxChangeRows + 1).count()
-    require(probed <= maxChangeRows,
+    val changeIds = Guards.atMost(
+      upserts.select(col(idCol)).union(deleteIds.select(col(idCol))).distinct(),
+      maxChangeRows,
       s"maintainAggregate: changeset exceeds $maxChangeRows ids — a " +
         "corpus-sized changeset cannot broadcast; re-aggregate from " +
         "scratch instead (it is the cheaper plan at that size), or raise " +

@@ -422,7 +422,7 @@ object Curation {
     * [[scrub]] — the SAME normalization as the corpus: perplexity
     * against a differently-normalized LM mis-scores casing and
     * punctuation, the classic deployment bug. Model size is enforced by
-    * [[Perplexity.score]]'s maxModelRows probe (the KenLM vocabulary
+    * [[Perplexity.score]]'s in-plan maxModelRows bound (the KenLM vocabulary
     * contract).
     *
     * Scale shape: the line scrub is [[curatePublished]]'s stage 0 (and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Stable
+import graft.functions.{Guards, Stable}
 
 /** CCNet-style language-model quality gate (Wenzek et al. 2020): score
   * every corpus document by how surprising its token stream is under a
@@ -30,8 +30,9 @@ import graft.functions.Stable
   *
   * Scale shape (the KenLM deployment shape): the MODEL is bounded by
   * the reference vocabulary, not the corpus, BY CONTRACT — [[score]]
-  * probes `maxModelRows` and fails at the call site rather than letting
-  * a corpus-sized "reference" OOM the driver mid-broadcast. The corpus
+  * bounds the model at `maxModelRows` inside the plan and fails the
+  * first action rather than letting a corpus-sized "reference" OOM the
+  * driver mid-broadcast. The corpus
   * side is a pure projection (hashed bigram pairs) + two broadcast
   * joins + one doc-keyed map-side-combined agg: the corpus token stream
   * never shuffles.
@@ -75,13 +76,12 @@ object Perplexity {
   def score(docs: DataFrame, model: DataFrame, idCol: String = "doc_id",
       toksCol: String = "ts", unseenBits: Int = 20,
       maxModelRows: Long = 2000000L): DataFrame = {
-    val probed = model.select(col("h1")).limit((maxModelRows + 1).toInt).count()
-    require(probed <= maxModelRows,
+    val m = Guards.atMost(model, maxModelRows,
       s"Perplexity.score: model exceeds $maxModelRows bigram rows — a " +
         "corpus-sized 'reference' cannot broadcast; train on a bounded " +
         "curated slice (the KenLM contract), or raise maxModelRows if the " +
         "model genuinely fits the broadcast budget")
-    val c1 = model.groupBy("h1").agg(sum(col("c12")).as("c1"))
+    val c1 = m.groupBy("h1").agg(sum(col("c12")).as("c1"))
     val bgr = docs.filter(size(col(toksCol)) >= 2)
       .select(col(idCol), explode_outer(bigramPairs(col(toksCol))).as("bg"))
       .filter(col("bg").isNotNull)
@@ -90,7 +90,7 @@ object Perplexity {
       .when(col("c1").isNotNull, ilog2(col("c1")) + lit(1L))
       .otherwise(lit(unseenBits.toLong))
     val scores = bgr
-      .join(broadcast(model), Seq("h1", "h2"), "left")
+      .join(broadcast(m), Seq("h1", "h2"), "left")
       .join(broadcast(c1), Seq("h1"), "left")
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"), sum(bits).as("total_bits"))
@@ -141,15 +141,14 @@ object Perplexity {
   def scoreTrigram(docs: DataFrame, triModel: DataFrame, biModel: DataFrame,
       idCol: String = "doc_id", toksCol: String = "ts", unseenBits: Int = 20,
       maxModelRows: Long = 2000000L): DataFrame = {
-    Seq("trigram" -> triModel, "bigram" -> biModel).foreach { case (name, m) =>
-      val probed = m.limit((maxModelRows + 1).toInt).count()
-      require(probed <= maxModelRows,
+    def bounded(name: String, m: DataFrame): DataFrame =
+      Guards.atMost(m, maxModelRows,
         s"Perplexity.scoreTrigram: $name model exceeds $maxModelRows rows — " +
           "a corpus-sized 'reference' cannot broadcast; train on a bounded " +
           "curated slice (the KenLM contract), or raise maxModelRows")
-    }
-    val c12 = triModel.groupBy("h1", "h2").agg(sum(col("c123")).as("c12ctx"))
-    val bi = biModel.select(col("h1").as("h2"), col("h2").as("h3"),
+    val tri = bounded("trigram", triModel)
+    val c12 = tri.groupBy("h1", "h2").agg(sum(col("c123")).as("c12ctx"))
+    val bi = bounded("bigram", biModel).select(col("h1").as("h2"), col("h2").as("h3"),
       col("c12").as("c23"))
     val c2 = bi.groupBy("h2").agg(sum(col("c23")).as("c2ctx"))
     val tgr = docs.filter(size(col(toksCol)) >= 3)
@@ -162,7 +161,7 @@ object Perplexity {
       .when(col("c2ctx").isNotNull, ilog2(col("c2ctx")) + lit(2L))
       .otherwise(lit(unseenBits.toLong))
     val scores = tgr
-      .join(broadcast(triModel), Seq("h1", "h2", "h3"), "left")
+      .join(broadcast(tri), Seq("h1", "h2", "h3"), "left")
       .join(broadcast(c12), Seq("h1", "h2"), "left")
       .join(broadcast(bi), Seq("h2", "h3"), "left")
       .join(broadcast(c2), Seq("h2"), "left")

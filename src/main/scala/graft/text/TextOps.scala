@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Stable
+import graft.functions.{Guards, Stable}
 import graft.sources.{Store, StoreKind}
 
 /** Text path: tokenizer + dictionary lookup (reference: fuel/datasets/
@@ -1260,26 +1260,22 @@ object TextOps {
     * aggregation collapses map-side.
     *
     * The broadcast contract is ENFORCED in
-    * [[graft.dedup.Dedup.contaminated]]'s style: a bounded probe counts
-    * at most `maxBoilerplateLines + 1` over-threshold lines and fails
-    * fast with the fix in the message — the degenerate corpus where
-    * "boilerplate" is NOT a small set (every line repeated, e.g. log
-    * streams ingested as text) would otherwise OOM the driver on the
-    * forced broadcast with a stack trace pointing at an executor. The
-    * probe materializes the cached boilerplate set the anti-join then
-    * reuses, so the operator still costs two corpus scans total (count
-    * + join side), exactly as before the rewrite. */
+    * [[graft.dedup.Dedup.contaminated]]'s style: an in-plan row bound
+    * on the over-threshold line set fails the first action with the fix
+    * in the message — the degenerate corpus where "boilerplate" is NOT
+    * a small set (every line repeated, e.g. log streams ingested as
+    * text) would otherwise OOM the driver on the forced broadcast with
+    * a stack trace pointing at an executor. */
   def dedupLines(df: DataFrame, idCol: String, textCol: String,
       maxOccurrences: Long = 1, out: String = "clean_text",
       maxBoilerplateLines: Int = 1000000): DataFrame = {
     val lines = df.select(col(idCol),
       posexplode(split(col(textCol), "\n")).as(Seq("__li", "__line")))
-    val boiler = graft.transform.Cache()(
+    val boiler = Guards.atMost(
       lines.groupBy("__line").agg(count(lit(1)).as("__c"))
         .filter(col("__c") > maxOccurrences)
-        .select("__line"))
-    val probed = boiler.limit(maxBoilerplateLines + 1).count()
-    require(probed <= maxBoilerplateLines,
+        .select("__line"),
+      maxBoilerplateLines,
       s"dedupLines: over-threshold line set exceeds $maxBoilerplateLines entries — " +
         "this corpus's boilerplate is not a bounded set and cannot broadcast. " +
         "Raise maxOccurrences (the threshold defines the set), or raise " +

@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * Also pins that every entry point shares [[Graft.session]]'s config,
   * how it sizes shuffles from the master's threads, that sessions share
   * one executor classloader (so generated code compiles once), that
-  * [[graft.sources.Store]] alone lays out persisted stores, and that
-  * only the Spark bridge declares a plan's order over an RDD.
+  * [[graft.sources.Store]] alone lays out persisted stores, that only
+  * the Spark bridge declares a plan's order over an RDD, and that no
+  * builder probes a row bound eagerly.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -126,6 +127,18 @@ class ConfigSpec extends SparkSpec {
       assert(found.subsetOf(Set("src/main/scala/graft/sources/PrefixSum.scala")),
         s"'$needle' outside PrefixSum.scala: $found")
     }
+  }
+
+  test("no DataFrame builder in src/main probes a row bound with limit(...).count()") {
+    // A row bound is checked inside the plan (Guards.atMost); an eager
+    // probe runs a Spark job while the frame is built, and every planned
+    // limit compiles fresh code. The argument may nest parentheses, as in
+    // `limit((max + 1).toInt).count()`.
+    val probe = """\.\s*limit\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)\s*\.\s*count\(\)""".r
+    val found = scalaFiles("src/main").flatMap { p =>
+      probe.findAllIn(Files.readString(p)).map(m => s"$p: $m")
+    }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   private def scalaFiles(roots: String*) = roots.flatMap { root =>

@@ -424,11 +424,10 @@ class OperatorsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // g1: (2, 10+25); g3 enters; g2 empties and drops.
     assert(got == Set(("g1", 2L, 35L), ("g3", 1L, 40L)), s"got $got")
-    val ex = intercept[IllegalArgumentException] {
-      Snapshot.maintainAggregate(oldAgg, old, ups, del, "id", "g", "v",
-        maxChangeRows = 2)
-    }
-    assert(ex.getMessage.contains("maxChangeRows"), ex.getMessage)
+    val over = Snapshot.maintainAggregate(oldAgg, old, ups, del, "id", "g", "v",
+      maxChangeRows = 2)
+    val ex = messageChain(intercept[Exception](over.collect()))
+    assert(ex.contains("maxChangeRows"), ex)
   }
 
   test("transitionMatrix: session cuts, boundary states, ppm rows sum") {

@@ -48,12 +48,11 @@ class PerplexitySpec extends SparkSpec {
     assert(keep == Map(1L -> 1, 2L -> 0, 3L -> 0, 4L -> 1))
   }
 
-  test("score: the model broadcast contract is enforced at the call site") {
+  test("score: the model broadcast contract is enforced at the first action") {
     val docs = Seq((1L, Seq("a", "b"))).toDF("doc_id", "ts")
-    val e = intercept[IllegalArgumentException] {
-      Perplexity.score(docs, model, maxModelRows = 2L)
-    }
-    assert(e.getMessage.contains("maxModelRows"))
+    val over = Perplexity.score(docs, model, maxModelRows = 2L)
+    val e = messageChain(intercept[Exception](over.collect()))
+    assert(e.contains("maxModelRows"), e)
   }
 
   test("buckets: per-group tercile cutoffs, hand-computed, ties share a bucket") {
@@ -123,9 +122,8 @@ class PerplexitySpec extends SparkSpec {
     assert(out(5L) == ((1L, 20L)))
     assert(out(6L) == ((0L, 0L)))
     // the broadcast contract holds for both model halves
-    val ex = intercept[IllegalArgumentException] {
-      Perplexity.scoreTrigram(docs, tri, bi, maxModelRows = 1L)
-    }
-    assert(ex.getMessage.contains("model exceeds"))
+    val over = Perplexity.scoreTrigram(docs, tri, bi, maxModelRows = 1L)
+    val ex = messageChain(intercept[Exception](over.collect()))
+    assert(ex.contains("model exceeds"), ex)
   }
 }

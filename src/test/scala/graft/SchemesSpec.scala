@@ -102,16 +102,14 @@ class SchemesSpec extends SparkSpec {
       scan: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
     val withNull = df.withColumn("v",
       when(col("s_suppkey") === 1, lit(null).cast("bigint")).otherwise(col("v")))
-    def message(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
     val one = scan(withNull.coalesce(1))
     val late = intercept[Exception](one.collect())
-    assert(message(late).contains("NULL in value column 'v'"), message(late))
+    assert(messageChain(late).contains("NULL in value column 'v'"), messageChain(late))
     val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       val early = intercept[Exception](scan(withNull.repartition(8)))
-      assert(message(early).contains("NULL in value column 'v'"), message(early))
+      assert(messageChain(early).contains("NULL in value column 'v'"), messageChain(early))
     } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
   }
 

@@ -12,4 +12,9 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  /** Every message in `t`'s cause chain: an in-plan `raise_error` reaches
+    * the driver wrapped in the job's failure. */
+  def messageChain(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 }

@@ -165,9 +165,6 @@ class TextDedupSpec extends SparkSpec {
     assert(messageChain(e).contains("bucket occupancy"))
   }
 
-  private def messageChain(t: Throwable): String =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
-
   test("jaccardJoin equals the unpruned all-pairs join on the real corpus") {
     // The exactness claim IS the test: prefix filtering + length filter
     // must lose nothing vs brute force (tiny corpus -> crossJoin OK here).
@@ -242,14 +239,12 @@ class TextDedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta"), (2L, "one two three four"),
       (3L, "five six seven eight")).toDF("doc_id", "text")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ts"))
-    // a corpus-sized "benchmark" fails fast at the call site, pointing at
+    // a corpus-sized "benchmark" fails at the first action, pointing at
     // the near-dup machinery — not as an executor OOM mid-broadcast
-    val e = intercept[IllegalArgumentException] {
-      Dedup.contaminated(corpus, "doc_id", "ts", corpus, "doc_id", "ts",
-        maxBenchRows = 2)
-    }
-    assert(e.getMessage.contains("cannot broadcast") &&
-      e.getMessage.contains("lshCandidates"), e.getMessage)
+    val over = Dedup.contaminated(corpus, "doc_id", "ts", corpus, "doc_id", "ts",
+      maxBenchRows = 2)
+    val e = messageChain(intercept[Exception](over.collect()))
+    assert(e.contains("cannot broadcast") && e.contains("lshCandidates"), e)
   }
 
   test("bloom decontamination: superset of exact at tight m, equal at wide m, bounded probe") {
@@ -271,11 +266,12 @@ class TextDedupSpec extends SparkSpec {
       numHashes = 4, k = 3, minOverlap = 2)
       .select("doc_id").as[Long].collect().toSet
     assert(wide == exact)
-    // the benchmark bound is probed up front, contaminated-style
-    val e = intercept[IllegalArgumentException] {
+    // the benchmark bound is enforced in the plan, contaminated-style:
+    // bloomBits' own collect fails
+    val e = messageChain(intercept[Exception] {
       Dedup.bloomBits(docs, "ts", maxBenchRows = 2)
-    }
-    assert(e.getMessage.contains("bloomBits"), e.getMessage)
+    })
+    assert(e.contains("bloomBits: benchmark exceeds"), e)
   }
 
   test("semantic decontamination: threshold flags copies not strangers, guards enforced") {
@@ -303,12 +299,11 @@ class TextDedupSpec extends SparkSpec {
         tauNum = 99, tauDen = 100)
     }
     assert(e1.getMessage.contains("2^53"), e1.getMessage)
-    // the broadcast contract is probed up front, contaminated-style
-    val e2 = intercept[IllegalArgumentException] {
-      Ann.contaminatedSemantic(qc, "vec_id", "qvec", qc, "vec_id", "qvec",
-        maxBenchRows = 2)
-    }
-    assert(e2.getMessage.contains("cannot broadcast"), e2.getMessage)
+    // the broadcast contract fails the first action, contaminated-style
+    val over = Ann.contaminatedSemantic(qc, "vec_id", "qvec", qc, "vec_id", "qvec",
+      maxBenchRows = 2)
+    val e2 = messageChain(intercept[Exception](over.collect()))
+    assert(e2.contains("cannot broadcast"), e2)
   }
 
   test("tfidfTopTerms: rare terms outrank ubiquitous ones, integer scores exact") {
@@ -356,12 +351,11 @@ class TextDedupSpec extends SparkSpec {
         "label", k = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(tied(1L) == 3L)
-    // the seed-set bound is probed up front
-    val e = intercept[IllegalArgumentException] {
-      Ann.knnPropagate(corpus, "vec_id", "embedding", seeds, "vec_id",
-        "embedding", "label", k = 2, maxLabeledRows = 2)
-    }
-    assert(e.getMessage.contains("cannot broadcast"), e.getMessage)
+    // the seed-set bound fails the first action
+    val over = Ann.knnPropagate(corpus, "vec_id", "embedding", seeds, "vec_id",
+      "embedding", "label", k = 2, maxLabeledRows = 2)
+    val e = messageChain(intercept[Exception](over.collect()))
+    assert(e.contains("cannot broadcast"), e)
   }
 
   test("kmeansRefine: one Lloyd step lands on cluster means; empty clusters persist") {
@@ -537,10 +531,9 @@ class TextDedupSpec extends SparkSpec {
       Ann.signProject(qz, "vec_id", "qvec", outDim = 65, seed = 77)
     }
     assert(ex.getMessage.contains("outDim"))
-    val probe = intercept[IllegalArgumentException] {
-      Ann.jlTopK(emb, emb, "vec_id", "embedding", 5, maxQueryRows = 10)
-    }
-    assert(probe.getMessage.contains("jlTopK"))
+    val over = Ann.jlTopK(emb, emb, "vec_id", "embedding", 5, maxQueryRows = 10)
+    val bound = messageChain(intercept[Exception](over.collect()))
+    assert(bound.contains("jlTopK"), bound)
   }
 
   test("recallReport: self-recall 1.0, disjoint tier 0.0, partial counts exact") {
@@ -558,19 +551,17 @@ class TextDedupSpec extends SparkSpec {
     assert(out("none") == ((4L, 0L, 0.0)))
   }
 
-  test("ANN broadcast contract: a corpus-sized query set fails at the call site") {
+  test("ANN broadcast contract: a corpus-sized query set fails at the first action") {
     // The forced broadcast would otherwise OOM the driver with a stack
-    // trace pointing at an executor; the probe names the fix instead.
+    // trace pointing at an executor; the in-plan bound names the fix instead.
     val emb = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
-    val bf = intercept[IllegalArgumentException] {
-      Ann.bruteForceTopK(emb, emb, "vec_id", "embedding", 5, maxQueryRows = 10)
-    }
-    assert(bf.getMessage.contains("bruteForceTopK") &&
-      bf.getMessage.contains("lshTopK(broadcastQueries = false)"))
-    val lsh = intercept[IllegalArgumentException] {
-      Ann.lshTopK(emb, emb, "vec_id", "embedding", 5, maxQueryRows = 10)
-    }
-    assert(lsh.getMessage.contains("broadcastQueries = false"))
+    val bfOver = Ann.bruteForceTopK(emb, emb, "vec_id", "embedding", 5, maxQueryRows = 10)
+    val bf = messageChain(intercept[Exception](bfOver.collect()))
+    assert(bf.contains("bruteForceTopK") &&
+      bf.contains("lshTopK(broadcastQueries = false)"), bf)
+    val lshOver = Ann.lshTopK(emb, emb, "vec_id", "embedding", 5, maxQueryRows = 10)
+    val lsh = messageChain(intercept[Exception](lshOver.collect()))
+    assert(lsh.contains("broadcastQueries = false"), lsh)
     // the opt-out path plans shuffle joins and stays guard-free
     assert(Ann.lshTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 3,
       tables = 8, planes = 3, broadcastQueries = false, maxQueryRows = 1).count() > 0)
@@ -597,13 +588,12 @@ class TextDedupSpec extends SparkSpec {
   test("dedupLines probe trips when the over-threshold line set is not bounded") {
     // Degenerate corpus: EVERY line is over-threshold, so the "bounded
     // boilerplate set" contract is broken and the broadcast would OOM at
-    // scale — the probe must fail at the call site with the fix named.
+    // scale — the first action must fail with the fix named.
     import SparkSpec.spark.implicits._
     val docs = Seq((1L, "a\nb"), (2L, "a\nb"), (3L, "a\nb")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      graft.text.TextOps.dedupLines(docs, "doc_id", "text", maxBoilerplateLines = 1)
-    }
-    assert(e.getMessage.contains("maxBoilerplateLines"))
+    val over = graft.text.TextOps.dedupLines(docs, "doc_id", "text", maxBoilerplateLines = 1)
+    val e = messageChain(intercept[Exception](over.collect()))
+    assert(e.contains("maxBoilerplateLines"), e)
   }
 
   test("native simhashColumn / repetitionColumns are bit-equal to their keyed-agg forms") {

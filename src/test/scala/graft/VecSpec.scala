@@ -215,10 +215,13 @@ class VecSpec extends SparkSpec {
     // pool-exhaustion: k beyond the pool stops cleanly
     val all = Ann.mmrSelect(rows, "id", "v", "rel", k = 10)
     assert(all.count() == 4)
-    // bounded-pool contract enforced
-    val e = intercept[IllegalArgumentException] {
+    // bounded-pool contract enforced: the first round fails with the
+    // message, and the persisted pool does not outlive the failure
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = messageChain(intercept[Exception] {
       Ann.mmrSelect(rows, "id", "v", "rel", k = 2, maxCandidates = 2)
-    }
-    assert(e.getMessage.contains("candidate pool"))
+    })
+    assert(e.contains("mmrSelect: candidate pool exceeds 2 rows"), e)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
   }
 }

@@ -93,11 +93,10 @@ class VocabSpec extends SparkSpec {
 
   test("benchmarkOverlap: the broadcast probe trips on a corpus-sized benchmark") {
     val big = (0L until 40L).map(i => (i, Seq("a", "b", "c"))).toDF("doc_id", "ts")
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.benchmarkOverlap(big, "doc_id", "ts", big, "doc_id", "ts",
-        maxBenchRows = 10)
-    }
-    assert(ex.getMessage.contains("cannot broadcast"))
+    val over = Dedup.benchmarkOverlap(big, "doc_id", "ts", big, "doc_id", "ts",
+      maxBenchRows = 10)
+    val ex = messageChain(intercept[Exception](over.collect()))
+    assert(ex.contains("cannot broadcast"), ex)
   }
 
   test("piiIncidence: per-pattern flags, and a post-redaction run reads zero") {
