@@ -44,6 +44,11 @@ object Ann {
       s"cannot broadcast. $fix, or raise maxQueryRows if the driver " +
       "genuinely fits the larger broadcast"
 
+  /** The fix named by the sign-LSH operators' bucket occupancy guard
+    * ([[graft.functions.Guards.occupancy]]). */
+  private val AddPlanes =
+    "Add planes (halves expected occupancy per plane) or raise maxBucket"
+
   /** Exact top-k neighbors for each query vector.
     *
     * The query side broadcasts BY CONTRACT (the standard ANN-serving
@@ -264,18 +269,10 @@ object Ann {
         .select(col(idAs), col(vAs),
           posexplode(graft.functions.SignBuckets(col(vAs), hp)).as(Seq("table", "bucket")))
     // Occupancy guard on ONE side suffices (every candidate pair has one
-    // row in the guarded stream) — the Dedup.guardOccupancy pattern on
-    // the join's own (table, bucket) partitioning, no extra exchange.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("table", "bucket")
-    val ab = bucketed(a, "src_id", "__av")
-      .withColumn("__occ", count(lit(1)).over(w))
-      .withColumn("src_id",
-        when(col("__occ") <= maxBucket, col("src_id")).otherwise(raise_error(concat(
-          lit("marginMineLsh: bucket occupancy "), col("__occ"),
-          lit(s" exceeds maxBucket=$maxBucket (table "), col("table"),
-          lit(") — candidate pairs grow quadratically in occupancy; " +
-            "add planes (halves expected occupancy per plane) or raise maxBucket")))))
-      .drop("__occ")
+    // row in the guarded stream), on the join's own (table, bucket)
+    // partitioning; it rewrites the id, so that partitioning survives.
+    val ab = Guards.occupancy(bucketed(a, "src_id", "__av"), Seq("table", "bucket"),
+      "src_id", "maxBucket", maxBucket, "marginMineLsh: bucket", AddPlanes)
     val bb = bucketed(b, "dst_id", "__bv")
     val pairs = ab.join(bb, Seq("table", "bucket"))
       .select(col("src_id"), col("dst_id"),
@@ -1387,31 +1384,25 @@ object Ann {
         md5(concat_ws(",", col("qvec").cast("array<string>"))).as("xkey"),
         col("qvec"))
 
-  /** Sign-LSH bucket rows over an [[embeddingStore]]-shaped frame:
-    * (tbl, bucket, idCol, qvec) — the embedding near tier's
-    * [[graft.dedup.Dedup.banded]] analog. The int8 qvec (dim bytes)
-    * rides the shuffle instead of the cast doubles (8× fewer bytes);
-    * consumers cast at the verify, where integer dots stay exact in
-    * double. */
-  def signBucketRows(store: DataFrame, idCol: String,
-      hp: Array[Array[Array[Double]]]): DataFrame =
-    store.select(col(idCol), col("qvec"),
-        posexplode(graft.functions.SignBuckets(col("qvec").cast("array<double>"), hp))
-          .as(Seq("tbl", "bucket")))
-      .select(col("tbl"), col("bucket"), col(idCol), col("qvec"))
-
   /** The embedding near tier's [[graft.sources.Store]] layout: an
-    * [[embeddingStore]]'s [[signBucketRows]] bucketed by the FULL (tbl,
-    * bucket) join key — [[graft.dedup.Dedup.bandStore]]'s cosine
-    * edition. Admission's store-side near join reads buckets in place;
-    * only the batch shuffles. Pass `Store.read(spark, table)` to
+    * [[embeddingStore]]'s sign-LSH bucket rows (tbl, bucket, vec_id,
+    * qvec) — [[graft.dedup.Dedup.bandStore]]'s cosine edition — bucketed
+    * by the FULL (tbl, bucket) join key. The int8 qvec (dim bytes) rides
+    * the shuffle instead of the cast doubles (8× fewer bytes); consumers
+    * cast at the verify, where integer dots stay exact in double.
+    * Admission's store-side near join reads buckets in place; only the
+    * batch shuffles. Pass `Store.read(spark, table)` to
     * [[graft.text.Curation.admitEmbedding]]'s `storeBuckets`. The exact
     * tier is [[graft.dedup.Dedup.exactStore]]`("qvec", "vec_id")`. */
   def signBucketStore(seed: Long = 42, tables: Int = 6, planes: Int = 8,
-      dim: Int = 64): StoreKind =
-    StoreKind("sign_buckets",
-      signBucketRows(_, "vec_id", hyperplanes(seed, tables, planes, dim)),
+      dim: Int = 64): StoreKind = {
+    val hp = hyperplanes(seed, tables, planes, dim)
+    StoreKind("sign_buckets", _.select(col("vec_id"), col("qvec"),
+        posexplode(graft.functions.SignBuckets(col("qvec").cast("array<double>"), hp))
+          .as(Seq("tbl", "bucket")))
+        .select(col("tbl"), col("bucket"), col("vec_id"), col("qvec")),
       Seq("tbl", "bucket"), sorted = false)
+  }
 
   /** Deterministic hyperplane matrix: `tables` x `planes` hyperplanes of
     * dimension `dim`, components in [-1, 1) derived from splitmix-style
@@ -1804,16 +1795,10 @@ object Ann {
       df.select(id.as(idAs),
         posexplode(graft.functions.SignBuckets(vec.cast("array<double>"), hp))
           .as(Seq("table", "bucket")))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("table", "bucket")
-    val lb = bucketed(labeled, col(labeledIdCol), "__lid", col(labeledVecCol))
-      .withColumn("__occ", count(lit(1)).over(w))
-      .withColumn("__lid",
-        when(col("__occ") <= maxBucket, col("__lid")).otherwise(raise_error(concat(
-          lit("knnPropagateLsh: labeled-bucket occupancy "), col("__occ"),
-          lit(s" exceeds maxBucket=$maxBucket (table "), col("table"),
-          lit(") — candidate pairs grow quadratically in occupancy; " +
-            "add planes (halves expected occupancy per plane) or raise maxBucket")))))
-      .drop("__occ")
+    val lb = Guards.occupancy(
+      bucketed(labeled, col(labeledIdCol), "__lid", col(labeledVecCol)),
+      Seq("table", "bucket"), "__lid", "maxBucket", maxBucket,
+      "knnPropagateLsh: labeled-bucket", AddPlanes)
     val cb = bucketed(corpus, col(idCol), idCol, col(vecCol))
     val cand = cb.join(lb, Seq("table", "bucket"))
       .filter(col(idCol) =!= col("__lid"))

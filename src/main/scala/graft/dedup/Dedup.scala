@@ -199,24 +199,13 @@ object Dedup {
     * undersized for the corpus — fail loudly with the fix in the message
     * instead of going quadratic. The occupancy count is a window over
     * the same (band, key) partitioning the candidate join shuffles on
-    * anyway, over ids-only rows — the guard adds a per-partition count,
-    * not a new shuffle pattern, and the window's output partitioning and
-    * sort order satisfy the join's requirements so no exchange is added. */
+    * anyway, over ids-only rows ([[graft.functions.Guards.occupancy]]). */
   private def guardOccupancy(banded: DataFrame, keyCol: String,
-      maxBucket: Int, op: String, groupCols: Seq[String] = Nil): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((groupCols :+ "band" :+ keyCol).map(col): _*)
-    banded
-      .withColumn("__occ", count(lit(1)).over(w))
-      .withColumn(keyCol,
-        when(col("__occ") <= maxBucket, col(keyCol)).otherwise(raise_error(concat(
-          lit(s"$op: bucket occupancy "), col("__occ"),
-          lit(s" exceeds maxBucket=$maxBucket (band "), col("band"),
-          lit(") — candidate pairs grow quadratically in occupancy. Run " +
-            "Dedup.exact BEFORE near-dup banding (clone families are the " +
-            "classic cause), or resize the banding / raise maxBucket")))))
-      .drop("__occ")
-  }
+      maxBucket: Int, op: String, groupCols: Seq[String] = Nil): DataFrame =
+    Guards.occupancy(banded, groupCols :+ "band" :+ keyCol, keyCol,
+      "maxBucket", maxBucket, s"$op: bucket", "Run Dedup.exact BEFORE near-dup " +
+        "banding (clone families are the classic cause), or resize the banding " +
+        "/ raise maxBucket")
 
   /** Banded signature rows: one (idCol, sigCol, band, bkey) row per band,
     * with the degeneration guard — slicing past the signature would give
@@ -357,17 +346,9 @@ object Dedup {
       explode(expr(
         s"slice(sh, 1, size(sh) - ((size(sh) * $tNum + ${tDen - 1}) div $tDen) + 1)"))
         .as("ph"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("ph")
-    val probe = prefixes
-      .withColumn("__occ", count(lit(1)).over(w))
-      .withColumn("ph", when(col("__occ") <= maxBucket, col("ph"))
-        .otherwise(raise_error(concat(
-          lit("jaccardJoin: prefix bucket occupancy "), col("__occ"),
-          lit(s" exceeds maxBucket=$maxBucket — candidate pairs grow " +
-            "quadratically in occupancy. Run Dedup.exact first (clone " +
-            "families are the classic cause), raise the threshold, or " +
-            "move this corpus to the LSH tier")))))
-      .drop("__occ")
+    val probe = Guards.occupancy(prefixes, Seq("ph"), "ph", "maxBucket", maxBucket,
+      "jaccardJoin: prefix bucket", "Run Dedup.exact first (clone families are " +
+        "the classic cause), raise the threshold, or move this corpus to the LSH tier")
     val cand = probe
       .select(col("ph"), col(idCol).as("id1"), col("n").as("n1"))
       .join(prefixes.select(col("ph"), col(idCol).as("id2"), col("n").as("n2")),
@@ -628,15 +609,6 @@ object Dedup {
         shiftright(col(simCol), b * bitsPerBand).bitwiseAND(lit((1L << bitsPerBand) - 1))
       }: _*)).as(Seq("band", "bval")))
 
-  /** [[simhashBanded]] plus the hot-bucket occupancy guard — the probe
-    * side of an admission's Hamming candidate join ([[bandedGuarded]]'s
-    * analog). */
-  def simhashBandedGuarded(df: DataFrame, idCol: String, simCol: String,
-      bands: Int, bitsPerBand: Int, op: String,
-      maxBucket: Int = 100000): DataFrame =
-    guardOccupancy(simhashBanded(df, idCol, simCol, bands, bitsPerBand),
-      "bval", maxBucket, op)
-
   /** Banded SimHash near-dup pairs — the [[simhash]] family's analog of
     * [[lshCandidates]]+verify: split the signature into `bands` contiguous
     * `bitsPerBand`-bit bands; docs agreeing on ANY band are candidates
@@ -676,10 +648,7 @@ object Dedup {
       if (bitsPerBand > 0) bitsPerBand
       else math.min(60 / bands, graft.ann.Ann.planesForOccupancy(
         math.max(1L, df.count())))
-    val banded = df.select(col(idCol),
-      posexplode(array((0 until bands).map { b =>
-        shiftright(col(simCol), b * bpb).bitwiseAND(lit((1L << bpb) - 1))
-      }: _*)).as(Seq("band", "bval")))
+    val banded = simhashBanded(df, idCol, simCol, bands, bpb)
     // One guarded side suffices (see lshCandidates).
     val a = guardOccupancy(banded, "bval", maxBucket, "simhashNearDup")
       .select(col("band"), col("bval"), col(idCol).as("id1"))

@@ -26,27 +26,20 @@ object Linkage {
     * pairing is candidate+verify (id1 < id2, then one codegen
     * `levenshtein` per candidate — never materialized unfiltered). The
     * occupancy guard is enforced, not advisory: a block exceeding
-    * `maxBlock` raises at runtime with the fix in the message (the
-    * [[graft.dedup.Dedup]] guardOccupancy pattern — the count window
-    * runs on the same block-keyed partitioning the join needs, adding
-    * no exchange). Levenshtein is an exact integer — bit-stable on any
-    * engine. Output: (id1, id2, s1, s2, dist). */
+    * `maxBlock` raises at runtime with the fix in the message
+    * ([[graft.functions.Guards.occupancy]] — the count window runs on
+    * the same block-keyed partitioning the join needs). Levenshtein is
+    * an exact integer — bit-stable on any engine. Output: (id1, id2, s1,
+    * s2, dist). */
   def fuzzyPairs(df: DataFrame, idCol: String, strCol: String,
       blockKey: Column => Column, maxDist: Int,
       maxBlock: Int = 10000): DataFrame = {
     require(maxDist >= 0, s"fuzzyPairs: maxDist must be >= 0, got $maxDist")
     val names = df.groupBy(col(strCol).as("__s")).agg(min(col(idCol)).as("__id"))
       .withColumn("__b", blockKey(col("__s")))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("__b")
-    val guarded = names
-      .withColumn("__occ", count(lit(1)).over(w))
-      .withColumn("__b",
-        when(col("__occ") <= maxBlock, col("__b")).otherwise(raise_error(concat(
-          lit("fuzzyPairs: block occupancy "), col("__occ"),
-          lit(s" exceeds maxBlock=$maxBlock — candidate pairs grow "),
-          lit("quadratically in occupancy. Use a more selective blockKey " +
-            "(longer prefix, more tokens), or raise maxBlock")))))
-      .drop("__occ")
+    val guarded = graft.functions.Guards.occupancy(names, Seq("__b"), "__b",
+      "maxBlock", maxBlock, "fuzzyPairs: block", "Use a more selective blockKey " +
+        "(longer prefix, more tokens), or raise maxBlock")
     val l = guarded.select(col("__b"), col("__id").as("id1"), col("__s").as("s1"))
     val r = guarded.select(col("__b"), col("__id").as("id2"), col("__s").as("s2"))
     // THRESHOLD-BOUNDED distance on the quadratic within-block hot

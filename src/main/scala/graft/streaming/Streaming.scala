@@ -7,10 +7,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.ann.Ann
-import graft.dedup.Dedup
-import graft.sources.{Store, StoreKind}
-import graft.text.Curation
+import graft.sources.Store
+import graft.text.Admission
 
 /** Structured Streaming surface (SURVEY.md §2.6 streaming rows + the
   * ServerDataStream/start_server analog, reference: fuel/streams.py:186-256,
@@ -153,11 +151,8 @@ object Streaming {
   def admitStream(docs: DataFrame, storeTable: String, corpusPath: String,
       checkpoint: String, bandedTable: Option[String] = None,
       bands: Int = 4, rowsPerBand: Int = 2): StreamingQuery =
-    admissionLoop(docs, storeTable, corpusPath, checkpoint,
-      Dedup.exactStore(), bandedTable.map(_ -> Dedup.bandStore(bands, rowsPerBand)),
-      admit = (batch, store, storeBands) => Curation.admit(withTokens(batch),
-        store, bands = bands, rowsPerBand = rowsPerBand, storeBands = storeBands),
-      signatures = Dedup.signatureStore(_, "doc_id", "text", "ts"))
+    admissionLoop(withTokens(docs), storeTable, corpusPath, checkpoint,
+      Admission.minhash(bands, rowsPerBand), bandedTable)
 
   /** [[admitStream]] at SimHash parity — the streaming admission loop for
     * a corpus that dedups by Hamming distance: each micro-batch admits
@@ -171,13 +166,9 @@ object Streaming {
   def admitSimhashStream(docs: DataFrame, storeTable: String, corpusPath: String,
       checkpoint: String, bandedTable: Option[String] = None,
       bands: Int = 4, bitsPerBand: Int = 15, maxHamming: Int = 3): StreamingQuery =
-    admissionLoop(docs, storeTable, corpusPath, checkpoint,
-      Dedup.exactStore("simhash"),
-      bandedTable.map(_ -> Dedup.simhashBandStore(bands, bitsPerBand)),
-      admit = (batch, store, storeBands) => Curation.admitSimhash(withTokens(batch),
-        store, bands = bands, bitsPerBand = bitsPerBand, maxHamming = maxHamming,
-        storeBands = storeBands),
-      signatures = Dedup.simhashStore(_, "doc_id", "text", "ts"))
+    admissionLoop(withTokens(docs), storeTable, corpusPath, checkpoint,
+      Admission.simhash(bands = bands, bitsPerBand = bitsPerBand,
+        maxHamming = maxHamming), bandedTable)
 
   /** [[admitStream]] at EMBEDDING parity — incremental admission for a
     * vector corpus that dedups by cosine: each micro-batch admits via
@@ -194,22 +185,17 @@ object Streaming {
       seed: Long = 42, tables: Int = 6, planes: Int = 8,
       dim: Int = 64): StreamingQuery =
     admissionLoop(vecs, storeTable, corpusPath, checkpoint,
-      Dedup.exactStore("qvec", "vec_id"),
-      bucketTable.map(_ -> Ann.signBucketStore(seed, tables, planes, dim)),
-      admit = (batch, store, storeBuckets) => Curation.admitEmbedding(batch,
-        store, threshold = threshold, seed = seed, tables = tables,
-        planes = planes, dim = dim, storeBuckets = storeBuckets),
-      signatures = Ann.embeddingStore(_, "vec_id", "embedding"))
+      Admission.embedding(threshold, seed, tables, planes, dim), bucketTable)
 
-  private def withTokens(batch: DataFrame): DataFrame =
-    batch.withColumn("ts", graft.text.TextOps.tokens(col("text")))
+  private def withTokens(docs: DataFrame): DataFrame =
+    docs.withColumn("ts", graft.text.TextOps.tokens(col("text")))
 
   /** The one foreachBatch body of the three admission streams. Each
-    * micro-batch is admitted against the exact store (and the near-tier
-    * table, when given) as of the batch boundary; the admitted rows land
-    * under `corpusPath`, and their `signatures` land in both stores via
-    * [[graft.sources.Store.land]], so batch N+1 sees everything admitted
-    * through batch N. foreachBatch is the right tool, not a
+    * micro-batch is admitted by `family` against the exact store (and
+    * the `nearTable`, when given) as of the batch boundary; the admitted
+    * rows land under `corpusPath`, and their signatures land in both
+    * stores via [[graft.sources.Store.land]], so batch N+1 sees
+    * everything admitted through batch N. foreachBatch is the right tool, not a
     * stream-stream join: admission needs the store AS OF the batch
     * boundary (a self-feeding loop no watermark can express), and each
     * batch re-reads the table so the previous batch's landing is visible.
@@ -224,10 +210,8 @@ object Streaming {
     * session cache after each batch — run admission as its own job, not
     * inside a session whose caches you need. */
   private def admissionLoop(rows: DataFrame, storeTable: String,
-      corpusPath: String, checkpoint: String, exact: StoreKind,
-      near: Option[(String, StoreKind)],
-      admit: (DataFrame, DataFrame, Option[DataFrame]) => DataFrame,
-      signatures: DataFrame => DataFrame): StreamingQuery =
+      corpusPath: String, checkpoint: String, family: Admission,
+      nearTable: Option[String]): StreamingQuery =
     rows.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -238,14 +222,14 @@ object Streaming {
         // to the materialized batch-sized RDD, which both landings then
         // reference. (Executor-local: a lost executor fails the batch —
         // foreachBatch replays it, and every sink here overwrites.)
-        val admitted = admit(batch, Store.read(spark, storeTable),
-          near.map { case (t, _) => Store.read(spark, t) }).localCheckpoint(true)
+        val admitted = family(batch, Store.read(spark, storeTable),
+          nearTable.map(Store.read(spark, _))).localCheckpoint(true)
         admitted.withColumn(Store.BatchCol, lit(batchId))
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy(Store.BatchCol).parquet(corpusPath)
-        val sigs = signatures(admitted).persist()
-        Store.land(sigs, exact, storeTable, batchId)
-        near.foreach { case (t, kind) => Store.land(sigs, kind, t, batchId) }
+        val sigs = family.signatures(admitted).persist()
+        Store.land(sigs, family.exact, storeTable, batchId)
+        nearTable.foreach(Store.land(sigs, family.near, _, batchId))
         sigs.unpersist()
         spark.catalog.clearCache()
         ()

@@ -1,10 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.sources.SplitSource
+import graft.functions.Guards
+import graft.sources.{SplitSource, StoreKind}
 import graft.transform.Cache
 
 /** The flagship five-stage LLM-corpus curation pipeline, as a first-class
@@ -611,236 +612,45 @@ object Curation {
     * in production (data arrives in shards; the curated corpus is frozen).
     * `fresh` is (doc_id, text, ts); `store` is the retained
     * [[graft.dedup.Dedup.signatureStore]] of the existing corpus
-    * (doc_id, xkey, sig). Returns the admitted fresh rows.
-    *
-    * Three drop stages:
-    *   1. exact-within: duplicate xkeys inside the batch collapse to the
-    *      min doc_id ([[graft.dedup.Dedup.exact]] — the skew-safe agg form);
-    *   2. exact-cross: anti-join surviving xkeys against the store's;
-    *   3. near: ONE banded-LSH pass — a surviving batch doc drops if its
-    *      signature agrees >= `sigAgree` ([[graft.dedup.Dedup.sigAgreement]],
-    *      the estimated Jaccard — the store keeps no text, so the estimate
-    *      IS the contract; size numHashes accordingly) with any STORE doc
-    *      or any LOWER-ID batch doc sharing a band bucket. The within-batch
-    *      rule is the one-pass greedy form: the shadowing lower-id doc may
-    *      itself be store-dropped, in which case the higher-id doc is a
-    *      near-dup of a near-dup — transitively similar, and dropping it is
-    *      the conservative call. (The alternative — re-banding the
-    *      survivors of a separate cross pass — costs a second guarded
-    *      window, join, and distinct for a set that differs only on those
-    *      transitive chains.)
-    *
-    * Exact-within runs FIRST for the same reason [[dedupe]] stages it
-    * first: clone families inside the batch are the hot-bucket pathology
-    * the occupancy guard would otherwise trip on. Scale shape: the batch
-    * side is the small one everywhere; the store contributes one
-    * key-partitioned stream per join (write it bucketed by xkey /
-    * pre-banded to make those joins shuffle-free); signatures, never
-    * text, cross the wire — the store side carries its 8-long signature
-    * through the band shuffle, which is what saves the verify rejoin.
-    * `store` is consumed TWICE (exact anti-join, banding) — pass the
-    * cheap-to-rescan form (a pruned parquet read of the retained
-    * artifact) or a cached frame, not an expensive lineage.
-    *
-    * The batch survivor frame persists unconditionally (the [[curateFull]]
-    * rationale): it is the batch's smallest shape (id, xkey, sig), feeds
-    * three consumers (banding, verify rejoin, final anti-join), and its
-    * lineage holds the exact stages' agg and anti-join shuffles. */
+    * (doc_id, xkey, sig). Returns the admitted fresh rows; the stages are
+    * [[Admission]]'s. MinHash edition: the key rows are
+    * [[graft.dedup.Dedup.bandStore]]'s (band, bkey), and a batch doc is a
+    * near-dup when its signature agrees >= `sigAgree`
+    * ([[graft.dedup.Dedup.sigAgreement]], the estimated Jaccard — the
+    * store keeps no text, so the estimate IS the contract; size
+    * numHashes accordingly). Pass `storeBands` (a bandStore table) to
+    * read the store's banded rows bucketed in place. */
   def admit(fresh: DataFrame, store: DataFrame,
       bands: Int = 4, rowsPerBand: Int = 2, numHashes: Int = 8, k: Int = 3,
-      sigAgree: Double = 0.5, storeBands: Option[DataFrame] = None): DataFrame = {
-    val fstore = Cache()(Dedup.signatureStore(fresh, "doc_id", "text", "ts", numHashes, k))
-    // 1. exact-within: min doc_id per xkey survives.
-    val w1 = fstore.join(
-      Dedup.exact(fstore, col("doc_id"), col("xkey"))
-        .select(col("keep_id").as("doc_id")),
-      Seq("doc_id"))
-    // 2. exact-cross: batch xkeys absent from the store.
-    val w2 = Cache()(w1.join(store.select("xkey"), Seq("xkey"), "left_anti"))
-    // 3. near: against store ∪ lower-id batch peers. Both sides carry
-    // their signature through the band shuffle (8 longs), so the verify
-    // is a filter on the joined row — no rejoin, no second distinct.
-    val sigs = w2.filter(col("sig").isNotNull).select("doc_id", "sig")
-    val left = Dedup.bandedGuarded(sigs, "doc_id", "sig", bands, rowsPerBand,
-        op = "admit")
-      .select(col("band"), col("bkey"), col("doc_id"), col("sig").as("fsig"))
-    def verified(cand: DataFrame): DataFrame = cand
-      .filter(Dedup.sigAgreement(col("fsig"), col("rsig")) >= sigAgree)
-      .select("doc_id")
-    val withinRight = Dedup.banded(sigs, "doc_id", "sig", bands, rowsPerBand)
-      .select(col("band"), col("bkey"), col("doc_id").as("rid"), col("sig").as("rsig"))
-    val nearDrop = (storeBands match {
-      // Pre-banded bucketed store ([[graft.dedup.Dedup.bandStore]]):
-      // join it SEPARATELY so its bucket partitioning survives (a union
-      // with the batch bands would erase it) — the corpus-sized banded
-      // stream then never re-shuffles per batch. Same drops as the fused
-      // form: both evaluate the same (w2 × store) and (w2 × w2) pairs.
-      case Some(sb) =>
-        val storeDrop = verified(left.join(
-          sb.select(col("band"), col("bkey"), col("sig").as("rsig")),
-          Seq("band", "bkey")))
-        val withinDrop = verified(left.join(withinRight, Seq("band", "bkey"))
-          .filter(col("rid") < col("doc_id")))
-        storeDrop.unionByName(withinDrop)
-      // Fused single pass: right = store bands ∪ batch bands, one join,
-      // one occupancy guard — the fewest stages when the store side is
-      // an unbucketed frame that must shuffle anyway.
-      case None =>
-        val right = Dedup.banded(store.filter(col("sig").isNotNull), "doc_id", "sig",
-            bands, rowsPerBand)
-          .select(col("band"), col("bkey"), lit(true).as("is_store"),
-            col("doc_id").as("rid"), col("sig").as("rsig"))
-          .unionByName(withinRight.withColumn("is_store", lit(false)))
-        verified(left.join(right, Seq("band", "bkey"))
-          .filter(col("is_store") || col("rid") < col("doc_id")))
-    }).distinct()
-    fresh.join(w2.join(nearDrop, Seq("doc_id"), "left_anti").select("doc_id"), Seq("doc_id"))
-  }
+      sigAgree: Double = 0.5, storeBands: Option[DataFrame] = None): DataFrame =
+    Admission.minhash(bands, rowsPerBand, numHashes, k, sigAgree)(fresh, store, storeBands)
 
-  /** [[admit]] at SimHash parity — incremental admission for a corpus
-    * that dedups by Hamming distance ([[graft.dedup.Dedup.simhashNearDup]]'s
-    * family) rather than estimated Jaccard. `store` is the retained
-    * [[graft.dedup.Dedup.simhashStore]] (doc_id, xkey, simhash) of the
-    * frozen corpus; `fresh` is (doc_id, text, ts). Same three drop
-    * stages as [[admit]]: exact-within (min doc_id per xkey), exact-cross
-    * (xkey anti-join), then ONE banded near pass — a surviving batch doc
-    * drops if it lies within `maxHamming` of any STORE doc or any
-    * LOWER-ID batch peer sharing a band value. The one-long signature
-    * rides the band shuffle on both sides, so the Hamming verify is a
-    * filter on the joined row (no rejoin — cheaper even than the MinHash
-    * path, whose signatures are 8 longs). Recall is exactly 1 for
-    * `maxHamming <= bands - 1` (pigeonhole, enforced); occupancy guard
-    * on the batch side, [[admit]]'s exact-within-first rationale. Pass
-    * `storeBands` (a [[graft.dedup.Dedup.simhashBandStore]] table)
-    * to read the store's banded rows bucketed in place — [[admit]]'s
-    * exchange-free store side, Hamming edition. */
+  /** [[admit]] by Hamming distance ([[graft.dedup.Dedup.simhashNearDup]]'s
+    * family). `store` is a [[graft.dedup.Dedup.simhashStore]] (doc_id,
+    * xkey, simhash); the key rows are
+    * [[graft.dedup.Dedup.simhashBandStore]]'s (band, bval), and a batch
+    * doc is a near-dup within `maxHamming` bits. Recall is exactly 1 for
+    * `maxHamming <= bands - 1` (pigeonhole, enforced). */
   def admitSimhash(fresh: DataFrame, store: DataFrame, bits: Int = 60,
       bands: Int = 4, bitsPerBand: Int = 15, maxHamming: Int = 3,
-      storeBands: Option[DataFrame] = None): DataFrame = {
-    require(maxHamming <= bands - 1,
-      s"banding with $bands bands only guarantees recall for Hamming <= ${bands - 1}, " +
-        s"got maxHamming=$maxHamming (raise bands or lower maxHamming)")
-    val fstore = Cache()(Dedup.simhashStore(fresh, "doc_id", "text", "ts", bits))
-    val w1 = fstore.join(
-      Dedup.exact(fstore, col("doc_id"), col("xkey"))
-        .select(col("keep_id").as("doc_id")),
-      Seq("doc_id"))
-    val w2 = Cache()(w1.join(store.select("xkey"), Seq("xkey"), "left_anti"))
-    val sims = w2.filter(col("simhash").isNotNull).select("doc_id", "simhash")
-    val left = Dedup.simhashBandedGuarded(sims, "doc_id", "simhash",
-        bands, bitsPerBand, op = "admitSimhash")
-      .select(col("band"), col("bval"), col("doc_id"), col("simhash").as("fsim"))
-    def verified(cand: DataFrame): DataFrame = cand
-      .filter(Dedup.hammingDistance(col("fsim"), col("rsim")) <= maxHamming)
-      .select("doc_id")
-    val withinRight = Dedup.simhashBanded(sims, "doc_id", "simhash", bands, bitsPerBand)
-      .select(col("band"), col("bval"), col("doc_id").as("rid"),
-        col("simhash").as("rsim"))
-    val nearDrop = (storeBands match {
-      // Pre-banded bucketed store ([[graft.dedup.Dedup.simhashBandStore]]):
-      // joined SEPARATELY so its (band, bval) bucket partitioning
-      // survives — [[admit]]'s split-join rationale, Hamming edition.
-      case Some(sb) =>
-        val storeDrop = verified(left.join(
-          sb.select(col("band"), col("bval"), col("simhash").as("rsim")),
-          Seq("band", "bval")))
-        val withinDrop = verified(left.join(withinRight, Seq("band", "bval"))
-          .filter(col("rid") < col("doc_id")))
-        storeDrop.unionByName(withinDrop)
-      case None =>
-        val right = Dedup
-          .simhashBanded(store.filter(col("simhash").isNotNull), "doc_id", "simhash",
-            bands, bitsPerBand)
-          .select(col("band"), col("bval"), col("doc_id").as("rid"),
-            col("simhash").as("rsim"), lit(true).as("is_store"))
-          .unionByName(withinRight.withColumn("is_store", lit(false)))
-        verified(left.join(right, Seq("band", "bval"))
-          .filter(col("is_store") || col("rid") < col("doc_id")))
-    }).distinct()
-    fresh.join(w2.join(nearDrop, Seq("doc_id"), "left_anti").select("doc_id"), Seq("doc_id"))
-  }
+      storeBands: Option[DataFrame] = None): DataFrame =
+    Admission.simhash(bits, bands, bitsPerBand, maxHamming)(fresh, store, storeBands)
 
-  /** [[admit]] at EMBEDDING parity — incremental admission for a corpus
-    * that dedups by embedding cosine ([[graft.ann.Ann.nearDupPairs]]'
-    * family, SemDeDup's regime) rather than token sketches. `store` is
-    * the retained [[graft.ann.Ann.embeddingStore]] (idCol, xkey, qvec)
-    * of the frozen corpus; `fresh` is (idCol, vecCol) raw float
-    * vectors. Same three drop stages:
-    *  1. exact-within — min id per xkey (direction-identity at int8
-    *     resolution; re-scaled copies land HERE, since quantization is
-    *     scale-invariant);
-    *  2. exact-cross — batch xkeys absent from the store;
-    *  3. near — sign-LSH buckets over the QUANTIZED vectors (the
-    *     hyperplanes are seed-derived constants, [[graft.ann.Ann.hyperplanes]]),
-    *     one fused pass against store ∪ lower-id batch peers; the
-    *     int8 vector rides the bucket shuffle on both sides (dim bytes
-    *     ≈ the MinHash signature's 64), so the cosine verify is a
-    *     FILTER on the joined row — no rejoin, no second distinct —
-    *     and integer dots keep it bit-exact cross-engine.
-    *
-    * The batch probe side runs under the LSH occupancy guard (a zero
-    * or constant-direction vector family is the hot-bucket pathology
-    * here — every member shares all sign bits); exact-within-first is
-    * the same enforced ordering rationale as [[admit]]. Sizing:
-    * `planes` grows with log2(corpus) ([[graft.ann.Ann.nearDupPairs]]'
-    * rule); raise `tables` to buy back per-plane recall. Pass
-    * `storeBuckets` (a [[graft.ann.Ann.signBucketStore]]
-    * table) to read the store's sign-bucket rows bucketed in place —
-    * [[admit]]'s exchange-free store side, cosine edition. */
+  /** [[admit]] by embedding cosine ([[graft.ann.Ann.nearDupPairs]]'
+    * family, SemDeDup's regime). `fresh` is (vec_id, embedding) raw float
+    * vectors; `store` is a [[graft.ann.Ann.embeddingStore]] (vec_id,
+    * xkey, qvec), whose xkey is direction identity at int8 resolution, so
+    * re-scaled copies drop as exact. The key rows are
+    * [[graft.ann.Ann.signBucketStore]]'s (tbl, bucket) over the quantized
+    * vectors, and a batch vector is a near-dup at cosine >= `threshold`
+    * (integer dots, bit-exact cross-engine). `planes` grows with
+    * log2(corpus) ([[graft.ann.Ann.nearDupPairs]]' rule); raise `tables`
+    * to buy back per-plane recall. */
   def admitEmbedding(fresh: DataFrame, store: DataFrame,
       threshold: Double = 0.99, seed: Long = 42, tables: Int = 6,
-      planes: Int = 8, dim: Int = 64, idCol: String = "vec_id",
-      vecCol: String = "embedding", maxBucket: Int = 100000,
-      storeBuckets: Option[DataFrame] = None): DataFrame = {
-    val fstore = Cache()(graft.ann.Ann.embeddingStore(fresh, idCol, vecCol))
-    val w1 = fstore.join(
-      Dedup.exact(fstore, col(idCol), col("xkey"))
-        .select(col("keep_id").as(idCol)),
-      Seq(idCol))
-    val w2 = Cache()(w1.join(store.select("xkey"), Seq("xkey"), "left_anti"))
-    val hp = graft.ann.Ann.hyperplanes(seed, tables, planes, dim)
-    def rows(df: DataFrame): DataFrame = graft.ann.Ann.signBucketRows(df, idCol, hp)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("tbl", "bucket")
-    val left = rows(w2)
-      .select(col("tbl"), col("bucket"), col(idCol).as("fid"), col("qvec").as("fq"))
-      .withColumn("__occ", count(lit(1)).over(w))
-      .withColumn("bucket", when(col("__occ") <= maxBucket, col("bucket"))
-        .otherwise(raise_error(concat(
-          lit("admitEmbedding: bucket occupancy "), col("__occ"),
-          lit(s" exceeds maxBucket=$maxBucket — candidate pairs grow " +
-            "quadratically in occupancy. Run the exact tiers first " +
-            "(constant-direction families are the classic cause), or " +
-            "raise planes/tables for this corpus size")))))
-      .drop("__occ")
-    def verified(cand: DataFrame): DataFrame = cand
-      .filter(graft.ann.Ann.cosine(col("fq").cast("array<double>"),
-        col("rq").cast("array<double>")) >= threshold)
-      .select(col("fid").as(idCol))
-    val withinRight = rows(w2)
-      .select(col("tbl"), col("bucket"), col(idCol).as("rid"), col("qvec").as("rq"))
-    val nearDrop = (storeBuckets match {
-      // Pre-bucketed store table ([[graft.ann.Ann.signBucketStore]]):
-      // join it SEPARATELY so its bucket partitioning survives (the
-      // [[admit]] rationale) — the store's sign-bucket stream then never
-      // re-shuffles per batch.
-      case Some(sb) =>
-        val storeDrop = verified(left.join(
-          sb.select(col("tbl"), col("bucket"), col("qvec").as("rq")),
-          Seq("tbl", "bucket")))
-        val withinDrop = verified(left.join(withinRight, Seq("tbl", "bucket"))
-          .filter(col("rid") < col("fid")))
-        storeDrop.unionByName(withinDrop)
-      // Fused single pass when the store side is an unbucketed frame.
-      case None =>
-        val right = rows(store)
-          .select(col("tbl"), col("bucket"), lit(true).as("is_store"),
-            col(idCol).as("rid"), col("qvec").as("rq"))
-          .unionByName(withinRight.withColumn("is_store", lit(false)))
-        verified(left.join(right, Seq("tbl", "bucket"))
-          .filter(col("is_store") || col("rid") < col("fid")))
-    }).distinct()
-    fresh.join(w2.join(nearDrop, Seq(idCol), "left_anti").select(idCol), Seq(idCol))
-  }
+      planes: Int = 8, dim: Int = 64,
+      storeBuckets: Option[DataFrame] = None): DataFrame =
+    Admission.embedding(threshold, seed, tables, planes, dim)(fresh, store, storeBuckets)
 
   /** Deterministic domain mixing — the pretraining stage that combines
     * curated corpora at target TOKEN proportions under a total budget
@@ -1186,4 +996,120 @@ object Curation {
       .select(col(groupCol), explode(col("__keep._2")).as("__h"))
     keyed.join(kept, Seq(groupCol, "__h")).drop("__h")
   }
+}
+
+/** One incremental-admission family: what [[Curation.admit]],
+  * [[Curation.admitSimhash]] and [[Curation.admitEmbedding]] (and their
+  * streams) do NOT share. `signatures` builds a batch's (idCol, xkey,
+  * sigCol) rows, `near` is the stored layout of the near tier, whose
+  * `project` turns those rows into key rows (its bucket columns, idCol,
+  * sigCol), and `verify` decides a candidate pair from its two
+  * signatures. [[apply]] is the one admission body. */
+private[graft] final case class Admission(op: String, idCol: String,
+    sigCol: String, signatures: DataFrame => DataFrame, near: StoreKind,
+    verify: (Column, Column) => Column) {
+
+  /** The exact tier's stored layout. */
+  def exact: StoreKind = Dedup.exactStore(sigCol, idCol)
+
+  /** Admit `fresh` against `store` (this family's exact-store rows) and
+    * return the admitted fresh rows. Three drop stages:
+    *   1. exact-within: duplicate xkeys inside the batch collapse to the
+    *      min id ([[graft.dedup.Dedup.exact]] — the skew-safe agg form);
+    *   2. exact-cross: anti-join surviving xkeys against the store's;
+    *   3. near: ONE keyed candidate pass — a surviving batch row drops if
+    *      `verify` holds against any STORE row or any LOWER-ID batch row
+    *      sharing a key row. The within-batch rule is the one-pass greedy
+    *      form: the shadowing lower-id row may itself be store-dropped, in
+    *      which case the higher-id row is a near-dup of a near-dup —
+    *      transitively similar, and dropping it is the conservative call.
+    *
+    * Exact-within runs FIRST for the reason [[Curation.dedupe]] stages
+    * it first: clone families inside the batch are the hot-bucket
+    * pathology the occupancy guard on the batch's key rows would
+    * otherwise trip on. Both sides carry their signature through the key
+    * shuffle, so the verify is a filter on the joined row — no rejoin.
+    *
+    * `storeNear` is the store's key rows read from a `near` table, which
+    * is joined SEPARATELY so its bucket partitioning survives (a union
+    * with the batch's rows would erase it): the corpus-sized stream then
+    * never re-shuffles per batch. Without it the store's key rows are
+    * built with `near.project` and joined in ONE fused pass against the
+    * union of store and batch rows, which must shuffle anyway. Both
+    * forms evaluate the same (batch × store) and (batch × batch) pairs;
+    * on an unkeyed store the fused one plans the guarded batch rows once
+    * instead of twice and ran faster (q60/q70/q82/q190 at sf0.1, 9 of
+    * 10 interleaved pairs).
+    * `store` is read twice (exact anti-join, key rows) — pass a cheap
+    * rescan or a cached frame. The batch survivor frame persists: it is
+    * the batch's smallest shape and feeds the key rows, the verify and
+    * the final anti-join. */
+  def apply(fresh: DataFrame, store: DataFrame,
+      storeNear: Option[DataFrame]): DataFrame = {
+    val keyCols = near.bucketCols
+    val keys = keyCols.map(col)
+    val sigs = Cache()(signatures(fresh))
+    // 1. exact-within: min id per xkey survives.
+    val w1 = sigs.join(Dedup.exact(sigs, col(idCol), col("xkey"))
+      .select(col("keep_id").as(idCol)), Seq(idCol))
+    // 2. exact-cross: batch xkeys absent from the store.
+    val w2 = Cache()(w1.join(store.select("xkey"), Seq("xkey"), "left_anti"))
+    // 3. near: against the store and the lower-id batch peers.
+    val rows = near.project(w2)
+    val left = Guards.occupancy(rows, keyCols, keyCols.last, "maxBucket",
+        Admission.MaxBucket, s"$op: bucket", "The batch's exact tiers ran " +
+          "first, so resize the banding for this corpus size")
+      .select(keys :+ col(idCol).as("fid") :+ col(sigCol).as("fsig"): _*)
+    val peers = rows.select(keys :+ col(idCol).as("rid") :+ col(sigCol).as("rsig"): _*)
+    def verified(cand: DataFrame): DataFrame =
+      cand.filter(verify(col("fsig"), col("rsig"))).select(col("fid").as(idCol))
+    val drops = (storeNear match {
+      case Some(sn) =>
+        verified(left.join(sn.select(keys :+ col(sigCol).as("rsig"): _*), keyCols))
+          .unionByName(verified(left.join(peers, keyCols).filter(col("rid") < col("fid"))))
+      case None =>
+        val right = near.project(store)
+          .select(keys :+ col(idCol).as("rid") :+ col(sigCol).as("rsig"): _*)
+          .withColumn("is_store", lit(true))
+          .unionByName(peers.withColumn("is_store", lit(false)))
+        verified(left.join(right, keyCols)
+          .filter(col("is_store") || col("rid") < col("fid")))
+    }).distinct()
+    fresh.join(w2.join(drops, Seq(idCol), "left_anti").select(idCol), Seq(idCol))
+  }
+}
+
+private[graft] object Admission {
+
+  /** The batch-side bucket occupancy bound. */
+  private val MaxBucket = 100000
+
+  /** MinHash signatures, verified by estimated Jaccard. */
+  def minhash(bands: Int = 4, rowsPerBand: Int = 2, numHashes: Int = 8,
+      k: Int = 3, sigAgree: Double = 0.5): Admission =
+    Admission("admit", "doc_id", "sig",
+      Dedup.signatureStore(_, "doc_id", "text", "ts", numHashes, k),
+      Dedup.bandStore(bands, rowsPerBand),
+      (a, b) => Dedup.sigAgreement(a, b) >= sigAgree)
+
+  /** SimHash signatures, verified by Hamming distance. */
+  def simhash(bits: Int = 60, bands: Int = 4, bitsPerBand: Int = 15,
+      maxHamming: Int = 3): Admission = {
+    require(maxHamming <= bands - 1,
+      s"banding with $bands bands only guarantees recall for Hamming <= ${bands - 1}, " +
+        s"got maxHamming=$maxHamming (raise bands or lower maxHamming)")
+    Admission("admitSimhash", "doc_id", "simhash",
+      Dedup.simhashStore(_, "doc_id", "text", "ts", bits),
+      Dedup.simhashBandStore(bands, bitsPerBand),
+      (a, b) => Dedup.hammingDistance(a, b) <= maxHamming)
+  }
+
+  /** Int8-quantized embeddings, verified by cosine. */
+  def embedding(threshold: Double = 0.99, seed: Long = 42, tables: Int = 6,
+      planes: Int = 8, dim: Int = 64): Admission =
+    Admission("admitEmbedding", "vec_id", "qvec",
+      graft.ann.Ann.embeddingStore(_, "vec_id", "embedding"),
+      graft.ann.Ann.signBucketStore(seed, tables, planes, dim),
+      (a, b) => graft.ann.Ann.cosine(a.cast("array<double>"),
+        b.cast("array<double>")) >= threshold)
 }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   * how it sizes shuffles from the master's threads, that sessions share
   * one executor classloader (so generated code compiles once), that
   * [[graft.sources.Store]] alone lays out persisted stores, that only
-  * the Spark bridge declares a plan's order over an RDD, and that no
-  * builder probes a row bound eagerly.
+  * the Spark bridge declares a plan's order over an RDD, that no
+  * builder probes a row bound eagerly, and that admission staging and
+  * the bucket occupancy guard are each written once.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -139,6 +140,30 @@ class ConfigSpec extends SparkSpec {
       probe.findAllIn(Files.readString(p)).map(m => s"$p: $m")
     }
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("src/main holds one admission staging: the exact-cross anti-join appears once") {
+    // Admission is one body over a signature family (graft.text.Admission);
+    // a second exact-cross anti-join against the store is a copied body.
+    val antiJoin = """\.join\(\s*store\.select\("xkey"\)\s*,[^\n]*"left_anti"\)""".r
+    val found = scalaFiles("src/main").flatMap { p =>
+      antiJoin.findAllIn(Files.readString(p)).map(m => s"$p: $m")
+    }
+    assert(found.size == 1, found.mkString("\n"))
+  }
+
+  test("the bucket occupancy window lives only in Guards.scala") {
+    // A count window over the bucket keys that feeds raise_error is
+    // Guards.occupancy; a module that writes its own has copied the guard.
+    // A plain `count(...).as("__occ")` aggregate (Sketch's HLL) is not a
+    // window and does not match.
+    val window = """"__occ"[^\n]*\.over\(""".r
+    val found = scalaFiles("src/main").filter { p =>
+      val src = Files.readString(p)
+      window.findFirstIn(src).isDefined && src.contains("raise_error")
+    }.map(_.toString).toSet
+    assert(found == Set("src/main/scala/graft/functions/Guards.scala"),
+      s"occupancy window outside Guards.scala: $found")
   }
 
   private def scalaFiles(roots: String*) = roots.flatMap { root =>

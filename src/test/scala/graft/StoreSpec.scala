@@ -33,7 +33,7 @@ class StoreSpec extends SparkSpec {
     }
   }
 
-  test("writeStore: exact-cross anti-join has no store-side exchange, batch side only") {
+  test("Store.write: exact-cross anti-join has no store-side exchange, batch side only") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
     Store.write(
       Dedup.signatureStore(mkDocs(50, "st"), "doc_id", "text", "ts"), Dedup.exactStore(),
@@ -217,7 +217,7 @@ class StoreSpec extends SparkSpec {
     assert(spark.table("pq_part_spec").count() == 250)
   }
 
-  test("writeIvfIndexPartitioned + appendIvfBatch: frozen quantizer, idempotent landings, buckets intact") {
+  test("writeIvfIndex(growing = true) + appendIvfBatch: frozen quantizer, idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_p").toString
     val emb = spark.range(200).select(col("id").as("vec_id"),
       array((0 until 8).map(d =>
@@ -302,7 +302,7 @@ class StoreSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("readStore keeps the bucket spec a bare path read would lose") {
+  test("Store.read keeps the bucket spec a bare path read would lose") {
     val store = Store.read(spark, "admit_store_spec")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
