@@ -19,6 +19,11 @@ import graft.sources.{Store, StoreKind}
   *     within matching buckets across `tables` hash tables, exact rerank of
   *     the candidate set. Recall is tunable via (planes, tables).
   *
+  * Every top-k entry point — these two, the JL, IVF and PQ tiers and the
+  * index probes — is a constructor of one private body, [[search]], over
+  * a [[Family]] that holds only what differs between them; every sign-LSH
+  * banding goes through one bucketing, [[signBucketed]].
+  *
   * Dot products run in sequential left-to-right double accumulation —
   * associativity is fixed, so the same inputs give the same bits on any
   * engine. The kernel is the native codegen [[graft.functions.DotExpr]]
@@ -62,18 +67,78 @@ object Ann {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      maxQueryRows: Int = 1000000): DataFrame = {
-    val guarded = Guards.atMost(queries, maxQueryRows,
-      queryBoundMsg("bruteForceTopK", maxQueryRows,
-        "use lshTopK(broadcastQueries = false) for an unbounded query set " +
-          "(or nearDupPairs for corpus-vs-itself search)"))
-    val q = broadcast(guarded
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
-      .join(q, col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qvec"), col("__cvec")).as("sim"))
-    topKPerQuery(scored, k)
+      maxQueryRows: Int = 1000000): DataFrame =
+    search("bruteForceTopK", queries, idCol, vecCol, k, Some(maxQueryRows ->
+        s"$Unbounded (or nearDupPairs for corpus-vs-itself search)")) { q =>
+      Family(q.select(col(idCol).as("query_id"), col(vecCol).as("__qvec")),
+        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec")),
+        Nil, VecCosine, hint = true)
+    }
+
+  /** The fix named by the query bound of the operators that always
+    * broadcast their queries. */
+  private val Unbounded =
+    "use lshTopK(broadcastQueries = false) for an unbounded query set"
+
+  /** Cosine of the full query and corpus vectors, `__qvec` and `__cvec`. */
+  private val VecCosine = cosine(col("__qvec"), col("__cvec"))
+
+  /** What differs between the top-k entry points, given the bounded
+    * queries: `query` is (query_id, payload), `corpus` is (neighbor_id,
+    * payload). With no `keys` every pair with neighbor_id ≠ query_id
+    * joins (a nested loop); otherwise the sides equi-join on `keys` and
+    * the same filter drops self pairs. `sim` scores a pair, `hint`
+    * broadcasts the query side, and `rerank` makes the ranking a
+    * k·oversample shortlist that [[exactRerank]] reranks against that
+    * corpus. */
+  private case class Family(query: DataFrame, corpus: DataFrame,
+      keys: Seq[String], sim: Column, hint: Boolean,
+      rerank: Option[DataFrame] = None)
+
+  /** The one ANN search body (REPOSE's prune-and-verify shape with the
+    * index plugged in): check the arguments, bound the queries (`bound` =
+    * maxQueryRows and the fix its message names), build the family over
+    * the bounded queries, join and score candidates, and rank them with
+    * [[topKPerQuery]], or shortlist and [[exactRerank]]. The family is
+    * built after the checks, so a bad k or oversample fails before any
+    * quantizer trains (nProbe is checked against the trained centroids,
+    * in [[probed]]). */
+  private def search(op: String, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, bound: Option[(Int, String)], oversample: Int = 1)(
+      family: DataFrame => Family): DataFrame = {
+    require(k >= 1, s"$op: k must be >= 1, got $k")
+    require(oversample >= 1, s"$op: oversample must be >= 1, got $oversample")
+    val f = family(bound.fold(queries) { case (max, fix) =>
+      Guards.atMost(queries, max, queryBoundMsg(op, max, fix))
+    })
+    val q = if (f.hint) broadcast(f.query) else f.query
+    val pairs =
+      if (f.keys.isEmpty) f.corpus.join(q, col("neighbor_id") =!= col("query_id"))
+      else f.corpus.join(q, f.keys).filter(col("neighbor_id") =!= col("query_id"))
+    val scored = pairs.select(col("query_id"), col("neighbor_id"), f.sim.as("sim"))
+    f.rerank match {
+      case Some(c) => exactRerank(c, queries, idCol, vecCol,
+        topKPerQuery(scored, k * oversample), k)
+      case None => topKPerQuery(scored, k)
+    }
+  }
+
+  /** Full-dimension exact rerank of a bounded (query_id, neighbor_id)
+    * shortlist, the second tier of [[search]]: the shortlist broadcasts
+    * back for one column-pruned corpus pass; the corpus never shuffles.
+    * Raw query frame by design: the in-plan bound rides the
+    * always-executed candidate tier, so a second bounded reference would
+    * only repeat the bound's counting scan. */
+  private def exactRerank(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, cand: DataFrame, k: Int): DataFrame = {
+    val rerank = corpus
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
+      .join(broadcast(cand.select("query_id", "neighbor_id")), Seq("neighbor_id"))
+      .join(broadcast(queries
+          .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))),
+        Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), VecCosine.as("sim"))
+    topKPerQuery(rerank, k)
   }
 
   /** Rerank (query_id, neighbor_id, sim) rows to per-query top-k via the
@@ -188,9 +253,22 @@ object Ann {
     val pairs = b
       .select(col(idCol).as("dst_id"), col(vecCol).cast("array<double>").as("__bv"))
       .crossJoin(av)
-      .select(col("src_id"), col("dst_id"),
-        floor(cosine(col("__av"), col("__bv")) * 1000000).cast("bigint").as("__cq"))
+      .select(col("src_id"), col("dst_id"), MicroCosine)
       .filter(col("__cq").isNotNull)
+    marginAccept(pairs, k, tauNum, tauDen)
+  }
+
+  /** A pair's cosine floored to integer micro-units, `__cq` — the margin
+    * miners' exact summand. */
+  private val MicroCosine =
+    floor(cosine(col("__av"), col("__bv")) * 1000000).cast("bigint").as("__cq")
+
+  /** The margin criterion over a (src_id, dst_id, __cq) pair frame, shared
+    * by [[marginMine]] and [[marginMineLsh]]: per-side top-k micro-cosine
+    * sums, the forward-best pair per src, and the cross-multiplied accept
+    * `cos_micro·2k·tauDen > (Σx + Σy)·tauNum`. */
+  private def marginAccept(pairs: DataFrame, k: Int, tauNum: Long,
+      tauDen: Long): DataFrame = {
     def topSum(key: String, other: String): DataFrame =
       pairs.groupBy(col(key))
         .agg(TopK.topK(k)(col("__cq").cast("double"), col(other)).as("__top"))
@@ -265,9 +343,8 @@ object Ann {
       math.max(a.count(), b.count()))
     val hp = hyperplanes(seed, tables, np, dim)
     def bucketed(df: DataFrame, idAs: String, vAs: String): DataFrame =
-      df.select(col(idCol).as(idAs), col(vecCol).cast("array<double>").as(vAs))
-        .select(col(idAs), col(vAs),
-          posexplode(graft.functions.SignBuckets(col(vAs), hp)).as(Seq("table", "bucket")))
+      signBucketed(df.select(col(idCol).as(idAs), col(vecCol).cast("array<double>").as(vAs)),
+        hp, col(vAs), col(idAs), col(vAs))
     // Occupancy guard on ONE side suffices (every candidate pair has one
     // row in the guarded stream), on the join's own (table, bucket)
     // partitioning; it rewrites the id, so that partitioning survives.
@@ -275,8 +352,7 @@ object Ann {
       "src_id", "maxBucket", maxBucket, "marginMineLsh: bucket", AddPlanes)
     val bb = bucketed(b, "dst_id", "__bv")
     val pairs = ab.join(bb, Seq("table", "bucket"))
-      .select(col("src_id"), col("dst_id"),
-        floor(cosine(col("__av"), col("__bv")) * 1000000).cast("bigint").as("__cq"))
+      .select(col("src_id"), col("dst_id"), MicroCosine)
       .filter(col("__cq").isNotNull)
       .distinct() // a pair sharing buckets in several tables counts once
       // Lazy localCheckpoint, not persist: a persist here has no in-scope
@@ -289,23 +365,7 @@ object Ann {
       // Streaming): lineage is truncated, so a lost executor fails the
       // job instead of recomputing — acceptable for a mining pass.
       .localCheckpoint(false)
-    def topSum(key: String, other: String): DataFrame =
-      pairs.groupBy(col(key))
-        .agg(TopK.topK(k)(col("__cq").cast("double"), col(other)).as("__top"))
-        .select(col(key),
-          aggregate(col("__top"), lit(0L),
-            (acc, e) => acc + e.getField("_1").cast("bigint")).as("__s"))
-    val sx = topSum("src_id", "dst_id").withColumnRenamed("__s", "__sx")
-    val sy = topSum("dst_id", "src_id").withColumnRenamed("__s", "__sy")
-    val best = pairs.groupBy("src_id")
-      .agg(TopK.topK(1)(col("__cq").cast("double"), col("dst_id")).as("__t"))
-      .select(col("src_id"), col("__t")(0).getField("_2").as("dst_id"),
-        col("__t")(0).getField("_1").cast("bigint").as("cos_micro"))
-    best.join(sx, Seq("src_id")).join(sy, Seq("dst_id"))
-      .filter(col("cos_micro") * lit(2L * k) * lit(tauDen) >
-        (col("__sx") + col("__sy")) * lit(tauNum))
-      .select(col("src_id"), col("dst_id"), col("cos_micro"),
-        col("__sx").as("knn_sum_src"), col("__sy").as("knn_sum_dst"))
+    marginAccept(pairs, k, tauNum, tauDen)
   }
 
   /** Plane count for a target expected bucket occupancy — the tuning
@@ -379,9 +439,7 @@ object Ann {
     // occupancy class — far past any guarded banding. Histogram math is
     // the shared generic card ([[graft.dedup.Dedup.keyOccupancyCard]]).
     graft.dedup.Dedup.keyOccupancyCard(
-      df.select(posexplode(graft.functions.SignBuckets(
-        col(vecCol).cast("array<double>"), hp)).as(Seq("table", "bucket"))),
-      Seq("table", "bucket"))
+      signBucketed(df, hp, col(vecCol).cast("array<double>")), Seq("table", "bucket"))
   }
 
   /** Candidate-coverage card for the banded propagators — the RECALL
@@ -414,12 +472,10 @@ object Ann {
     val np = resolvePlanes("propagateCoverageCard", planes,
       math.max(corpus.count(), labeled.count()))
     val hp = hyperplanes(seed, tables, np, dim)
-    def bucketed(df: DataFrame, id: Column, idAs: String, vec: Column): DataFrame =
-      df.select(id.as(idAs),
-        posexplode(graft.functions.SignBuckets(vec.cast("array<double>"), hp))
-          .as(Seq("table", "bucket")))
-    val cb = bucketed(corpus, col(idCol), "__cid", col(vecCol))
-    val lb = bucketed(labeled, col(labeledIdCol), "__lid", col(labeledVecCol))
+    val cb = signBucketed(corpus, hp, col(vecCol).cast("array<double>"),
+      col(idCol).as("__cid"))
+    val lb = signBucketed(labeled, hp, col(labeledVecCol).cast("array<double>"),
+      col(labeledIdCol).as("__lid"))
     val firstHit = cb.join(lb, Seq("table", "bucket"))
       .filter(col("__cid") =!= col("__lid"))
       .groupBy("__cid").agg(min(col("table")).as("__first_t"))
@@ -505,33 +561,15 @@ object Ann {
     * so candidates AND rerank are oracle-exact. */
   def jlTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, outDim: Int = 32, oversample: Int = 20,
-      seed: Long = 77, dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame = {
-    val guarded = Guards.atMost(queries, maxQueryRows,
-      queryBoundMsg("jlTopK", maxQueryRows,
-        "use lshTopK(broadcastQueries = false) for an unbounded query set"))
-    def reduced(df: DataFrame): DataFrame =
-      signProject(quantize(df, idCol, vecCol), idCol, "qvec", outDim, seed, dim)
-    val candScored = reduced(corpus)
-      .select(col(idCol).as("neighbor_id"), col("rvec").as("__cv"))
-      .join(broadcast(reduced(guarded)
-          .select(col(idCol).as("query_id"), col("rvec").as("__qv"))),
-        col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qv"), col("__cv")).as("sim"))
-    val cand = topKPerQuery(candScored, k * oversample)
-    // Raw query frame here: the in-plan gate rides the candidate tier
-    // (always executed — cand feeds the rerank), so re-gating this
-    // reference would only repeat the gate's counting scan.
-    val rerank = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
-      .join(broadcast(cand.select("query_id", "neighbor_id")), Seq("neighbor_id"))
-      .join(broadcast(queries
-          .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qvec"), col("__cvec")).as("sim"))
-    topKPerQuery(rerank, k)
-  }
+      seed: Long = 77, dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame =
+    search("jlTopK", queries, idCol, vecCol, k, Some(maxQueryRows -> Unbounded),
+        oversample) { q =>
+      def reduced(df: DataFrame, idAs: String, vAs: String): DataFrame =
+        signProject(quantize(df, idCol, vecCol), idCol, "qvec", outDim, seed, dim)
+          .select(col(idCol).as(idAs), col("rvec").as(vAs))
+      Family(reduced(q, "query_id", "__qv"), reduced(corpus, "neighbor_id", "__cv"),
+        Nil, cosine(col("__qv"), col("__cv")), hint = true, rerank = Some(corpus))
+    }
 
   /** ANN recall evaluation — the "measure, don't guess" harness for the
     * approximate tiers: given the EXACT top-k frame and any number of
@@ -709,20 +747,9 @@ object Ann {
     cbs
   }
 
-  /** Encode the corpus against trained codebooks: one row per vector,
-    * (idCol, codes, rnorm) where `codes(j)` is the j-th code PRE-OFFSET
-    * into the flattened LUT (j·ksub + cid — [[pqTopK]]'s gather indices,
-    * computed once here instead of per (query, row) pair at search time)
-    * and `rnorm` = ‖x̂‖ = sqrt(Σ_j ‖c_{j,code_j}‖²), the reconstructed
-    * norm ADC cosine needs — exact from the codebook alone because
-    * subspace reconstructions are orthogonal by construction. Encoding
-    * is a one-time materialization (the [[quantize]] trade): interpreted
-    * HOFs are fine here; the SEARCH path touches only `codes`/`rnorm`
-    * through codegen expressions. m bytes of code + one double per
-    * vector is the entire search-time corpus footprint. */
   /** The (codes, rnorm) expressions over a [[pqAssigned]] frame — shared
-    * by [[pqEncode]] and [[ivfPqTopK]] (which carries a coarse-list id
-    * through the same encoding pass). */
+    * by [[pqEncode]] and [[pqEncodeFrozen]] (which carries a coarse-list
+    * id through the same encoding pass). */
   private def pqCodeCols(codebooks: Array[Array[Array[Double]]]): (Column, Column) = {
     val m = codebooks.length
     val offsets = codebooks.scanLeft(0)(_ + _.length)
@@ -735,6 +762,17 @@ object Ann {
     (codes, sqrt(rnorm2))
   }
 
+  /** Encode the corpus against trained codebooks: one row per vector,
+    * (idCol, codes, rnorm) where `codes(j)` is the j-th code PRE-OFFSET
+    * into the flattened LUT (j·ksub + cid — [[pqTopK]]'s gather indices,
+    * computed once here instead of per (query, row) pair at search time)
+    * and `rnorm` = ‖x̂‖ = sqrt(Σ_j ‖c_{j,code_j}‖²), the reconstructed
+    * norm ADC cosine needs — exact from the codebook alone because
+    * subspace reconstructions are orthogonal by construction. Encoding
+    * is a one-time materialization (the [[quantize]] trade): interpreted
+    * HOFs are fine here; the SEARCH path touches only `codes`/`rnorm`
+    * through codegen expressions. m bytes of code + one double per
+    * vector is the entire search-time corpus footprint. */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     val assigned = pqAssigned(quantize(corpus, idCol, vecCol), "qvec", codebooks)
@@ -765,48 +803,36 @@ object Ann {
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int = 4, ksub: Int = 16,
       oversample: Int = 20, seed: Long = 42, iters: Int = 1,
-      dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame = {
-    require(oversample >= 1, s"pqTopK: oversample must be >= 1, got $oversample")
-    val dsub = dim / m
-    val cbs = pqCodebooks(corpus, idCol, vecCol, m, ksub, seed, iters, dim)
-    val guarded = Guards.atMost(queries, maxQueryRows,
-      queryBoundMsg("pqTopK", maxQueryRows,
-        "use lshTopK(broadcastQueries = false) for an unbounded query set"))
-    val enc = pqEncode(corpus, idCol, vecCol, cbs)
-    val qlut = quantize(guarded, idCol, vecCol)
-      .select(col(idCol).as("query_id"),
-        concat((0 until m).map(j =>
-          graft.functions.VecExpressions.matDots(
-            slice(col("qvec"), j * dsub + 1, dsub).cast("array<double>"),
-            cbs(j))): _*).as("__lut"))
-    val candScored = enc
-      .select(col(idCol).as("neighbor_id"), col("codes"), col("rnorm"))
-      .join(broadcast(qlut), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rnorm") > 0d,
-          graft.functions.VecExpressions.gatherSum(col("__lut"), col("codes"))
-            / col("rnorm")).as("sim"))
-    val cand = topKPerQuery(candScored, k * oversample)
-    exactRerank(corpus, queries, idCol, vecCol, cand, k)
+      dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame =
+    search("pqTopK", queries, idCol, vecCol, k, Some(maxQueryRows -> Unbounded),
+        oversample) { q =>
+      val cbs = pqCodebooks(corpus, idCol, vecCol, m, ksub, seed, iters, dim)
+      Family(quantize(q, idCol, vecCol)
+          .select(col(idCol).as("query_id"), pqLut(cbs).as("__lut")),
+        pqEncode(corpus, idCol, vecCol, cbs)
+          .select(col(idCol).as("neighbor_id"), col("codes"), col("rnorm")),
+        Nil, adcCosine(residual = false), hint = true, rerank = Some(corpus))
+    }
+
+  /** A query's flattened ADC lookup table: the dots of each `dsub`-wide
+    * subvector of its int8 `qvec` with its subspace's centroids, one
+    * codegen [[graft.functions.MatDotsExpr]] per subspace. */
+  private def pqLut(codebooks: Array[Array[Array[Double]]]): Column = {
+    val dsub = codebooks.head.head.length
+    concat(codebooks.indices.map(j =>
+      graft.functions.VecExpressions.matDots(
+        slice(col("qvec"), j * dsub + 1, dsub).cast("array<double>"),
+        codebooks(j))): _*)
   }
 
-  /** Full-dimension exact rerank of a bounded (query_id, neighbor_id)
-    * shortlist — the shared second tier of [[pqTopK]]/[[ivfPqTopK]]
-    * ([[jlTopK]]'s contract): the shortlist broadcasts back for one
-    * column-pruned corpus pass; the corpus never shuffles. Raw query
-    * frame by design: the in-plan gate rides the always-executed
-    * candidate tier (jlTopK's r8 rationale). */
-  private def exactRerank(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, cand: DataFrame, k: Int): DataFrame = {
-    val rerank = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
-      .join(broadcast(cand.select("query_id", "neighbor_id")), Seq("neighbor_id"))
-      .join(broadcast(queries
-          .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qvec"), col("__cvec")).as("sim"))
-    topKPerQuery(rerank, k)
+  /** ADC cosine of a query against a corpus row's reconstruction:
+    * `Σ_j lut[codes_j] / ‖x̂‖` through one codegen
+    * [[graft.functions.GatherSumExpr]], plus the query's `__qdotc` term
+    * for residual codes. A zero-norm reconstruction scores NULL. */
+  private def adcCosine(residual: Boolean): Column = {
+    val gather = graft.functions.VecExpressions.gatherSum(col("__lut"), col("codes"))
+    when(col("rnorm") > 0d,
+      (if (residual) col("__qdotc") + gather else gather) / col("rnorm"))
   }
 
   // ----------------------------------------------------------- OPQ-P tier
@@ -1019,8 +1045,8 @@ object Ann {
   }
 
   /** Query a residual-encoded index ([[ivfPqEncodeResidual]]'s frame):
-    * [[pqProbe]]'s shape plus the per-(query, probed list) whole-vector
-    * term — sim = (q·qc[cid] + gather(lut, codes)) / ‖x̂‖, the §IV
+    * [[pqProbe]] plus the per-(query, probed list) whole-vector term —
+    * sim = (q·qc[cid] + gather(lut, codes)) / ‖x̂‖, the §IV
     * decomposition. The q·qc dots run through ONE codegen
     * [[graft.functions.MatDotsExpr]] against the quantized-centroid
     * matrix on the PROBE-SIZED side; the corpus side still streams
@@ -1030,49 +1056,12 @@ object Ann {
       codebooks: Array[Array[Array[Double]]], queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
       oversample: Int = 20, rerankCorpus: Option[DataFrame] = None,
-      maxQueryRows: Int = 1000000, broadcastProbe: Boolean = false,
-      broadcastProbeMaxRows: Int = 10000): DataFrame = {
-    require(nProbe >= 1 && nProbe <= centroids.length,
-      s"pqProbeResidual: nProbe=$nProbe outside [1, ${centroids.length}]")
-    require(oversample >= 1,
-      s"pqProbeResidual: oversample must be >= 1, got $oversample")
-    val guarded = Guards.atMost(queries, maxQueryRows,
-      queryBoundMsg("pqProbeResidual", maxQueryRows, "probe in bounded query batches"))
-    val m = codebooks.length
-    val dsub = codebooks.head.head.length
-    val qlut = quantize(
-        withNearestCentroids(guarded, vecCol, centroids, nProbe, "__probe"),
-        idCol, vecCol, keep = Seq("__probe"))
-      .select(col(idCol).as("query_id"), explode(col("__probe")).as("__cid"),
-        col("qvec"))
-      .select(col("query_id"), col("__cid"),
-        concat((0 until m).map(j =>
-          graft.functions.VecExpressions.matDots(
-            slice(col("qvec"), j * dsub + 1, dsub).cast("array<double>"),
-            codebooks(j))): _*).as("__lut"),
-        element_at(graft.functions.VecExpressions.matDots(
-            col("qvec").cast("array<double>"), qCentroids),
-          col("__cid") + 1).as("__qdotc"))
-    // same broadcastProbe contract (and batch-size cap) as [[pqProbe]]
-    val qlutH = if (broadcastProbe && guarded.count() <= broadcastProbeMaxRows)
-      broadcast(qlut) else qlut
-    val candScored = index
-      .select(col("cid").as("__cid"), col(idCol).as("neighbor_id"),
-        col("codes"), col("rnorm"))
-      .join(qlutH, Seq("__cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rnorm") > 0d,
-          (col("__qdotc") +
-            graft.functions.VecExpressions.gatherSum(col("__lut"), col("codes")))
-            / col("rnorm")).as("sim"))
-    rerankCorpus match {
-      case Some(c) =>
-        exactRerank(c, queries, idCol, vecCol,
-          topKPerQuery(candScored, k * oversample), k)
-      case None => topKPerQuery(candScored, k)
+      maxQueryRows: Int = 1000000, broadcastProbe: Boolean = false): DataFrame =
+    search("pqProbeResidual", queries, idCol, vecCol, k,
+        Some(maxQueryRows -> ProbeFix), oversample) { q =>
+      pqFamily("pqProbeResidual", q, index, centroids, Some(qCentroids), codebooks,
+        idCol, vecCol, nProbe, probeHint(q, broadcastProbe), rerankCorpus)
     }
-  }
 
   /** [[ivfPqTopK]]'s one-call form for the residual tier:
     * [[ivfPqEncodeResidual]] + [[pqProbeResidual]] with exact rerank. */
@@ -1118,48 +1107,81 @@ object Ann {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
       m: Int = 4, ksub: Int = 16, oversample: Int = 20, seed: Long = 42,
-      iters: Int = 1, dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame = {
-    require(nProbe >= 1 && nProbe <= nCentroids,
-      s"ivfPqTopK: nProbe=$nProbe outside [1, nCentroids=$nCentroids]")
-    require(oversample >= 1, s"ivfPqTopK: oversample must be >= 1, got $oversample")
-    val guarded = Guards.atMost(queries, maxQueryRows,
-      queryBoundMsg("ivfPqTopK", maxQueryRows,
-        "use lshTopK(broadcastQueries = false) for an unbounded query set"))
-    val (encIdx, coarse, cbs) =
-      ivfPqEncode(corpus, idCol, vecCol, seed, nCentroids, m, ksub, iters, dim)
-    val enc = encIdx.select(col("cid").as("__cid"),
-      col(idCol).as("neighbor_id"), col("codes"), col("rnorm"))
-    val qlut = pqQueryLut(guarded, idCol, vecCol, coarse, nProbe, cbs)
-    val candScored = enc
-      .join(broadcast(qlut), Seq("__cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rnorm") > 0d,
-          graft.functions.VecExpressions.gatherSum(col("__lut"), col("codes"))
-            / col("rnorm")).as("sim"))
-    val cand = topKPerQuery(candScored, k * oversample)
-    exactRerank(corpus, queries, idCol, vecCol, cand, k)
-  }
+      iters: Int = 1, dim: Int = 64, maxQueryRows: Int = 1000000): DataFrame =
+    search("ivfPqTopK", queries, idCol, vecCol, k, Some(maxQueryRows -> Unbounded),
+        oversample) { q =>
+      val (enc, coarse, cbs) =
+        ivfPqEncode(corpus, idCol, vecCol, seed, nCentroids, m, ksub, iters, dim)
+      pqFamily("ivfPqTopK", q, enc, coarse, None, cbs, idCol, vecCol, nProbe,
+        hint = true, Some(corpus))
+    }
+
+  /** The IVF-PQ probe family of [[ivfPqTopK]], [[pqProbe]] and
+    * [[pqProbeResidual]]: the probe-sized query side ([[pqQueryLut]])
+    * equi-joins the encoded lists on their coarse list id `__cid` and
+    * scores by ADC ([[adcCosine]]), residual when `qCentroids` is given. */
+  private def pqFamily(op: String, bounded: DataFrame, index: DataFrame,
+      centroids: Array[Array[Double]], qCentroids: Option[Array[Array[Double]]],
+      codebooks: Array[Array[Array[Double]]], idCol: String, vecCol: String,
+      nProbe: Int, hint: Boolean, rerank: Option[DataFrame]): Family =
+    Family(pqQueryLut(op, bounded, idCol, vecCol, centroids, qCentroids, nProbe,
+        codebooks),
+      index.select(col("cid").as("__cid"), col(idCol).as("neighbor_id"),
+        col("codes"), col("rnorm")),
+      Seq("__cid"), adcCosine(qCentroids.isDefined), hint, rerank)
 
   /** The probe-sized query frame of the IVF-PQ tier: one row per
     * (query, probed list) with the query's flattened ADC lookup table —
-    * (query_id, __cid, __lut). Shared by [[ivfPqTopK]] and [[pqProbe]];
-    * the LUT is m codegen [[graft.functions.MatDotsExpr]] dots per
-    * QUERY (probe-sized side — never the corpus). */
-  private def pqQueryLut(guarded: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]], nProbe: Int,
+    * (query_id, __cid, __lut), plus `__qdotc` = q·qc[cid] against the
+    * quantized centroids when they are given (the residual tier). The
+    * LUT is m codegen [[graft.functions.MatDotsExpr]] dots per QUERY
+    * (probe-sized side — never the corpus). */
+  private def pqQueryLut(op: String, bounded: DataFrame, idCol: String,
+      vecCol: String, centroids: Array[Array[Double]],
+      qCentroids: Option[Array[Array[Double]]], nProbe: Int,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val m = codebooks.length
-    val dsub = codebooks.head.head.length
-    quantize(
-        withNearestCentroids(guarded, vecCol, centroids, nProbe, "__probe"),
-        idCol, vecCol, keep = Seq("__probe"))
+    val qdotc = qCentroids.map(qc =>
+      element_at(graft.functions.VecExpressions.matDots(
+          col("qvec").cast("array<double>"), qc),
+        col("__cid") + 1).as("__qdotc"))
+    quantize(probed(op, bounded, vecCol, centroids, nProbe), idCol, vecCol,
+        keep = Seq("__probe"))
       .select(col(idCol).as("query_id"), explode(col("__probe")).as("__cid"),
-        concat((0 until m).map(j =>
-          graft.functions.VecExpressions.matDots(
-            slice(col("qvec"), j * dsub + 1, dsub).cast("array<double>"),
-            codebooks(j))): _*).as("__lut"))
+        col("qvec"))
+      .select(Seq(col("query_id"), col("__cid"), pqLut(codebooks).as("__lut")) ++
+        qdotc: _*)
   }
+
+  /** `df` with `__probe` = the ids of its `nProbe` nearest centroids —
+    * the query side of every IVF probe. */
+  private def probed(op: String, df: DataFrame, vecCol: String,
+      centroids: Array[Array[Double]], nProbe: Int): DataFrame = {
+    require(nProbe >= 1 && nProbe <= centroids.length,
+      s"$op: nProbe must be in [1, ${centroids.length}], got $nProbe")
+    withNearestCentroids(df, vecCol, centroids, nProbe, "__probe")
+  }
+
+  /** The query fix named by the bound of the probes of a persisted index. */
+  private val ProbeFix = "probe in bounded query batches"
+
+  /** Broadcast cap of `broadcastProbe`, in counted query rows; the
+    * broadcast LUT frame holds nProbe rows per query. */
+  private val ProbeHintMaxRows = 10000
+
+  /** Whether a probe broadcasts its query side. `broadcastProbe = true` is
+    * the serving shape for a KNOWN-small batch: the index side — bucketed
+    * artifact or a persisted encode frame — then never shuffles and never
+    * sorts (measured at sf0.1: the unhinted join planned the probe-LUT
+    * frame too conservatively and shuffled the ENCODED INDEX by cid
+    * instead, ~0.7 s per probe). The default stays unhinted: a batch near
+    * maxQueryRows carries nProbe·(m·ksub + dim/m) doubles per row and must
+    * be allowed to degrade to a probe-side shuffle instead of an executor
+    * OOM. The hint is also capped by the batch's counted size (a
+    * corpus-proportional batch — q229/q233's 5% slice — grows with sf):
+    * past [[ProbeHintMaxRows]] the probe plans unhinted. The batch is
+    * counted only when the hint is asked for. */
+  private def probeHint(bounded: DataFrame, broadcastProbe: Boolean): Boolean =
+    broadcastProbe && bounded.count() <= ProbeHintMaxRows
 
   /** The IVF-PQ index as a PERSISTED artifact — [[writeIvfIndex]]'s
     * train-once contract for the COMPRESSED tier: what lands on disk is
@@ -1274,44 +1296,12 @@ object Ann {
       codebooks: Array[Array[Array[Double]]], queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
       oversample: Int = 20, rerankCorpus: Option[DataFrame] = None,
-      maxQueryRows: Int = 1000000, broadcastProbe: Boolean = false,
-      broadcastProbeMaxRows: Int = 10000): DataFrame = {
-    val guarded = Guards.atMost(queries, maxQueryRows,
-      queryBoundMsg("pqProbe", maxQueryRows, "probe in bounded query batches"))
-    val qlut0 = pqQueryLut(guarded, idCol, vecCol, centroids, nProbe, codebooks)
-    // `broadcastProbe = true` is the serving shape for a KNOWN-small
-    // batch: the index side — bucketed artifact or a persisted encode
-    // frame — then never shuffles and never sorts (measured at sf0.1:
-    // the unhinted join planned the probe-LUT frame too conservatively
-    // and shuffled the ENCODED INDEX by cid instead, ~0.7 s per probe).
-    // Default stays unhinted: a batch near maxQueryRows carries
-    // nProbe·(m·ksub + dim/m) doubles per row and must be allowed to
-    // degrade to a probe-side shuffle instead of an executor OOM.
-    // The hint is additionally CAPPED by the measured batch size
-    // (ADVICE r14: a corpus-proportional batch — q229/q233's 5% slice —
-    // grows with sf and would force an unbounded broadcast): past
-    // `broadcastProbeMaxRows` LUT rows (~2.6 KB each at the m=4 default
-    // → ~26 MB hinted build side at the cap) the hint degrades to the
-    // unhinted plan instead of an executor OOM. The batch is counted
-    // only when the hint is asked for.
-    val qlut = if (broadcastProbe && guarded.count() <= broadcastProbeMaxRows)
-      broadcast(qlut0) else qlut0
-    val candScored = index
-      .select(col("cid").as("__cid"), col(idCol).as("neighbor_id"),
-        col("codes"), col("rnorm"))
-      .join(qlut, Seq("__cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rnorm") > 0d,
-          graft.functions.VecExpressions.gatherSum(col("__lut"), col("codes"))
-            / col("rnorm")).as("sim"))
-    rerankCorpus match {
-      case Some(c) =>
-        exactRerank(c, queries, idCol, vecCol,
-          topKPerQuery(candScored, k * oversample), k)
-      case None => topKPerQuery(candScored, k)
+      maxQueryRows: Int = 1000000, broadcastProbe: Boolean = false): DataFrame =
+    search("pqProbe", queries, idCol, vecCol, k, Some(maxQueryRows -> ProbeFix),
+        oversample) { q =>
+      pqFamily("pqProbe", q, index, centroids, None, codebooks, idCol, vecCol,
+        nProbe, probeHint(q, broadcastProbe), rerankCorpus)
     }
-  }
 
   /** Semantic (embedding-space) benchmark decontamination: flags every
     * corpus row whose int8-quantized embedding ([[quantize]]'s `qvec`)
@@ -1397,12 +1387,20 @@ object Ann {
   def signBucketStore(seed: Long = 42, tables: Int = 6, planes: Int = 8,
       dim: Int = 64): StoreKind = {
     val hp = hyperplanes(seed, tables, planes, dim)
-    StoreKind("sign_buckets", _.select(col("vec_id"), col("qvec"),
-        posexplode(graft.functions.SignBuckets(col("qvec").cast("array<double>"), hp))
-          .as(Seq("tbl", "bucket")))
-        .select(col("tbl"), col("bucket"), col("vec_id"), col("qvec")),
+    StoreKind("sign_buckets",
+      signBucketed(_, hp, col("qvec").cast("array<double>"), col("vec_id"), col("qvec"))
+        .select(col("table").as("tbl"), col("bucket"), col("vec_id"), col("qvec")),
       Seq("tbl", "bucket"), sorted = false)
   }
+
+  /** `carry` plus one (table, bucket) row per hash table of `hp`: bucket =
+    * the sign bits of `vec` against that table's planes
+    * ([[graft.functions.SignBuckets]]). The one sign-LSH bucketing of the
+    * banded operators, cards and stores here. */
+  private def signBucketed(df: DataFrame, hp: Array[Array[Array[Double]]],
+      vec: Column, carry: Column*): DataFrame =
+    df.select(carry :+
+      posexplode(graft.functions.SignBuckets(vec, hp)).as(Seq("table", "bucket")): _*)
 
   /** Deterministic hyperplane matrix: `tables` x `planes` hyperplanes of
     * dimension `dim`, components in [-1, 1) derived from splitmix-style
@@ -1444,23 +1442,28 @@ object Ann {
     * IVF trade (vs [[lshTopK]]'s hyperplanes): data-adapted buckets,
     * recall tuned by nProbe. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, seed: Long = 42, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val centroids = sampleCentroids(corpus, idCol, vecCol, seed, nCentroids)
-    // No pair-dedup needed: each corpus row has exactly ONE centroid and a
-    // query's probe list is distinct, so a (query, neighbor) pair can meet
-    // at most once — one shuffle fewer than a dedup would cost.
-    val c = withNearestCentroids(corpus, vecCol, centroids, 1, "__near")
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"),
-        element_at(col("__near"), 1).as("cid"))
-    val q = withNearestCentroids(queries, vecCol, centroids, nProbe, "__near")
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"),
-        explode(col("__near")).as("cid"))
-    val scored = c.join(q, Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qvec"), col("__cvec")).as("sim"))
-    topKPerQuery(scored, k)
-  }
+      k: Int, seed: Long = 42, nCentroids: Int = 16, nProbe: Int = 4): DataFrame =
+    search("ivfTopK", queries, idCol, vecCol, k, None) { q =>
+      val centroids = sampleCentroids(corpus, idCol, vecCol, seed, nCentroids)
+      // The corpus's lists are assigned lazily, in the probe's own pass.
+      ivfFamily("ivfTopK", ivfLists(centroids, idCol, vecCol).project(corpus),
+        centroids, idCol, vecCol, nProbe)(q)
+    }
+
+  /** The IVF probe family of [[ivfTopK]] and [[ivfProbe]]: the queries'
+    * `nProbe` nearest lists equi-join the inverted lists (cid, idCol,
+    * vecCol) on `cid`, and the pair scores by full-vector cosine. No
+    * pair-dedup is needed: each corpus row has exactly ONE list and a
+    * query's probe lists are distinct, so a (query, neighbor) pair meets
+    * at most once — one shuffle fewer than a dedup would cost. */
+  private def ivfFamily(op: String, index: DataFrame,
+      centroids: Array[Array[Double]], idCol: String, vecCol: String,
+      nProbe: Int)(q: DataFrame): Family =
+    Family(probed(op, q, vecCol, centroids, nProbe)
+        .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"),
+          explode(col("__probe")).as("cid")),
+      index.select(col("cid"), col(idCol).as("neighbor_id"), col(vecCol).as("__cvec")),
+      Seq("cid"), VecCosine, hint = false)
 
   /** The IVF index as a PERSISTED artifact — the ANN analog of the
     * signature stores: train once (the centroid sample and the
@@ -1651,18 +1654,9 @@ object Ann {
     * the loop closure against a from-raw SQL rebuild. */
   def ivfProbe(index: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 4): DataFrame = {
-    val q = withNearestCentroids(queries, vecCol, centroids, nProbe, "__near")
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"),
-        explode(col("__near")).as("cid"))
-    val scored = index
-      .select(col("cid"), col(idCol).as("neighbor_id"), col(vecCol).as("__cvec"))
-      .join(q, Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qvec"), col("__cvec")).as("sim"))
-    topKPerQuery(scored, k)
-  }
+      nProbe: Int = 4): DataFrame =
+    search("ivfProbe", queries, idCol, vecCol, k, None)(
+      ivfFamily("ivfProbe", index, centroids, idCol, vecCol, nProbe))
 
   /** The deterministic coarse quantizer shared by [[ivfTopK]] and
     * [[semanticDedupPairs]]: centroids = the `nCentroids` corpus vectors
@@ -1745,19 +1739,25 @@ object Ann {
       .select(col(labeledIdCol).as("__lid"),
         col(labeledVecCol).cast("array<double>").as("__lv"),
         col(labelCol).cast("long").as("__lab"))
-    val votes = c.join(broadcast(l), col(idCol) =!= col("__lid"))
+    majorityVote(c.join(broadcast(l), col(idCol) =!= col("__lid")), idCol, k)
+  }
+
+  /** The kNN vote of [[knnPropagate]] and [[knnPropagateLsh]] over
+    * (idCol, __cv, __lab, __lv) candidate pairs: TopK(k) neighbors by
+    * (cosine DESC, label ASC), then the majority label per id with count
+    * ties to the smaller label — (idCol, label_pred, n_votes). */
+  private def majorityVote(pairs: DataFrame, idCol: String, k: Int): DataFrame =
+    pairs
       .select(col(idCol), col("__lab"), cosine(col("__cv"), col("__lv")).as("sim"))
       .groupBy(idCol).agg(TopK.topK(k)(col("sim"), col("__lab")).as("top"))
       .select(col(idCol), explode(col("top")).as("e"))
       .select(col(idCol), col("e._2").as("lab"))
       .groupBy(col(idCol), col("lab")).agg(count(lit(1)).as("n_votes"))
-    votes
       .withColumn("__rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(idCol)
           .orderBy(col("n_votes").desc, col("lab").asc)))
       .filter(col("__rn") === 1)
       .select(col(idCol), col("lab").as("label_pred"), col("n_votes"))
-  }
 
   /** Banded kNN label propagation — [[knnPropagate]] for a labeled set
     * too large to broadcast (weak supervision at corpus scale: millions
@@ -1791,35 +1791,21 @@ object Ann {
     val np = resolvePlanes("knnPropagateLsh", planes,
       math.max(corpus.count(), labeled.count()))
     val hp = hyperplanes(seed, tables, np, dim)
-    def bucketed(df: DataFrame, id: Column, idAs: String, vec: Column): DataFrame =
-      df.select(id.as(idAs),
-        posexplode(graft.functions.SignBuckets(vec.cast("array<double>"), hp))
-          .as(Seq("table", "bucket")))
     val lb = Guards.occupancy(
-      bucketed(labeled, col(labeledIdCol), "__lid", col(labeledVecCol)),
+      signBucketed(labeled, hp, col(labeledVecCol).cast("array<double>"),
+        col(labeledIdCol).as("__lid")),
       Seq("table", "bucket"), "__lid", "maxBucket", maxBucket,
       "knnPropagateLsh: labeled-bucket", AddPlanes)
-    val cb = bucketed(corpus, col(idCol), idCol, col(vecCol))
+    val cb = signBucketed(corpus, hp, col(vecCol).cast("array<double>"), col(idCol))
     val cand = cb.join(lb, Seq("table", "bucket"))
       .filter(col(idCol) =!= col("__lid"))
       .select(col(idCol), col("__lid")).distinct()
-    val votes = cand
+    majorityVote(cand
       .join(corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__cv")),
         Seq(idCol))
       .join(labeled.select(col(labeledIdCol).as("__lid"),
         col(labeledVecCol).cast("array<double>").as("__lv"),
-        col(labelCol).cast("long").as("__lab")), Seq("__lid"))
-      .select(col(idCol), col("__lab"), cosine(col("__cv"), col("__lv")).as("sim"))
-      .groupBy(idCol).agg(TopK.topK(k)(col("sim"), col("__lab")).as("top"))
-      .select(col(idCol), explode(col("top")).as("e"))
-      .select(col(idCol), col("e._2").as("lab"))
-      .groupBy(col(idCol), col("lab")).agg(count(lit(1)).as("n_votes"))
-    votes
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(idCol)
-          .orderBy(col("n_votes").desc, col("lab").asc)))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col("lab").as("label_pred"), col("n_votes"))
+        col(labelCol).cast("long").as("__lab")), Seq("__lid")), idCol, k)
   }
 
   /** One Lloyd assignment's sufficient statistics over int8-quantized
@@ -1943,8 +1929,7 @@ object Ann {
     // shuffles), then fetch each side's vector once per surviving pair for
     // the exact verify — carrying the vectors through the bucket join and
     // the dedup would shuffle dim*4 bytes per candidate per table.
-    val bucketed = df.select(col(idCol).as("__id"),
-      posexplode(graft.functions.SignBuckets(col(vecCol), hp)).as(Seq("table", "bucket")))
+    val bucketed = signBucketed(df, hp, col(vecCol), col(idCol).as("__id"))
     val a = bucketed.select(col("table"), col("bucket"), col("__id").as("id1"))
     val b = bucketed.select(col("table"), col("bucket"), col("__id").as("id2"))
     val pairs = a.join(b, Seq("table", "bucket"))
@@ -1975,41 +1960,35 @@ object Ann {
     * the hint is on. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, seed: Long = 42, tables: Int = 4, planes: Int = 12, dim: Int = 64,
-      broadcastQueries: Boolean = true, maxQueryRows: Int = 1000000): DataFrame = {
-    val q0 =
-      if (broadcastQueries)
-        Guards.atMost(queries, maxQueryRows,
-          queryBoundMsg("lshTopK", maxQueryRows,
-            "pass broadcastQueries = false to plan key-partitioned shuffle joins"))
-      else queries
-    // planes = 0 auto-derives from the corpus (queries are the bounded
-    // side by the broadcast contract; corpus occupancy governs the work).
-    val np = resolvePlanes("lshTopK", planes, corpus.count())
-    val hp = hyperplanes(seed, tables, np, dim)
-    def maybeBcast(df: DataFrame): DataFrame = if (broadcastQueries) broadcast(df) else df
-    def bucketed(df: DataFrame, idAs: String): DataFrame =
-      df.select(col(idCol).as(idAs),
-          posexplode(graft.functions.SignBuckets(col(vecCol), hp)).as(Seq("table", "bucket")))
-    // Candidates and dedup on ids only; vectors rejoin once per surviving
-    // pair (corpus side a key join, query side broadcast-or-shuffle per
-    // the broadcastQueries contract above).
-    val candidates = bucketed(corpus, "neighbor_id")
-      .join(maybeBcast(bucketed(q0, "query_id")), Seq("table", "bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id").distinct()
-    // The vector rejoin references the RAW query frame: the in-plan gate
-    // rides the candidates subtree (which always executes — it feeds the
-    // final plan), so a second gated reference would only re-execute the
-    // gate's counting scan without adding enforcement.
-    val scored = candidates
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec")),
-        Seq("neighbor_id"))
-      .join(maybeBcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("__qvec"), col("__cvec")).as("sim"))
-    topKPerQuery(scored, k)
-  }
+      broadcastQueries: Boolean = true, maxQueryRows: Int = 1000000): DataFrame =
+    search("lshTopK", queries, idCol, vecCol, k,
+        Option.when(broadcastQueries)(maxQueryRows ->
+          "pass broadcastQueries = false to plan key-partitioned shuffle joins")) { q =>
+      // planes = 0 auto-derives from the corpus (queries are the bounded
+      // side by the broadcast contract; corpus occupancy governs the work).
+      val np = resolvePlanes("lshTopK", planes, corpus.count())
+      val hp = hyperplanes(seed, tables, np, dim)
+      def bucketed(df: DataFrame, idAs: String): DataFrame =
+        signBucketed(df, hp, col(vecCol), col(idCol).as(idAs))
+      val qb = bucketed(q, "query_id")
+      // Candidates and dedup on ids only; vectors then join once per
+      // surviving pair: the corpus's by key, the queries' as the family's
+      // query side, broadcast or shuffled per the contract above. That
+      // side is the RAW query frame: the in-plan bound rides the candidate
+      // subtree, which always executes, so a second bounded reference
+      // would only repeat the bound's counting scan. The body's self-pair
+      // filter after the query_id join is implied by the candidates' own;
+      // the optimizer drops it.
+      val candidates = bucketed(corpus, "neighbor_id")
+        .join(if (broadcastQueries) broadcast(qb) else qb, Seq("table", "bucket"))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select("query_id", "neighbor_id").distinct()
+      Family(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qvec")),
+        candidates.join(
+          corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cvec")),
+          Seq("neighbor_id")),
+        Seq("query_id"), VecCosine, hint = broadcastQueries)
+    }
 
   /** Maximal-marginal-relevance selection (Carbonell & Goldstein 1998) —
     * the DIVERSE top-k the plain rankers cannot produce: greedily pick

@@ -166,6 +166,27 @@ class ConfigSpec extends SparkSpec {
       s"occupancy window outside Guards.scala: $found")
   }
 
+  test("src/main holds one ANN search body: the shortlist rerank join appears once") {
+    // Every shortlisted top-k reranks through Ann.search's exactRerank; a
+    // second copy of the rerank join is a copied search body.
+    val rerank = """.join(broadcast(cand.select("query_id", "neighbor_id")), Seq("neighbor_id"))"""
+    val found = sites(scalaFiles("src/main"), java.util.regex.Pattern.quote(rerank))
+    assert(found.size == 1, found.mkString("\n"))
+  }
+
+  test("src/main holds one sign-LSH bucketing: SignBuckets( appears once outside its expression") {
+    // The banded operators, cards and stores bucket through one helper in
+    // Ann; a second SignBuckets call site is a copied bucketing.
+    val found = sites(scalaFiles("src/main")
+      .filterNot(_.toString == "src/main/scala/graft/functions/SignBuckets.scala"),
+      """SignBuckets\(""")
+    assert(found.size == 1, found.mkString("\n"))
+  }
+
+  /** One file name per match of `regex` in `files`. */
+  private def sites(files: Seq[java.nio.file.Path], regex: String) =
+    files.flatMap(p => regex.r.findAllIn(Files.readString(p)).map(_ => p.toString))
+
   private def scalaFiles(roots: String*) = roots.flatMap { root =>
     val walk = Files.walk(Paths.get(root))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList

@@ -178,4 +178,22 @@ class GuardsSpec extends SparkSpec {
       }
     }
   }
+
+  test("building a guarded operator starts no Spark job: ivfPqTopKResidual trains only") {
+    // Its residual quantizers train while the frame is built; the query
+    // bound of the probe it runs adds no job to that training.
+    inputs()
+    val train = jobsDuring(Ann.ivfPqEncodeResidual(emb, "vec_id", "embedding"))._2
+    assert(train > 0)
+    for (over <- Seq(false, true)) {
+      val (q, max) = annQueries(over)
+      val (df, jobs) = jobsDuring(
+        Ann.ivfPqTopKResidual(emb, q, "vec_id", "embedding", 3, maxQueryRows = max))
+      assert(jobs == train, s"over = $over")
+      if (over) {
+        val failure = messageChain(intercept[Exception](df.collect()))
+        assert(failure.contains("pqProbeResidual: query set exceeds"), failure)
+      }
+    }
+  }
 }

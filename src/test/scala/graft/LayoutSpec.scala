@@ -103,4 +103,14 @@ class LayoutSpec extends SparkSpec {
     assert(out.forall(r => r.getLong(0) != r.getLong(2)))
     assert(out.map(_.getLong(0)).distinct.sorted.toSeq == Seq(0L, 1L, 2L, 3L, 4L))
   }
+
+  test("ivfPqTopKResidual: the same contract — ranks 1..k, no self pairs, all queries served") {
+    val emb = graft.sources.Tables.load(spark, sf, "embeddings")
+    val out = Ann.ivfPqTopKResidual(emb, emb.filter(col("vec_id") < 5), "vec_id",
+      "embedding", k = 3).collect()
+    assert(out.length == 15)
+    assert(out.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= 3))
+    assert(out.forall(r => r.getLong(0) != r.getLong(2)))
+    assert(out.map(_.getLong(0)).distinct.sorted.toSeq == Seq(0L, 1L, 2L, 3L, 4L))
+  }
 }

@@ -567,6 +567,35 @@ class TextDedupSpec extends SparkSpec {
       tables = 8, planes = 3, broadcastQueries = false, maxQueryRows = 1).count() > 0)
   }
 
+  test("ANN entry points reject k, oversample and nProbe below 1 instead of returning no rows") {
+    val emb = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
+    val q = emb.filter(col("vec_id") < 5)
+    val cents = Ann.sampleCentroids(emb, "vec_id", "embedding", 42, 4)
+    val lists = Ann.withNearestCentroids(emb, "embedding", cents, 1, "__near")
+      .select(element_at(col("__near"), 1).as("cid"), col("vec_id"), col("embedding"))
+    val (pqIndex, pqCents, cbs) = Ann.ivfPqEncode(emb, "vec_id", "embedding", nCentroids = 4)
+    def pqProbe(k: Int = 3, nProbe: Int = 2, oversample: Int = 20) =
+      Ann.pqProbe(pqIndex, pqCents, cbs, q, "vec_id", "embedding", k, nProbe,
+        oversample, rerankCorpus = Some(emb))
+    val cases: Seq[(String, () => Any)] = Seq(
+      "bruteForceTopK" -> (() => Ann.bruteForceTopK(emb, q, "vec_id", "embedding", 0)),
+      "jlTopK" -> (() => Ann.jlTopK(emb, q, "vec_id", "embedding", 0)),
+      "jlTopK" -> (() => Ann.jlTopK(emb, q, "vec_id", "embedding", 3, oversample = 0)),
+      "lshTopK" -> (() => Ann.lshTopK(emb, q, "vec_id", "embedding", 0)),
+      "ivfTopK" -> (() => Ann.ivfTopK(emb, q, "vec_id", "embedding", 0)),
+      "ivfTopK" -> (() => Ann.ivfTopK(emb, q, "vec_id", "embedding", 3, nProbe = 0)),
+      "ivfProbe" -> (() => Ann.ivfProbe(lists, cents, q, "vec_id", "embedding", 0)),
+      "ivfProbe" -> (() => Ann.ivfProbe(lists, cents, q, "vec_id", "embedding", 3, 0)),
+      "pqProbe" -> (() => pqProbe(k = 0)),
+      "pqProbe" -> (() => pqProbe(oversample = 0)),
+      "pqProbe" -> (() => pqProbe(nProbe = 0)))
+    cases.foreach { case (op, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.startsWith(s"requirement failed: $op: ") &&
+        e.getMessage.endsWith("got 0"), e.getMessage)
+    }
+  }
+
   test("dedupLines scrubs corpus-wide boilerplate, keeps unique lines in original order") {
     import SparkSpec.spark.implicits._
     val docs = Seq(
