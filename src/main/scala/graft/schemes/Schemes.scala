@@ -8,15 +8,19 @@ import graft.sources.Indexed
 
 /** Iteration schemes — fuel's "query planner" surface (reference:
   * fuel/schemes.py:13-305). A scheme decides WHICH rows are visited, in WHAT
-  * order, and how they group into batches. fuel materializes an index list on
-  * the driver; here each scheme compiles to two columns over an indexed
-  * DataFrame:
+  * order, and how they group into batches. fuel's request iterator cuts an
+  * index list into batches on the driver; here each scheme is a list of
+  * [[Schemes.Segment]]s (one per concatenated scheme), each a visit order
+  * over an indexed DataFrame plus a batch size, read two ways:
   *
-  *   - `__pos`      position of the row in the epoch's visit order (0-based)
-  *   - `__batch_id` minibatch assignment (batch schemes only)
+  *   - [[graft.stream.DataStream]] pulls each segment's rows in visit order
+  *     and cuts batches on the driver as they arrive;
+  *   - [[Schemes.compile]] derives the epoch as columns, for plans that
+  *     join or aggregate over it (q53, q188):
+  *     - `__pos`      position of the row in the epoch's visit order (0-based)
+  *     - `__batch_id` minibatch assignment (batch schemes only)
   *
-  * so the "request iterator" is a fully distributed plan, never a driver-side
-  * list. Seeded shuffles use [[Stable.seededHash]] (md5-derived) — documented
+  * Seeded shuffles use [[Stable.seededHash]] (md5-derived) — documented
   * contract is "seeded and reproducible" (fuel/schemes.py:216-221), not
   * NumPy-bit-identical; the permutation is deterministic under retries,
   * speculation and repartitioning, and reproducible by external engines.
@@ -70,98 +74,101 @@ object Schemes {
   val Pos = "__pos"
   val BatchId = "__batch_id"
 
-  /** Contiguous position column in the total order `order` — distributed
-    * sort + InternalRow-level index scan (see [[Indexed]] for why not a
-    * window, and why not `df.rdd`). The result declares its `__pos` order,
-    * so the epoch iterator's `orderBy(__pos)` costs no second sort. */
-  private def posIn(df: DataFrame, order: Seq[Column], posName: String): DataFrame =
-    Indexed.withIdx(df, order, posName)
+  /** One segment of an epoch: the rows with `__idx < bound` (all rows when
+    * unbounded) visited in `__idx` order (`seed` empty) or in the seeded
+    * shuffle `(seededHash(seed, __idx), __idx)`; each run of `batchSize`
+    * consecutive rows (1 for example schemes) is one batch, re-sorted by
+    * `__idx` when `sortedIndices`. */
+  final case class Segment(bound: Option[Long], seed: Option[Long], batchSize: Int,
+      sortedIndices: Boolean) {
+    private[schemes] def rows(df: DataFrame): DataFrame =
+      bound.fold(df)(k => df.filter(col(Indexed.Idx) < k))
 
-  private def shuffleOrder(seed: Long): Seq[Column] =
-    Seq(Stable.seededHash(seed, col(Indexed.Idx)), col(Indexed.Idx))
+    private[schemes] def order: Seq[Column] = seed.fold(Seq(col(Indexed.Idx))) { s =>
+      Seq(Stable.seededHash(s, col(Indexed.Idx)), col(Indexed.Idx))
+    }
+
+    /** The rows to visit over an indexed `df`, sorted in visit order. In
+      * `__idx` order the sort is free wherever the index declares its order
+      * ([[Indexed]]); a shuffle pays one range sort. */
+    def visit(df: DataFrame): DataFrame = rows(df).sort(order: _*)
+
+    /** Rows this segment visits over an `n`-row input. */
+    private[schemes] def examples(n: Long): Long = bound.fold(n)(math.min(n, _))
+
+    /** Batches this segment cuts over an `n`-row input. */
+    private[schemes] def batches(n: Long): Long = (examples(n) + batchSize - 1) / batchSize
+  }
+
+  /** `scheme` as the segments one epoch visits, in order. */
+  def segments(scheme: IterationScheme): Seq[Segment] = scheme match {
+    case SequentialScheme(b) => Seq(Segment(None, None, b, sortedIndices = false))
+    case ShuffledScheme(b, seed, sortedIdx) => Seq(Segment(None, Some(seed), b, sortedIdx))
+    case SequentialExampleScheme() => Seq(Segment(None, None, 1, sortedIndices = false))
+    case ShuffledExampleScheme(seed) => Seq(Segment(None, Some(seed), 1, sortedIndices = false))
+    case ConstantScheme(b, numExamples, times) =>
+      Seq(Segment(numExamples.orElse(times.map(_ * b)), None, b, sortedIndices = false))
+    case ConcatenatedScheme(schemes) => schemes.flatMap(segments)
+  }
 
   /** Compile `scheme` over an indexed DataFrame (must carry `__idx`; see
     * [[Indexed.withIdx]]). Returns the input plus `__pos` (and `__batch_id`
-    * for batch schemes). */
+    * for batch schemes): `__idx` itself in index order, otherwise the scan
+    * index of the visit order. */
   def compile(df: DataFrame, scheme: IterationScheme): DataFrame = {
     require(df.columns.contains(Indexed.Idx),
       s"scheme compilation requires a stable ${Indexed.Idx}; use Indexed.withIdx first")
-    scheme match {
-      case SequentialScheme(b) =>
-        df.withColumn(Pos, col(Indexed.Idx))
-          .withColumn(BatchId, floor(col(Pos) / b).cast("bigint"))
-
-      case ShuffledScheme(b, seed, sortedIdx) =>
-        val withPos = posIn(df, shuffleOrder(seed), Pos)
-          .withColumn(BatchId, floor(col(Pos) / b).cast("bigint"))
-        if (!sortedIdx) withPos
+    val withBatch = !scheme.requestsExamples
+    def one(seg: Segment): DataFrame = {
+      val rows = seg.rows(df)
+      val withPos =
+        if (seg.seed.isEmpty) rows.withColumn(Pos, col(Indexed.Idx))
+        else Indexed.withIdx(rows, seg.order, Pos)
+      if (!withBatch) withPos
+      else {
+        val b = seg.batchSize
+        val batched = withPos.withColumn(BatchId, floor(col(Pos) / b).cast("bigint"))
+        if (!seg.sortedIndices) batched
         else {
           // Re-derive within-batch positions in index order: batch start +
           // rank of __idx inside the batch. Window over __batch_id is
           // scale-safe: batches are small (= batchSize rows) and numerous.
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(BatchId).orderBy(Indexed.Idx)
-          withPos.withColumn(Pos,
-            (col(BatchId) * b) + row_number().over(w) - 1)
+          batched.withColumn(Pos, (col(BatchId) * b) + row_number().over(w) - 1)
         }
-
-      case SequentialExampleScheme() =>
-        df.withColumn(Pos, col(Indexed.Idx))
-
-      case ShuffledExampleScheme(seed) =>
-        posIn(df, shuffleOrder(seed), Pos)
-
-      case ConstantScheme(b, numExamples, times) =>
-        val bounded = (numExamples, times) match {
-          case (Some(n), _) => df.filter(col(Indexed.Idx) < n)
-          case (_, Some(t)) => df.filter(col(Indexed.Idx) < t * b)
-          case _            => df
-        }
-        bounded.withColumn(Pos, col(Indexed.Idx))
-          .withColumn(BatchId, floor(col(Pos) / b).cast("bigint"))
-
-      case ConcatenatedScheme(schemes) =>
-        // Each segment is compiled independently; positions/batch ids are
-        // offset by the totals of the preceding segments. Those totals have
-        // a closed form given the input size (every scheme visits a known
-        // subset), so ONE count() of the input covers all segments — no
-        // per-segment actions, no recomputing each segment's plan to count
-        // it.
+      }
+    }
+    segments(scheme) match {
+      case Seq(seg) => one(seg)
+      case segs =>
+        // Positions/batch ids of each segment are offset by the totals of
+        // the preceding segments. Those totals have a closed form given
+        // the input size (every segment visits a known subset), so ONE
+        // count() of the input covers all segments — no per-segment
+        // actions, no recomputing each segment's plan to count it.
         val n = df.count()
-        val withBatch = !schemes.head.requestsExamples
         var posOff = 0L
         var batchOff = 0L
-        val shifted = schemes.map { sch =>
-          val seg = compile(df, sch)
-          val out0 = seg.withColumn(Pos, col(Pos) + posOff)
+        segs.map { seg =>
+          val out0 = one(seg).withColumn(Pos, col(Pos) + posOff)
           val out = if (withBatch) out0.withColumn(BatchId, col(BatchId) + batchOff) else out0
-          posOff += numExamples(sch, n)
-          batchOff += numBatches(sch, n)
+          posOff += seg.examples(n)
+          batchOff += seg.batches(n)
           out
-        }
-        shifted.reduce(_ unionByName _)
+        }.reduce(_ unionByName _)
     }
   }
 
   /** Rows one epoch of `scheme` visits over an `n`-row input (closed form;
     * mirrors fuel's num_examples accounting, fuel/schemes.py:95-177). */
-  def numExamples(scheme: IterationScheme, n: Long): Long = scheme match {
-    case ConstantScheme(b, numEx, times) =>
-      val bound = numEx.orElse(times.map(_ * b)).getOrElse(n)
-      math.min(n, bound)
-    case ConcatenatedScheme(ss) => ss.map(numExamples(_, n)).sum
-    case _ => n // Sequential / Shuffled / *Example visit every row
-  }
+  def numExamples(scheme: IterationScheme, n: Long): Long =
+    segments(scheme).map(_.examples(n)).sum
 
   /** Minibatches one epoch of `scheme` yields over an `n`-row input;
     * 0 for example-wise schemes. */
-  def numBatches(scheme: IterationScheme, n: Long): Long = scheme match {
-    case SequentialScheme(b) => (n + b - 1) / b
-    case ShuffledScheme(b, _, _) => (n + b - 1) / b
-    case c @ ConstantScheme(b, _, _) => (numExamples(c, n) + b - 1) / b
-    case ConcatenatedScheme(ss) => ss.map(numBatches(_, n)).sum
-    case _ => 0L
-  }
+  def numBatches(scheme: IterationScheme, n: Long): Long =
+    if (scheme.requestsExamples) 0L else segments(scheme).map(_.batches(n)).sum
 
   /** fuel's k-fold cross-validation boundaries (fuel/schemes.py:260-305):
     * fold i covers positions `[n*i/k, n*(i+1)/k)` (integer division).

@@ -14,16 +14,27 @@ import graft.sources.Indexed
   * iteration scheme, yielding epochs of minibatches to a (driver-side)
   * training loop.
   *
-  * Execution model: each epoch is ONE deterministic distributed plan
-  * (scheme compilation = pure column derivation); iteration pulls it with
-  * `toLocalIterator`, which fetches one partition at a time — driver memory
-  * is bounded by a partition, not the dataset. Shuffled schemes reshuffle
-  * per epoch like fuel's persistent scheme rng, but deterministically:
-  * epoch e shuffles with seed + e ([[compiledForEpoch]]), so determinism
+  * Execution model: fuel's request iterator cuts an epoch into batches on
+  * the driver (fuel/schemes.py:180-229), and so does this one. An epoch is
+  * its scheme's segments ([[Schemes.segments]]); each segment's visit
+  * frame — its rows sorted in visit order — is pulled with
+  * `toLocalIterator`, one partition at a time, so driver memory is bounded
+  * by a partition, not the dataset. Segments follow one another, and rows
+  * are counted as they arrive: every `batchSize` rows of a segment are one
+  * batch, so no batch straddles a segment, and `sortedIndices` re-sorts a
+  * batch by `__idx` on the driver (only that scheme pulls `__idx`). No
+  * position column is computed: a shuffled epoch is one range sort and its
+  * fetches; an epoch in declared `__idx` order is its fetches alone.
+  * `next` reads its batch and peeks one row beyond it, so every fetch
+  * starts inside `next`, and `hasNext` peeks at most one row.
+  *
+  * Shuffled schemes reshuffle per epoch like fuel's persistent scheme rng,
+  * but deterministically: epoch e shuffles with seed + e, so determinism
   * comes from (seed, epoch), not iterator state, and "pickling an iterator
   * mid-epoch" (fuel/tests/test_serialization.py) becomes "remember (seed,
-  * epoch, cursor) and re-run with `__pos >= cursor`" — see
-  * [[DataStream.resumeFrom]].
+  * epoch, cursor) and re-run, dropping the first `cursor` rows" — see
+  * [[DataStream.resumeFrom]]. The same epoch as columns (`__pos`,
+  * `__batch_id`) is [[compiledForEpoch]], for plans over it (q53, q188).
   */
 final class DataStream(val source: DataFrame, val scheme: IterationScheme,
     order: Seq[Column]) {
@@ -41,64 +52,58 @@ final class DataStream(val source: DataFrame, val scheme: IterationScheme,
     * in fresh orders) made explicit and deterministic: epoch e shuffles
     * with `seed + e`, so any epoch is reproducible from (seed, epoch)
     * alone. Non-shuffled schemes are epoch-invariant. Oracled end-to-end
-    * by q53. */
+    * by q53; the iterators below yield exactly its rows, grouped by
+    * `__batch_id` (by `__pos` for example schemes) in `__pos` order. */
   def compiledForEpoch(epoch: Int): DataFrame =
     if (epoch == 0) compiled
     else Schemes.compile(indexed, DataStream.reseed(scheme, epoch))
 
-  private def dataCols: Seq[String] =
-    compiled.columns.filterNot(c => c == Indexed.Idx || c == Schemes.Pos || c == Schemes.BatchId).toSeq
+  private lazy val dataCols: Seq[Column] = indexed.columns
+    .filterNot(c => c == Indexed.Idx || c == Schemes.Pos || c == Schemes.BatchId).toSeq.map(col)
 
   /** One epoch of minibatches (example schemes yield singleton batches).
     * Rows carry only the data columns, in scheme order. */
-  def epochIterator(): Iterator[Seq[Row]] = epochFrom(compiled)
+  def epochIterator(): Iterator[Seq[Row]] = epochIterator(0)
 
   /** Epoch `epoch`'s minibatches (see [[compiledForEpoch]]). */
-  def epochIterator(epoch: Int): Iterator[Seq[Row]] =
-    epochFrom(compiledForEpoch(epoch))
+  def epochIterator(epoch: Int): Iterator[Seq[Row]] = resumeFrom(0, epoch)
 
-  /** The distributed plan [[resumeFrom]] iterates: epoch `epoch`'s
-    * compiled frame restricted to positions `>= cursor`. Exposed
-    * separately so the resume seam is oracle-checkable end-to-end
-    * (q188 replays the reseeded permutation + the cursor cut in SQL),
-    * not just spec'd. A cursor on a batch boundary resumes at a whole
-    * batch; mid-batch cursors yield that batch's remaining rows. */
+  /** The compiled form of [[resumeFrom]]: epoch `epoch`'s compiled frame
+    * restricted to positions `>= cursor`. Exposed so the resume seam is
+    * oracle-checkable end-to-end (q188 replays the reseeded permutation +
+    * the cursor cut in SQL), not just spec'd. A cursor on a batch boundary
+    * resumes at a whole batch; mid-batch cursors yield that batch's
+    * remaining rows. */
   def resumedPlan(cursor: Long, epoch: Int = 0): DataFrame =
     compiledForEpoch(epoch).filter(col(Schemes.Pos) >= cursor)
 
-  /** Resume epoch `epoch` mid-way: yields batches whose first row position
-    * is `>= cursor` (the deterministic-replay answer to iterator pickling:
-    * (seed, epoch, cursor) fully locate a point in the epoch stream). */
+  /** Resume epoch `epoch` mid-way: the epoch's batches without its first
+    * `cursor` rows (the deterministic-replay answer to iterator pickling:
+    * (seed, epoch, cursor) fully locate a point in the epoch stream). The
+    * skipped rows are still fetched; batch boundaries stay where the whole
+    * epoch has them, so a mid-batch cursor yields that batch's rest. */
   def resumeFrom(cursor: Long, epoch: Int = 0): Iterator[Seq[Row]] =
-    epochFrom(resumedPlan(cursor, epoch))
+    new DataStream.Batches(
+      Schemes.segments(DataStream.reseed(scheme, epoch)).iterator.map(seg => (seg.batchSize, pull(seg))),
+      cursor)
 
-  /** Pulls `df` in `__pos` order and groups consecutive rows that share a
-    * key into batches: `__batch_id` for batch schemes, `__pos` itself for
-    * example schemes (batches of one). Batch ids are monotone in `__pos`
-    * for every scheme, so `__pos` alone orders the batches too — and
-    * where the compiled frame declares its indexed `__pos` order
-    * ([[Indexed]]) the planner drops this sort and its exchange. */
-  private def epochFrom(df: DataFrame): Iterator[Seq[Row]] = {
-    val key = if (df.columns.contains(Schemes.BatchId)) Schemes.BatchId else Schemes.Pos
-    val rows = df.orderBy(col(Schemes.Pos))
-      .selectExpr((key +: dataCols): _*)
-      .toLocalIterator().asScala.buffered
-    new Iterator[Seq[Row]] {
-      def hasNext: Boolean = rows.hasNext
-      def next(): Seq[Row] = {
-        val k = rows.head.getLong(0)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        while (rows.hasNext && rows.head.getLong(0) == k)
-          buf += Row.fromSeq(rows.next().toSeq.drop(1))
-        buf.toSeq
-      }
+  /** `seg`'s data rows over the indexed frame, in their final order: the
+    * visit order, with each batch re-sorted by `__idx` for `sortedIndices`. */
+  private def pull(seg: Schemes.Segment): Iterator[Row] = {
+    val visit = seg.visit(indexed)
+    if (!seg.sortedIndices) visit.select(dataCols: _*).toLocalIterator().asScala
+    else {
+      val idx = dataCols.length
+      visit.select(dataCols :+ col(Indexed.Idx): _*).toLocalIterator().asScala
+        .grouped(seg.batchSize)
+        .flatMap(_.sortBy(_.getLong(idx)).iterator.map(r => Row.fromSeq(r.toSeq.init)))
     }
   }
 
   /** Endless epochs (fuel/streams.py:113-119 `iterate_epochs`). With
     * `reshuffle` (default, fuel-faithful) shuffled schemes visit in a
     * fresh deterministic order each epoch ([[compiledForEpoch]]); with
-    * `reshuffle = false` every epoch replays epoch 0's plan. */
+    * `reshuffle = false` every epoch replays epoch 0's order. */
   def iterateEpochs(reshuffle: Boolean = true): Iterator[Iterator[Seq[Row]]] =
     if (reshuffle) Iterator.from(0).map(epochIterator)
     else Iterator.continually(epochIterator())
@@ -119,5 +124,41 @@ object DataStream {
     case sch: ShuffledExampleScheme => sch.copy(seed = sch.seed + epoch)
     case ConcatenatedScheme(ss)     => ConcatenatedScheme(ss.map(reseed(_, epoch)))
     case other                      => other
+  }
+
+  /** Cuts `segments` — (batch size, rows in final order), opened one after
+    * another as the earlier ones run out — into segment-local batches,
+    * without the first `cursor` rows of the whole epoch. */
+  private final class Batches(segments: Iterator[(Int, Iterator[Row])], cursor: Long)
+      extends Iterator[Seq[Row]] {
+    private var rows: Iterator[Row] = Iterator.empty
+    private var batchSize = 1
+    private var local = 0L // position of the next row in its segment
+    private var skipped = 0L
+
+    /** True when a row remains past the cursor; reads no row past the
+      * cursor but peeks at the first one. */
+    private def advance(): Boolean = {
+      def open(): Boolean = {
+        while (!rows.hasNext && segments.hasNext) {
+          val (b, next) = segments.next()
+          batchSize = b; rows = next; local = 0
+        }
+        rows.hasNext
+      }
+      while (skipped < cursor && open()) { rows.next(); local += 1; skipped += 1 }
+      open()
+    }
+
+    def hasNext: Boolean = advance()
+
+    def next(): Seq[Row] = {
+      if (!advance()) throw new NoSuchElementException("epoch exhausted")
+      val end = (local / batchSize + 1) * batchSize
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (local < end && rows.hasNext) { out += rows.next(); local += 1 }
+      advance() // the next fetch starts here, not in the caller's hasNext
+      out.toSeq
+    }
   }
 }

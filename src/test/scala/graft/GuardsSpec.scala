@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,33 +18,9 @@ import graft.text.{Perplexity, TextOps}
 class GuardsSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  /** `body`'s result and the Spark jobs it started. The jobs carry a local
-    * property set around `body` (Spark SQL hands the caller's local
-    * properties to the threads it runs jobs from), so a stray job still
-    * starting from an earlier failed action is not counted. A marker job
-    * after `body` flushes the count: a listener sees job starts in order. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = "graft.spec.guards"
-    val token = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger(0)
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)).orNull match {
-          case `token` => jobs.incrementAndGet()
-          case "flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, token)
-      val result = try body finally sc.setLocalProperty(tag, "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
-      assert(flushed.await(60, TimeUnit.SECONDS))
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (result, jobs) = jobStarts(body)
+    (result, jobs.size)
   }
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")

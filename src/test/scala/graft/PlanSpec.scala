@@ -483,8 +483,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("epoch order: orderBy(__pos) over a zipped position plans no exchange and no sort") {
-    // Indexed declares the zipWithIndex order, so the epoch iterator's
-    // orderBy(__pos) is free wherever __pos is a zipped index (Shuffled,
+    // Indexed declares the zipWithIndex order, so orderBy(__pos) over a
+    // compiled epoch is free wherever __pos is a zipped index (Shuffled,
     // ShuffledExample) or an alias of one (Sequential, Constant).
     // sortedIndices re-ranks __pos in a window and Concatenated unions
     // shifted segments: neither carries the order, and the planner must

@@ -201,28 +201,30 @@ class SchemesSpec extends SparkSpec {
     assert(tail.map(_.map(_.toSeq)) == batches.drop(2).map(_.map(_.toSeq)))
   }
 
+  /** The epoch [[DataStream]] must yield, from its compiled form: the
+    * reference collects the compiled frame and sorts by (__batch_id, __pos)
+    * on the driver, grouping by batch id (batch schemes) or one row per
+    * batch (example schemes), after dropping positions below `cursor`. */
+  private def reference(df: org.apache.spark.sql.DataFrame, cursor: Long): Seq[Seq[Seq[Any]]] = {
+    val hasBatch = df.columns.contains(Schemes.BatchId)
+    val data = df.columns.filterNot(Set(Indexed.Idx, Schemes.Pos, Schemes.BatchId)).toSeq
+    def key(r: Row) = r.getAs[Long](if (hasBatch) Schemes.BatchId else Schemes.Pos)
+    df.collect().toSeq
+      .filter(_.getAs[Long](Schemes.Pos) >= cursor)
+      .sortBy(r => (key(r), r.getAs[Long](Schemes.Pos)))
+      .groupBy(key).toSeq.sortBy(_._1)
+      .map(_._2.map(r => data.map(c => r.getAs[Any](c))))
+  }
+
+  private val schemes = Seq(SequentialScheme(3), SequentialExampleScheme(), ShuffledScheme(3, seed = 1),
+    ShuffledScheme(3, seed = 1, sortedIndices = true), ShuffledExampleScheme(seed = 2),
+    ConstantScheme(4, numExamples = Some(70)),
+    ConcatenatedScheme(Seq(ConstantScheme(4, numExamples = Some(70)), ShuffledScheme(4, seed = 5))))
+
   test("epochIterator and resumeFrom equal a driver-side sort of the compiled epoch") {
-    // The iterator orders by __pos alone and lets the planner skip the sort
-    // where the frame declares it; the reference collects the compiled
-    // frame and sorts by (__batch_id, __pos) on the driver, grouping by
-    // batch id (batch schemes) or one row per batch (example schemes).
-    def reference(df: org.apache.spark.sql.DataFrame, cursor: Long): Seq[Seq[Seq[Any]]] = {
-      val hasBatch = df.columns.contains(Schemes.BatchId)
-      val data = df.columns.filterNot(Set(Indexed.Idx, Schemes.Pos, Schemes.BatchId)).toSeq
-      def key(r: Row) = r.getAs[Long](if (hasBatch) Schemes.BatchId else Schemes.Pos)
-      df.collect().toSeq
-        .filter(_.getAs[Long](Schemes.Pos) >= cursor)
-        .sortBy(r => (key(r), r.getAs[Long](Schemes.Pos)))
-        .groupBy(key).toSeq.sortBy(_._1)
-        .map(_._2.map(r => data.map(c => r.getAs[Any](c))))
-    }
     // Uncoalesced shuffles keep the zipped frames multi-partition, so the
     // declared order is exercised across partition boundaries.
     val customers = Tables.load(spark, sf, "customer").select("c_custkey", "c_name")
-    val schemes = Seq(SequentialScheme(3), SequentialExampleScheme(), ShuffledScheme(3, seed = 1),
-      ShuffledScheme(3, seed = 1, sortedIndices = true), ShuffledExampleScheme(seed = 2),
-      ConstantScheme(4, numExamples = Some(70)),
-      ConcatenatedScheme(Seq(ConstantScheme(4, numExamples = Some(70)), ShuffledScheme(4, seed = 5))))
     val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try for (scheme <- schemes; epoch <- Seq(0, 1)) {
@@ -232,6 +234,42 @@ class SchemesSpec extends SparkSpec {
       // cursor 61 is mid-batch for both batch sizes
       assert(stream.resumeFrom(61, epoch).map(_.map(_.toSeq)).toSeq ==
         reference(stream.compiledForEpoch(epoch), 61), s"$scheme resumed at 61, epoch $epoch")
+    } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+  }
+
+  test("the streamed epoch equals the compiled epoch at every cursor, on a fresh stream and on empty input") {
+    val customers = Tables.load(spark, sf, "customer").select("c_custkey", "c_name")
+    val n = customers.count()
+    def same(stream: DataStream, cursor: Long, epoch: Int, what: String): Unit =
+      assert(stream.resumeFrom(cursor, epoch).map(_.map(_.toSeq)).toSeq ==
+        reference(stream.compiledForEpoch(epoch), cursor), what)
+    val coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      for (scheme <- schemes; epoch <- Seq(0, 1)) {
+        val total = Schemes.numExamples(scheme, n)
+        // the first call of a fresh stream, at epoch 1
+        same(DataStream(customers, scheme, Seq(col("c_custkey"))), 64, epoch,
+          s"$scheme: first call resumeFrom(64, $epoch)")
+        val stream = DataStream(customers, scheme, Seq(col("c_custkey")))
+        // 64 is a batch boundary for batch size 4 and 1
+        same(stream, 64, epoch, s"$scheme resumed at 64, epoch $epoch")
+        for (cursor <- Seq(total, total + 5)) {
+          assert(stream.resumeFrom(cursor, epoch).isEmpty, s"$scheme resumed at $cursor")
+          same(stream, cursor, epoch, s"$scheme resumed at $cursor, epoch $epoch")
+        }
+      }
+      // 70 is the first position of the Concatenated scheme's second
+      // segment, 72 lies inside its first batch
+      val concat = DataStream(customers, schemes.last, Seq(col("c_custkey")))
+      for (cursor <- Seq(70L, 72L); epoch <- Seq(0, 1))
+        same(concat, cursor, epoch, s"Concatenated resumed at $cursor, epoch $epoch")
+      val empty = customers.filter(lit(false))
+      for (scheme <- schemes; epoch <- Seq(0, 1)) {
+        val stream = DataStream(empty, scheme, Seq(col("c_custkey")))
+        assert(stream.epochIterator(epoch).isEmpty, s"$scheme over no rows, epoch $epoch")
+        same(stream, 0, epoch, s"$scheme over no rows, epoch $epoch")
+      }
     } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
   }
 }
