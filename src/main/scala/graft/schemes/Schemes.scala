@@ -1,7 +1,11 @@
 package graft.schemes
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{DirectShufflePartitionID, IntegralDivide, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.Stable
 import graft.sources.Indexed
@@ -73,6 +77,15 @@ final case class ConcatenatedScheme(schemes: Seq[IterationScheme]) extends Itera
 object Schemes {
   val Pos = "__pos"
   val BatchId = "__batch_id"
+  private val VisitHash = "__visit_hash"
+
+  /** The range of a seeded hash `h` in [0, 2^60) among `p` equal-width
+    * ranges: `h div ceil(2^60 / p)`, in [0, p). The division is integral: a
+    * double quotient rounds 2^60 - 1 up to p when p is a power of two. */
+  private[graft] def hashRange(h: Column, p: Int): Column = {
+    val width = ((1L << 60) + p - 1) / p
+    Bridge.column(IntegralDivide(Bridge.expression(h), Literal(width))).cast("int")
+  }
 
   /** One segment of an epoch: the rows with `__idx < bound` (all rows when
     * unbounded) visited in `__idx` order (`seed` empty) or in the seeded
@@ -84,14 +97,30 @@ object Schemes {
     private[schemes] def rows(df: DataFrame): DataFrame =
       bound.fold(df)(k => df.filter(col(Indexed.Idx) < k))
 
-    private[schemes] def order: Seq[Column] = seed.fold(Seq(col(Indexed.Idx))) { s =>
-      Seq(Stable.seededHash(s, col(Indexed.Idx)), col(Indexed.Idx))
+    /** The rows to visit over an indexed `df`, sorted in visit order, with
+      * `df`'s columns. In `__idx` order the sort is free wherever the index
+      * declares its order ([[Indexed]]). A shuffle runs no sample job: its
+      * hash is uniform on [0, 2^60) and known before any row is read, so
+      * each row goes straight to its partition's equal-width hash range
+      * ([[hashRange]]) and each partition sorts by `(hash, __idx)`; read in
+      * partition order, the partitions give the global order. The count is
+      * the session's `spark.sql.shuffle.partitions`, left unset on the
+      * shuffle so adaptive execution may coalesce adjacent ranges, which
+      * keeps the order. Build and run the frame under one conf: the shuffle
+      * re-reads the count whenever the plan is rewritten. */
+    def visit(df: DataFrame): DataFrame = seed match {
+      case None => rows(df).sort(col(Indexed.Idx))
+      case Some(s) =>
+        val p = SQLConf.get.numShufflePartitions
+        val ranged = rows(df).withColumn(VisitHash, Stable.seededHash(s, col(Indexed.Idx)))
+          .repartition(Bridge.column(DirectShufflePartitionID(Bridge.expression(
+            hashRange(col(VisitHash), p)))))
+        // A range id >= the shuffle's count would wrap to a low partition.
+        val shuffle = ranged.queryExecution.logical.asInstanceOf[RepartitionByExpression]
+        if (shuffle.numPartitions != p) throw new IllegalStateException(
+          s"visit: the hash ranges assume $p partitions, the shuffle has ${shuffle.numPartitions}")
+        ranged.sortWithinPartitions(VisitHash, Indexed.Idx).drop(VisitHash)
     }
-
-    /** The rows to visit over an indexed `df`, sorted in visit order. In
-      * `__idx` order the sort is free wherever the index declares its order
-      * ([[Indexed]]); a shuffle pays one range sort. */
-    def visit(df: DataFrame): DataFrame = rows(df).sort(order: _*)
 
     /** Rows this segment visits over an `n`-row input. */
     private[schemes] def examples(n: Long): Long = bound.fold(n)(math.min(n, _))
@@ -113,17 +142,17 @@ object Schemes {
 
   /** Compile `scheme` over an indexed DataFrame (must carry `__idx`; see
     * [[Indexed.withIdx]]). Returns the input plus `__pos` (and `__batch_id`
-    * for batch schemes): `__idx` itself in index order, otherwise the scan
-    * index of the visit order. */
+    * for batch schemes): `__idx` itself in index order, otherwise the
+    * storage index of the visit frame ([[Segment.visit]]), the frame the
+    * stream pulls. */
   def compile(df: DataFrame, scheme: IterationScheme): DataFrame = {
     require(df.columns.contains(Indexed.Idx),
       s"scheme compilation requires a stable ${Indexed.Idx}; use Indexed.withIdx first")
     val withBatch = !scheme.requestsExamples
     def one(seg: Segment): DataFrame = {
-      val rows = seg.rows(df)
       val withPos =
-        if (seg.seed.isEmpty) rows.withColumn(Pos, col(Indexed.Idx))
-        else Indexed.withIdx(rows, seg.order, Pos)
+        if (seg.seed.isEmpty) seg.rows(df).withColumn(Pos, col(Indexed.Idx))
+        else Indexed.withStorageIdx(seg.visit(df), Pos)
       if (!withBatch) withPos
       else {
         val b = seg.batchSize

@@ -43,7 +43,10 @@ object Indexed {
     * unlike [[withIdx]], NOT invariant to layout: it numbers the layout,
     * not the data, so any upstream shuffle (repartition, a different file
     * split) renumbers the same rows (asserted in PropertiesSpec). Use it
-    * only directly over a source whose layout is the order you mean. */
+    * only directly over a source whose layout is the order you mean — such
+    * as a scheme's shuffled visit frame ([[graft.schemes.Schemes.Segment
+    * .visit]]), whose layout is set by hash ranges and a sort within each,
+    * not by its input's layout. */
   def withStorageIdx(df: DataFrame, idxName: String = Idx): DataFrame =
     PrefixSum.scan(df, None, isMax = false, idxName, total = false)._1
 

@@ -23,8 +23,11 @@ import graft.sources.Indexed
   * are counted as they arrive: every `batchSize` rows of a segment are one
   * batch, so no batch straddles a segment, and `sortedIndices` re-sorts a
   * batch by `__idx` on the driver (only that scheme pulls `__idx`). No
-  * position column is computed: a shuffled epoch is one range sort and its
-  * fetches; an epoch in declared `__idx` order is its fetches alone.
+  * position column is computed: a shuffled epoch is one shuffle map stage,
+  * which sends each row to its hash range with no sample job, and its
+  * fetches; an epoch in declared `__idx` order is its fetches alone. The
+  * map stage runs on adaptive execution's own thread, under the pulling
+  * thread's call site, so every job of an epoch names this file.
   * `next` reads its batch and peeks one row beyond it, so every fetch
   * starts inside `next`, and `hasNext` peeks at most one row.
   *
@@ -91,13 +94,30 @@ final class DataStream(val source: DataFrame, val scheme: IterationScheme,
     * visit order, with each batch re-sorted by `__idx` for `sortedIndices`. */
   private def pull(seg: Schemes.Segment): Iterator[Row] = {
     val visit = seg.visit(indexed)
-    if (!seg.sortedIndices) visit.select(dataCols: _*).toLocalIterator().asScala
+    if (!seg.sortedIndices) fetch(visit.select(dataCols: _*))
     else {
       val idx = dataCols.length
-      visit.select(dataCols :+ col(Indexed.Idx): _*).toLocalIterator().asScala
+      fetch(visit.select(dataCols :+ col(Indexed.Idx): _*))
         .grouped(seg.batchSize)
         .flatMap(_.sortBy(_.getLong(idx)).iterator.map(r => Row.fromSeq(r.toSeq.init)))
     }
+  }
+
+  /** `df`'s rows, one partition at a time. The stages `toLocalIterator`
+    * materializes up front are submitted from adaptive execution's thread,
+    * whose stack names no caller; this thread's call site rides there in
+    * the local properties Spark copies to it, and is restored after. */
+  private def fetch(df: DataFrame): Iterator[Row] = {
+    val sc = df.sparkSession.sparkContext
+    val depth = sys.props.getOrElse("spark.callstack.depth", "20").toInt // as Spark's own
+    val stack = Thread.currentThread.getStackTrace.drop(1).take(depth)
+    val site = Seq(
+      "callSite.short" -> s"toLocalIterator at ${stack.head.getFileName}:${stack.head.getLineNumber}",
+      "callSite.long" -> stack.mkString("\n"))
+    val before = site.map { case (k, _) => k -> sc.getLocalProperty(k) }
+    site.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    try df.toLocalIterator().asScala
+    finally before.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Endless epochs (fuel/streams.py:113-119 `iterate_epochs`). With

@@ -272,4 +272,38 @@ class SchemesSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
   }
+
+  test("hash ranges: 0 and 2^60 - 1 fall in the end ranges, ids step at every edge") {
+    import SparkSpec.spark.implicits._
+    for (p <- Seq(1, 2, 3, 7, 8, 200)) {
+      val width = ((1L << 60) + p - 1) / p
+      val edges = (1 until p).flatMap(k => Seq((k * width - 1, k - 1), (k * width, k)))
+      val cases = (0L, 0) +: edges :+ (((1L << 60) - 1, p - 1))
+      val got = cases.map(_._1).toDF("h").select(Schemes.hashRange(col("h"), p))
+        .collect().map(_.getInt(0)).toSeq
+      assert(got == cases.map(_._2), s"$p ranges")
+    }
+  }
+
+  test("a streamed shuffle is the (seededHash, __idx) order at any partition count") {
+    val customers = Tables.load(spark, sf, "customer").select("c_custkey", "c_name")
+    val numbered = Indexed.withIdx(customers, Seq(col("c_custkey")))
+    // epoch 1 of seed 4 shuffles with seed 5, sorted here on the driver
+    val expected = numbered
+      .select(col("c_custkey"), col("c_name"), col(Indexed.Idx),
+        graft.functions.Stable.seededHash(5, col(Indexed.Idx)))
+      .collect().toSeq.sortBy(r => (r.getLong(3), r.getLong(2))).map(r => Seq(r.get(0), r.get(1)))
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val before = keys.map(spark.conf.get)
+    try for (p <- Seq(1, 3, 8); coalesce <- Seq(true, false)) {
+      keys.zip(Seq(p.toString, coalesce.toString)).foreach { case (k, v) => spark.conf.set(k, v) }
+      // the second input carries a shuffle of its own upstream
+      for (scheme <- Seq(ShuffledScheme(3, seed = 4), ShuffledExampleScheme(seed = 4));
+          (input, i) <- Seq(numbered, numbered.repartition(5, col("c_custkey"))).zipWithIndex) {
+        val got = DataStream(input, scheme, Seq(col("c_custkey"))).epochIterator(1).toSeq
+        assert(got.flatten.map(_.toSeq) == expected,
+          s"$scheme over input $i at $p partitions, coalescing $coalesce")
+      }
+    } finally keys.zip(before).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }

@@ -9,22 +9,22 @@ import graft.sources.{Indexed, Tables}
 import graft.stream.DataStream
 
 /** The Spark jobs one epoch of a [[DataStream]] starts. An epoch pulls its
-  * visit frame and cuts batches on the driver: a shuffled epoch is one range
-  * sort (its sample job and map stage) plus one fetch job per partition,
-  * with no prefix scan; an epoch in the index's declared order is its fetch
-  * jobs alone. Shuffles stay uncoalesced so the indexed frame keeps several
-  * partitions. */
+  * visit frame and cuts batches on the driver: a shuffled epoch is one
+  * shuffle map stage (rows go to known hash ranges, with no sample job)
+  * plus one fetch job per partition, with no prefix scan; an epoch in the
+  * index's declared order is its fetch jobs alone. Shuffles stay
+  * uncoalesced so the indexed frame keeps several partitions. */
 class StreamJobsSpec extends SparkSpec {
   private val order = Seq(col("c_custkey"))
 
-  private def uncoalesced[T](body: => T): T = {
+  private def coalescing[T](on: Boolean)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val before = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    spark.conf.set(key, on.toString)
     try body finally spark.conf.set(key, before)
   }
 
-  private lazy val indexed: DataFrame = uncoalesced(Indexed.withIdx(
+  private lazy val indexed: DataFrame = coalescing(on = false)(Indexed.withIdx(
     Tables.load(spark, sf, "customer").select("c_custkey", "c_name"), order))
   private lazy val n = indexed.count()
   private lazy val partitions = indexed.rdd.getNumPartitions
@@ -33,8 +33,9 @@ class StreamJobsSpec extends SparkSpec {
   private def result(j: SparkListenerJobStart) = j.stageInfos.maxBy(_.stageId)
 
   /** The jobs that pulling all of epoch `epoch` starts (iterator included). */
-  private def epochJobs(stream: DataStream, epoch: Int): Seq[SparkListenerJobStart] =
-    uncoalesced {
+  private def epochJobs(stream: DataStream, epoch: Int,
+      coalesce: Boolean = false): Seq[SparkListenerJobStart] =
+    coalescing(coalesce) {
       val (batches, jobs) = jobStarts(stream.epochIterator(epoch).toVector)
       assert(batches.map(_.size).sum == Schemes.numExamples(stream.scheme, n))
       jobs
@@ -43,15 +44,24 @@ class StreamJobsSpec extends SparkSpec {
   private def sites(jobs: Seq[SparkListenerJobStart]): String =
     jobs.map(j => s"${result(j).name} (${result(j).numTasks} tasks)").mkString("\n")
 
-  test("a shuffled epoch runs one range sort and its fetches, and no prefix scan") {
+  test("a shuffled epoch is a map stage and its fetches: no sample job, no prefix scan") {
     assert(partitions > 1, "the indexed frame must span several partitions")
-    for (scheme <- Seq(ShuffledScheme(16, seed = 3), ShuffledExampleScheme(seed = 3))) {
-      val jobs = epochJobs(DataStream(indexed, scheme, order), 1)
+    for (scheme <- Seq(ShuffledScheme(16, seed = 3), ShuffledExampleScheme(seed = 3));
+        coalesce <- Seq(false, true)) {
+      val jobs = epochJobs(DataStream(indexed, scheme, order), 1, coalesce)
+      val what = s"$scheme, coalescing $coalesce:\n${sites(jobs)}"
       assert(!jobs.exists(result(_).name.contains("PrefixSum.scala")),
-        s"$scheme: a prefix scan ran in the epoch:\n${sites(jobs)}")
-      // the sort's sample job and map stage, then one job per partition
+        s"a prefix scan ran in the epoch: $what")
+      // the map stage, then one job per partition: all of them when
+      // uncoalesced, at least one when adjacent ranges coalesce
       val (fetches, all) = (jobs.count(result(_).numTasks == 1), jobs.size)
-      assert(fetches == partitions && all == partitions + 2, s"$scheme:\n${sites(jobs)}")
+      assert(all == fetches + 1, what)
+      assert(if (coalesce) fetches >= 1 else fetches == partitions, what)
+      // the map stage runs on adaptive execution's thread under the
+      // pulling thread's call site
+      assert(jobs.forall(result(_).details.contains("DataStream.scala")),
+        s"a job names no DataStream.scala frame: $what\n" +
+          jobs.map(result(_).details).mkString("\n--\n"))
     }
   }
 
@@ -83,7 +93,7 @@ class StreamJobsSpec extends SparkSpec {
         s"$scheme: first call at epoch 1:\n${sites(first)}\nepoch 2:\n${sites(later)}")
       val nAgain = epochJobs(fresh, 1).size
       assert(nAgain == nLater, s"$scheme: epoch 1 again")
-      val resumed = uncoalesced(jobStarts(
+      val resumed = coalescing(on = false)(jobStarts(
         DataStream(indexed, scheme, order).resumeFrom(20, 1).toVector)._2)
       val nResumed = resumed.size
       assert(nResumed == nLater, s"$scheme: first call resumeFrom(20, 1):\n${sites(resumed)}")
