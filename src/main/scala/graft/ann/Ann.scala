@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
 import graft.functions.{Guards, TopK}
 import graft.sources.{Store, StoreKind}
 
@@ -1913,34 +1914,39 @@ object Ann {
 
   /** Embedding near-duplicate pairs: sign-LSH bucketed candidate join,
     * exact cosine verify at `threshold` — the embedding analog of
-    * MinHash+Jaccard dedup; never all-pairs.
+    * MinHash+Jaccard dedup; never all-pairs. Output: (id1, id2, cos),
+    * id1 < id2.
     *
     * SIZING: candidate volume is quadratic in bucket occupancy, so
     * `planes` must grow with the corpus — pick
     * `planes ≈ log2(n / targetBucketSize)` (e.g. 2^12 buckets holds ~24/
     * bucket at n=100k; at 10^9 vectors use ~planes=26) and raise `tables`
     * to recover the recall each added plane costs. The defaults suit
-    * ~10^4-10^5 rows. */
+    * ~10^4-10^5 rows. A bucket past the banded families' default bound
+    * ([[graft.dedup.Dedup.MaxBucket]]) raises instead of going
+    * quadratic. */
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      seed: Long = 42, tables: Int = 6, planes: Int = 8, dim: Int = 64): DataFrame = {
+      seed: Long = 42, tables: Int = 6, planes: Int = 8, dim: Int = 64): DataFrame =
+    Dedup.nearPairs(nearDupFamily(df, idCol, vecCol, threshold, seed, tables, planes, dim))
+
+  /** [[nearDupPairs]]' family for [[graft.dedup.Dedup.nearPairs]]: key
+    * rows (table, bucket, __id), the bucket join and pair dedup on IDS
+    * ONLY (16 bytes/row through the shuffles), then each side's vector
+    * once per surviving pair for the exact verify — carrying the vectors
+    * through the bucket join and the dedup would shuffle dim*4 bytes per
+    * candidate per table. */
+  private[graft] def nearDupFamily(df: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, seed: Long, tables: Int, planes: Int,
+      dim: Int): Dedup.PairFamily = {
     val np = resolvePlanes("nearDupPairs", planes, df.count())
     val hp = hyperplanes(seed, tables, np, dim)
-    // Bucket join and pair-dedup on IDS ONLY (16 bytes/row through the
-    // shuffles), then fetch each side's vector once per surviving pair for
-    // the exact verify — carrying the vectors through the bucket join and
-    // the dedup would shuffle dim*4 bytes per candidate per table.
-    val bucketed = signBucketed(df, hp, col(vecCol), col(idCol).as("__id"))
-    val a = bucketed.select(col("table"), col("bucket"), col("__id").as("id1"))
-    val b = bucketed.select(col("table"), col("bucket"), col("__id").as("id2"))
-    val pairs = a.join(b, Seq("table", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val vecs = df.select(col(idCol), col(vecCol))
-    pairs
-      .join(vecs.select(col(idCol).as("id1"), col(vecCol).as("v1")), Seq("id1"))
-      .join(vecs.select(col(idCol).as("id2"), col(vecCol).as("v2")), Seq("id2"))
-      .select(col("id1"), col("id2"), cosine(col("v1"), col("v2")).as("cos"))
-      .filter(col("cos") >= threshold)
+    Dedup.PairFamily(signBucketed(df, hp, col(vecCol), col(idCol).as("__id")), "__id",
+      Nil, Seq("table", "bucket"), "nearDupPairs: bucket",
+      "Add planes (halves expected occupancy per plane), or drop exact duplicate " +
+        "vectors first", Dedup.MaxBucket,
+      verify = Some(Dedup.PairVerify(df, idCol,
+        (Seq(col(vecCol).as("v1")), Seq(col(vecCol).as("v2"))),
+        Seq(cosine(col("v1"), col("v2")).as("cos")), col("cos") >= threshold)))
   }
 
   /** Approximate top-k: bucket the corpus and queries in `tables`

@@ -191,26 +191,10 @@ object Dedup {
           x => x.cast("string")))))
     }: _*)
 
-  /** Runtime enforcement of the hot-bucket contract shared by
-    * [[lshCandidates]] and [[simhashNearDup]]: candidate volume is
-    * quadratic in bucket occupancy, so a bucket past `maxBucket` means
-    * the exact-dedup-first ORDERING RULE was skipped (a clone family's
-    * identical signatures all land in one bucket) or the banding is
-    * undersized for the corpus — fail loudly with the fix in the message
-    * instead of going quadratic. The occupancy count is a window over
-    * the same (band, key) partitioning the candidate join shuffles on
-    * anyway, over ids-only rows ([[graft.functions.Guards.occupancy]]). */
-  private def guardOccupancy(banded: DataFrame, keyCol: String,
-      maxBucket: Int, op: String, groupCols: Seq[String] = Nil): DataFrame =
-    Guards.occupancy(banded, groupCols :+ "band" :+ keyCol, keyCol,
-      "maxBucket", maxBucket, s"$op: bucket", "Run Dedup.exact BEFORE near-dup " +
-        "banding (clone families are the classic cause), or resize the banding " +
-        "/ raise maxBucket")
-
-  /** Banded signature rows: one (idCol, sigCol, band, bkey) row per band,
-    * with the degeneration guard — slicing past the signature would give
-    * every doc identical band keys (a silent all-pairs join), so
-    * undersized signatures raise instead. The signature column rides
+  /** Banded signature rows: one (idCol, carry…, sigCol, band, bkey) row
+    * per band, with the degeneration guard — slicing past the signature
+    * would give every doc identical band keys (a silent all-pairs join),
+    * so undersized signatures raise instead. The signature column rides
     * along (8 longs — cheap) for consumers that verify by
     * [[sigAgreement]]; consumers that don't, project it away and column
     * pruning removes it from the explode. */
@@ -225,14 +209,64 @@ object Dedup {
       posexplode(bandKeys(sig, bands, rowsPerBand)).as(Seq("band", "bkey")): _*)
   }
 
-  /** [[banded]] plus the hot-bucket occupancy guard — the form a
-    * candidate join's probe side must use (see [[lshCandidates]]'s
-    * ordering rule). */
-  def bandedGuarded(df: DataFrame, idCol: String, sigCol: String,
-      bands: Int, rowsPerBand: Int, op: String,
-      maxBucket: Int = 100000): DataFrame =
-    guardOccupancy(banded(df, idCol, sigCol, bands, rowsPerBand, op),
-      "bkey", maxBucket, op)
+  /** The default bucket bound of the banded pair families. */
+  private[graft] val MaxBucket = 100000
+
+  /** A banded near-dup pair family for [[nearPairs]]: key `rows`
+    * (groups…, keys…, idCol, carry…); `what` and `fix` word the
+    * occupancy guard's message; `carry` reaches both candidate sides
+    * suffixed 1 and 2 for the lossless `prune`. */
+  private[graft] final case class PairFamily(rows: DataFrame, idCol: String,
+      groups: Seq[String], keys: Seq[String], what: String, fix: String,
+      maxBucket: Int, carry: Seq[String] = Nil, prune: Option[Column] = None,
+      verify: Option[PairVerify] = None)
+
+  /** A [[PairFamily]]'s verify: `sides` project each side's signatures out
+    * of `sigs` (keyed by `idCol`), `keep` filters the rejoined `scores`. */
+  private[graft] final case class PairVerify(sigs: DataFrame, idCol: String,
+      sides: (Seq[Column], Seq[Column]), scores: Seq[Column], keep: Column)
+
+  /** The one banded near-dup pair body, which every corpus-vs-itself
+    * banded search runs: side a's key rows go through the occupancy guard
+    * ([[graft.functions.Guards.occupancy]], on the partitioning the join
+    * shuffles on) — candidate volume is quadratic in occupancy, so a
+    * bucket past `maxBucket` (a clone family skipped the exact-dedup-first
+    * ORDERING RULE, or the banding is undersized) raises before the join
+    * can multiply it; every bucket appears on side a, so one guarded side
+    * suffices. Then the ids-only self-join on (groups…, keys…) with
+    * id1 < id2, the prune and `distinct`, and the verify's signature
+    * rejoin and filter. Output: (groups…, id1, id2, scores…). */
+  private[graft] def nearPairs(f: PairFamily): DataFrame = {
+    val on = f.groups ++ f.keys
+    def side(rows: DataFrame, i: Int): DataFrame =
+      rows.select((on.map(col) :+ col(f.idCol).as(s"id$i")) ++
+        f.carry.map(c => col(c).as(s"$c$i")): _*)
+    val a = side(Guards.occupancy(f.rows, on, on.last, "maxBucket", f.maxBucket,
+      f.what, f.fix), 1)
+    val joined = a.join(side(f.rows, 2), on).filter(col("id1") < col("id2"))
+    val pairCols = (f.groups :+ "id1" :+ "id2").map(col)
+    val cand = f.prune.fold(joined)(joined.filter).select(pairCols: _*).distinct()
+    f.verify.fold(cand) { v =>
+      cand.join(v.sigs.select(col(v.idCol).as("id1") +: v.sides._1: _*), Seq("id1"))
+        .join(v.sigs.select(col(v.idCol).as("id2") +: v.sides._2: _*), Seq("id2"))
+        .select(pairCols ++ v.scores: _*)
+        .filter(v.keep)
+    }
+  }
+
+  /** The fix named by the MinHash and SimHash families' guard. */
+  private val ExactFirst = "Run Dedup.exact BEFORE near-dup banding (clone " +
+    "families are the classic cause), or resize the banding / raise maxBucket"
+
+  /** The MinHash family: [[banded]] rows keyed by (groups…, band, bkey). */
+  private def minhashFamily(df: DataFrame, idCol: String, sigCol: String,
+      groups: Seq[String], bands: Int, rowsPerBand: Int, maxBucket: Int,
+      op: String): PairFamily =
+    PairFamily(banded(df, idCol, sigCol, bands, rowsPerBand, op, groups), idCol,
+      groups, Seq("band", "bkey"), s"$op: bucket", ExactFirst, maxBucket)
+
+  /** The exact-Jaccard verifies' sides: each pair's shingle-hash sets. */
+  private val ShingleSides = (Seq(col("sh").as("sh1")), Seq(col("sh").as("sh2")))
 
   /** Candidate pairs from banded LSH: explode band keys, self-join per
     * bucket (id1 < id2), distinct. The join is key-partitioned on the band
@@ -246,20 +280,11 @@ object Dedup {
     * one representative, which is why [[graft.text.Curation]] stages it
     * third, ahead of the MinHash stage. The rule is ENFORCED, not
     * advisory: any bucket past `maxBucket` ids raises at runtime
-    * ([[guardOccupancy]]) before the quadratic join can materialize. */
+    * ([[nearPairs]]' guard) before the quadratic join can materialize. */
   def lshCandidates(df: DataFrame, idCol: String, sigCol: String,
-      bands: Int, rowsPerBand: Int, maxBucket: Int = 100000): DataFrame = {
-    // One guarded side suffices: every bucket appears on side a, so an
-    // overfull bucket raises there before the join multiplies it.
-    val a = bandedGuarded(df, idCol, sigCol, bands, rowsPerBand,
-        "lshCandidates", maxBucket)
-      .select(col("band"), col("bkey"), col(idCol).as("id1"))
-    val b = banded(df, idCol, sigCol, bands, rowsPerBand, "lshCandidates")
-      .select(col("band"), col("bkey"), col(idCol).as("id2"))
-    a.join(b, Seq("band", "bkey"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-  }
+      bands: Int, rowsPerBand: Int, maxBucket: Int = 100000): DataFrame =
+    nearPairs(minhashFamily(df, idCol, sigCol, Nil, bands, rowsPerBand, maxBucket,
+      "lshCandidates"))
 
   /** [[lshCandidates]] restricted WITHIN groups — the sharded-dedup
     * shape the published pipelines actually run (FineWeb dedups per CC
@@ -276,17 +301,27 @@ object Dedup {
     * group: key on (group, content-hash)) before this. */
   def lshCandidatesGrouped(df: DataFrame, idCol: String, sigCol: String,
       groupCol: String, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 100000): DataFrame = {
-    val op = "lshCandidatesGrouped"
-    val a = guardOccupancy(
-        banded(df, idCol, sigCol, bands, rowsPerBand, op, Seq(groupCol)),
-        "bkey", maxBucket, op, Seq(groupCol))
-      .select(col(groupCol), col("band"), col("bkey"), col(idCol).as("id1"))
-    val b = banded(df, idCol, sigCol, bands, rowsPerBand, op, Seq(groupCol))
-      .select(col(groupCol), col("band"), col("bkey"), col(idCol).as("id2"))
-    a.join(b, Seq(groupCol, "band", "bkey"))
-      .filter(col("id1") < col("id2"))
-      .select(groupCol, "id1", "id2").distinct()
+      maxBucket: Int = 100000): DataFrame =
+    nearPairs(minhashFamily(df, idCol, sigCol, Seq(groupCol), bands, rowsPerBand,
+      maxBucket, "lshCandidatesGrouped"))
+
+  /** MinHash near-dup pairs verified by exact Jaccard, over a frame of
+    * [[minhashFeatures]] (`featCol`, keyed by `idCol`): [[lshCandidates]]
+    * at 4 bands × 2 rows — [[lshCandidatesGrouped]] per `groupCols` shard
+    * when given — then each candidate's distinct shingle-hash sets rejoin
+    * and pairs at Jaccard >= 0.5 stay. Output: (groupCols…, id1, id2,
+    * jaccard), id1 < id2. The feature frame feeds three plan consumers
+    * (the signatures and both verify sides); whether it persists is the
+    * caller's call. */
+  def minhashPairs(feat: DataFrame, idCol: String, featCol: String,
+      groupCols: Seq[String] = Nil): DataFrame = {
+    val sig = feat.select((col(idCol) +: groupCols.map(col)) :+
+      col(featCol)("sig").as("sig"): _*)
+    val op = if (groupCols.isEmpty) "lshCandidates" else "lshCandidatesGrouped"
+    nearPairs(minhashFamily(sig, idCol, "sig", groupCols, 4, 2, MaxBucket, op).copy(
+      verify = Some(PairVerify(feat.select(col(idCol), col(featCol)("shingles").as("sh")),
+        idCol, ShingleSides, Seq(jaccard(col("sh1"), col("sh2")).as("jaccard")),
+        col("jaccard") >= 0.5))))
   }
 
   /** Exact n-gram Jaccard similarity join (AllPairs prefix filtering,
@@ -346,25 +381,16 @@ object Dedup {
       explode(expr(
         s"slice(sh, 1, size(sh) - ((size(sh) * $tNum + ${tDen - 1}) div $tDen) + 1)"))
         .as("ph"))
-    val probe = Guards.occupancy(prefixes, Seq("ph"), "ph", "maxBucket", maxBucket,
-      "jaccardJoin: prefix bucket", "Run Dedup.exact first (clone families are " +
-        "the classic cause), raise the threshold, or move this corpus to the LSH tier")
-    val cand = probe
-      .select(col("ph"), col(idCol).as("id1"), col("n").as("n1"))
-      .join(prefixes.select(col("ph"), col(idCol).as("id2"), col("n").as("n2")),
-        Seq("ph"))
-      .filter(col("id1") < col("id2"))
-      .filter(greatest(col("n1"), col("n2")) * tNum <=
-        least(col("n1"), col("n2")) * tDen)
-      .select("id1", "id2").distinct()
-    cand
-      .join(sets.select(col(idCol).as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(sets.select(col(idCol).as("id2"), col("sh").as("sh2")), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        size(array_intersect(col("sh1"), col("sh2"))).cast("bigint").as("inter"),
-        size(col("sh1")).cast("bigint").as("n1"),
-        size(col("sh2")).cast("bigint").as("n2"))
-      .filter(col("inter") * tDen >= (col("n1") + col("n2") - col("inter")) * tNum)
+    nearPairs(PairFamily(prefixes, idCol, Nil, Seq("ph"), "jaccardJoin: prefix bucket",
+      "Run Dedup.exact first (clone families are the classic cause), raise the " +
+        "threshold, or move this corpus to the LSH tier", maxBucket,
+      carry = Seq("n"),
+      prune = Some(greatest(col("n1"), col("n2")) * tNum <= least(col("n1"), col("n2")) * tDen),
+      verify = Some(PairVerify(sets, idCol, ShingleSides, Seq(
+          size(array_intersect(col("sh1"), col("sh2"))).cast("bigint").as("inter"),
+          size(col("sh1")).cast("bigint").as("n1"),
+          size(col("sh2")).cast("bigint").as("n2")),
+        col("inter") * tDen >= (col("n1") + col("n2") - col("inter")) * tNum))))
   }
 
   /** Benchmark decontamination — the curation stage that finds corpus
@@ -631,7 +657,7 @@ object Dedup {
     * (60-bit simhash) hold occupancy O(1) to ~10^6 per partition-sized
     * corpus slice; beyond that, 64-bit+ signatures via two packed longs.
     * Undersized banding (or skipped exact dedup) fails loudly at runtime
-    * via the shared `maxBucket` occupancy guard ([[guardOccupancy]]). */
+    * via the shared `maxBucket` occupancy guard ([[nearPairs]]). */
   def simhashNearDup(df: DataFrame, idCol: String, simCol: String,
       bands: Int, bitsPerBand: Int, maxHamming: Int,
       maxBucket: Int = 100000): DataFrame = {
@@ -648,20 +674,11 @@ object Dedup {
       if (bitsPerBand > 0) bitsPerBand
       else math.min(60 / bands, graft.ann.Ann.planesForOccupancy(
         math.max(1L, df.count())))
-    val banded = simhashBanded(df, idCol, simCol, bands, bpb)
-    // One guarded side suffices (see lshCandidates).
-    val a = guardOccupancy(banded, "bval", maxBucket, "simhashNearDup")
-      .select(col("band"), col("bval"), col(idCol).as("id1"))
-    val b = banded.select(col("band"), col("bval"), col(idCol).as("id2"))
-    val cand = a.join(b, Seq("band", "bval"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val sigs = df.select(col(idCol), col(simCol))
-    cand
-      .join(sigs.select(col(idCol).as("id1"), col(simCol).as("s1")), Seq("id1"))
-      .join(sigs.select(col(idCol).as("id2"), col(simCol).as("s2")), Seq("id2"))
-      .select(col("id1"), col("id2"), hammingDistance(col("s1"), col("s2")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    nearPairs(PairFamily(simhashBanded(df, idCol, simCol, bands, bpb), idCol, Nil,
+      Seq("band", "bval"), "simhashNearDup: bucket", ExactFirst, maxBucket,
+      verify = Some(PairVerify(df, idCol, (Seq(col(simCol).as("s1")), Seq(col(simCol).as("s2"))),
+        Seq(hammingDistance(col("s1"), col("s2")).as("hamming")),
+        col("hamming") <= maxHamming))))
   }
 
   /** WIDE-signature banded SimHash near-dup — the scale tier
@@ -713,22 +730,14 @@ object Dedup {
         if (b < b0) shiftright(col(sim0Col), b * bpb).bitwiseAND(mask)
         else shiftright(col(sim1Col), (b - b0) * bpb).bitwiseAND(mask)
       }: _*)).as(Seq("band", "bval")))
-    val a = guardOccupancy(banded, "bval", maxBucket, "simhashNearDupWide")
-      .select(col("band"), col("bval"), col(idCol).as("id1"))
-    val b = banded.select(col("band"), col("bval"), col(idCol).as("id2"))
-    val cand = a.join(b, Seq("band", "bval"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val sigs = df.select(col(idCol), col(sim0Col), col(sim1Col))
-    cand
-      .join(sigs.select(col(idCol).as("id1"),
-        col(sim0Col).as("__s0a"), col(sim1Col).as("__s1a")), Seq("id1"))
-      .join(sigs.select(col(idCol).as("id2"),
-        col(sim0Col).as("__s0b"), col(sim1Col).as("__s1b")), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        (hammingDistance(col("__s0a"), col("__s0b")) +
-          hammingDistance(col("__s1a"), col("__s1b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    nearPairs(PairFamily(banded, idCol, Nil, Seq("band", "bval"),
+      "simhashNearDupWide: bucket", ExactFirst, maxBucket,
+      verify = Some(PairVerify(df, idCol,
+        (Seq(col(sim0Col).as("__s0a"), col(sim1Col).as("__s1a")),
+          Seq(col(sim0Col).as("__s0b"), col(sim1Col).as("__s1b"))),
+        Seq((hammingDistance(col("__s0a"), col("__s0b")) +
+          hammingDistance(col("__s1a"), col("__s1b"))).as("hamming")),
+        col("hamming") <= maxHamming))))
   }
 
   /** Tier + band width for a banded simhash near-dup over an `nDocs`
@@ -838,8 +847,8 @@ object Dedup {
     * dedup key (md5 of the 40-char text prefix, [[graft.text.Curation]]'s
     * convention) and `sig` the `numHashes`-component MinHash signature
     * over hashed k-shingles. Rows whose token array is empty keep a null
-    * `sig` (nothing to shingle) — [[lshCrossCandidates]] ignores them and
-    * exact matching still applies.
+    * `sig` (nothing to shingle) — [[graft.text.Curation.admit]]'s near
+    * tier ignores them and exact matching still applies.
     *
     * PURE PROJECTION: the shingle math is [[shingleHashes]]' (same fold,
     * same family constants — the q60 oracle and AdmitSpec pin the
@@ -918,24 +927,4 @@ object Dedup {
         df.filter(col("simhash").isNotNull), "doc_id", "simhash", bands, bitsPerBand)
       .select(col("band"), col("bval"), col("doc_id"), col("simhash")),
       Seq("band", "bval"), sorted = false)
-
-  /** Cross-corpus LSH candidates: FRESH docs sharing any band key with a
-    * STORE doc. Output (fresh_id, store_id), distinct. Both inputs are
-    * (id, sig) shaped; null signatures are skipped. The occupancy guard
-    * rides the fresh side — the store is a CURATED corpus, near-dup-free
-    * by construction, so a hot bucket means the fresh batch skipped exact
-    * dedup (see [[lshCandidates]]'s ordering rule). The join is
-    * key-partitioned on (band, band key) and carries ids only; the store
-    * side never moves more than its banded id stream. */
-  def lshCrossCandidates(fresh: DataFrame, store: DataFrame, idCol: String,
-      sigCol: String, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 100000): DataFrame = {
-    val f = bandedGuarded(fresh.filter(col(sigCol).isNotNull), idCol, sigCol,
-        bands, rowsPerBand, "lshCrossCandidates", maxBucket)
-      .select(col("band"), col("bkey"), col(idCol).as("fresh_id"))
-    val s = banded(store.filter(col(sigCol).isNotNull), idCol, sigCol,
-        bands, rowsPerBand, "lshCrossCandidates")
-      .select(col("band"), col("bkey"), col(idCol).as("store_id"))
-    f.join(s, Seq("band", "bkey")).select("fresh_id", "store_id").distinct()
-  }
 }

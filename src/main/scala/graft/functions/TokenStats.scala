@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array higher-order functions are CodegenFallback, so every token of
   * every document paid an interpreted lambda dispatch per profile (×6),
   * on the hottest path in the engine (the gate runs over the RAW corpus,
-  * before anything is dropped, and the Recompute reuse policy re-runs it
+  * before anything is dropped, and the curation chain recomputes it
   * per consumer). Same fix the dedup family uses for minhash/simhash
   * (explode + codegen aggregation), but the gate is a pure PROJECTION —
   * exploding would add a corpus-wide shuffle — so the counts fuse into

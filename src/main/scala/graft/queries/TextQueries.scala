@@ -141,14 +141,7 @@ object TextQueries {
       val feat = docsWithTokens(s, dir)
         .select(col("doc_id"), Dedup.minhashFeatures(col("ts")).as("mf"))
         .filter(col("mf").isNotNull)
-      val shSets = feat.select(col("doc_id"), col("mf")("shingles").as("sh"))
-      val sig = feat.select(col("doc_id"), col("mf")("sig").as("sig"))
-      val cand = Dedup.lshCandidates(sig, "doc_id", "sig", bands = 4, rowsPerBand = 2)
-      cand
-        .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .select(col("id1"), col("id2"), Dedup.jaccard(col("sh1"), col("sh2")).as("jaccard"))
-        .filter(col("jaccard") >= 0.5)
+      Dedup.minhashPairs(feat, "doc_id", "mf")
     }),
 
     // SimHash: 32-bit signature per doc from token-hash bit votes,
@@ -400,10 +393,10 @@ object TextQueries {
     // language gate → quality gate → exact dedup → MinHash/LSH near-dup
     // removal → distributed token packing, hash-exact from raw corpus to
     // packed offsets (the oracle rebuilds the whole chain in SQL). The
-    // multi-consumer gated frame runs under the Recompute reuse policy —
-    // measured faster than Persist at sf0.1 and pinned by PlanSpec's
-    // corpus-scan count; see Curation.Reuse + README "Recompute vs
-    // persist" for when to flip it.
+    // multi-consumer gated frame is recomputed per consumer — measured
+    // faster than persisting at sf0.1 and pinned by PlanSpec's
+    // corpus-scan count; see README "Recompute vs persist" for when to
+    // flip it.
     "q51_curation" -> ((s, dir) =>
       graft.text.Curation.curate(docsWithTokens(s, dir))),
 
@@ -680,13 +673,7 @@ object TextQueries {
       val feat = graft.transform.Cache()(base.union(planted)
         .select(col("doc_id"), Dedup.minhashFeatures(col("ts")).as("mf"))
         .filter(col("mf").isNotNull))
-      val shSets = feat.select(col("doc_id"), col("mf")("shingles").as("sh"))
-      val sig = feat.select(col("doc_id"), col("mf")("sig").as("sig"))
-      val pairs = Dedup.lshCandidates(sig, "doc_id", "sig", bands = 4, rowsPerBand = 2)
-        .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .filter(Dedup.jaccard(col("sh1"), col("sh2")) >= 0.5)
-        .select("id1", "id2")
+      val pairs = Dedup.minhashPairs(feat, "doc_id", "mf").select("id1", "id2")
       graft.dedup.Components.clusterSizes(pairs)
     }),
 
@@ -977,16 +964,7 @@ object TextQueries {
       val feat = u.select(col("doc_id"), col("source"),
           Dedup.minhashFeatures(TextOps.tokens(col("text"))).as("mf"))
         .filter(col("mf").isNotNull)
-      val shSets = feat.select(col("doc_id"), col("mf")("shingles").as("sh"))
-      val sig = feat.select(col("doc_id"), col("source"), col("mf")("sig").as("sig"))
-      val cand = Dedup.lshCandidatesGrouped(sig, "doc_id", "sig", "source",
-        bands = 4, rowsPerBand = 2)
-      cand
-        .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .select(col("source"), col("id1"), col("id2"),
-          Dedup.jaccard(col("sh1"), col("sh2")).as("jaccard"))
-        .filter(col("jaccard") >= 0.5)
+      Dedup.minhashPairs(feat, "doc_id", "mf", Seq("source"))
     }),
 
     // FineWeb-order curation ([[graft.text.Curation.curateFineWeb]]):
@@ -1112,13 +1090,7 @@ object TextQueries {
       val feat = graft.transform.Cache()(corpus
         .select(col("doc_id"), Dedup.minhashFeatures(col("ts")).as("mf"))
         .filter(col("mf").isNotNull))
-      val shSets = feat.select(col("doc_id"), col("mf")("shingles").as("sh"))
-      val sig = feat.select(col("doc_id"), col("mf")("sig").as("sig"))
-      val pairs = Dedup.lshCandidates(sig, "doc_id", "sig", bands = 4, rowsPerBand = 2)
-        .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .filter(Dedup.jaccard(col("sh1"), col("sh2")) >= 0.5)
-        .select("id1", "id2")
+      val pairs = Dedup.minhashPairs(feat, "doc_id", "mf").select("id1", "id2")
       graft.dedup.Components.keepCanonical(corpus, "doc_id", pairs)
     }),
 
@@ -1797,13 +1769,7 @@ object TextQueries {
       val feat = graft.transform.Cache()(corpus
         .select(col("doc_id"), Dedup.minhashFeatures(col("ts")).as("mf"))
         .filter(col("mf").isNotNull))
-      val shSets = feat.select(col("doc_id"), col("mf")("shingles").as("sh"))
-      val sig = feat.select(col("doc_id"), col("mf")("sig").as("sig"))
-      val pairs = Dedup.lshCandidates(sig, "doc_id", "sig", bands = 4, rowsPerBand = 2)
-        .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .filter(Dedup.jaccard(col("sh1"), col("sh2")) >= 0.5)
-        .select("id1", "id2")
+      val pairs = Dedup.minhashPairs(feat, "doc_id", "mf").select("id1", "id2")
       graft.dedup.Components.keepBest(corpus, "doc_id", "n_toks", pairs)
     }),
 
@@ -2011,13 +1977,7 @@ object TextQueries {
       val feat = graft.transform.Cache()(corpus
         .select(col("doc_id"), Dedup.minhashFeatures(col("ts")).as("mf"))
         .filter(col("mf").isNotNull))
-      val shSets = feat.select(col("doc_id"), col("mf")("shingles").as("sh"))
-      val sig = feat.select(col("doc_id"), col("mf")("sig").as("sig"))
-      val pairs = Dedup.lshCandidates(sig, "doc_id", "sig", bands = 4, rowsPerBand = 2)
-        .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .filter(Dedup.jaccard(col("sh1"), col("sh2")) >= 0.5)
-        .select("id1", "id2")
+      val pairs = Dedup.minhashPairs(feat, "doc_id", "mf").select("id1", "id2")
       val units = corpus.select("doc_id")
         .join(graft.dedup.Components.connectedComponents(pairs),
           Seq("doc_id"), "left")

@@ -20,8 +20,9 @@ import graft.transform.Cache
   * Scale shape: gates are pure codegen projections; both dedups are
   * key-partitioned bucket joins with loud-fail degeneration guards; the
   * final pack is the distributed prefix sum (never a single-partition
-  * window). PlanSpec pins the corpus scan count so the [[Reuse]] choice
-  * below stays a conscious number.
+  * window). PlanSpec pins the corpus scan count so each site's
+  * recompute-or-persist choice (README "Recompute vs persist") stays a
+  * conscious number.
   *
   * Beyond the single-run chain ([[curateFull]]), the object carries the
   * pipeline's OPERATIONAL surface: [[report]] (per-stage counts),
@@ -30,29 +31,6 @@ import graft.transform.Cache
   * to a token budget).
   */
 object Curation {
-
-  /** Reuse policy for a multi-consumer frame: re-derive it per consumer,
-    * or materialize it once and share it. The trade (README "Recompute vs
-    * persist", measured at sf0.1):
-    *   - [[Recompute]] wins while N·(re-derivation) < materialize + N·read.
-    *     The chain entry points ([[curatedDocs]], [[curate]],
-    *     [[materialize]], [[materializeTokens]]) always recompute the
-    *     gated frame, which feeds ~5 consumers (the exact-dedup key build,
-    *     the exact-kept join, the shingle rows for signatures, and both
-    *     sides of the Jaccard verify join): its gates are cheap codegen
-    *     over a scan of 2 pruned columns.
-    *   - [[Persist]] materializes via the [[Cache]] transformer. It wins
-    *     once the re-derivation dominates — wide rows, remote storage, or
-    *     a stage too expensive to re-run: [[curateFull]] persists its
-    *     regex scrub and [[nearDedupedGrouped]] its MinHash features.
-    * Only [[nearDeduped]] takes the policy as a parameter, because its
-    * callers differ: [[dedupe]] persists the feature frame, while
-    * [[report]] and [[reportPublished]] recompute it from a stage they
-    * have already cached.
-    */
-  sealed trait Reuse
-  case object Recompute extends Reuse
-  case object Persist extends Reuse
 
   /** Stage 0: scrub — PII redaction ([[TextOps.redact]]) THEN text
     * normalization ([[TextOps.normalize]]), in that order: normalization
@@ -142,7 +120,13 @@ object Curation {
   def dedupe(gated: DataFrame): DataFrame = nearDeduped(exactDeduped(gated))
 
   /** Stage 4 alone: MinHash/LSH near-dup removal over an exact-deduped
-    * frame ([[exactDeduped]] first — the enforced ordering rule).
+    * frame ([[exactDeduped]] first — the enforced ordering rule), the
+    * higher id of every pair [[Dedup.minhashPairs]] verifies dropped.
+    * With `groupCols` the stage is SHARDED: candidate pairs form only
+    * within a shard ([[Dedup.lshCandidatesGrouped]]'s semantics — the
+    * group values ride the bucket join key, so cross-shard collisions
+    * never meet and the occupancy guard counts per shard); run the exact
+    * dedup per shard too, keyed on (group, content-key).
     *
     * Signatures and shingle sets come from [[Dedup.minhashFeatures]] —
     * a pure projection, so the corpus token stream never shuffles: the
@@ -152,57 +136,31 @@ object Curation {
     * bucket join and the candidate verify joins, which are genuinely
     * relational.
     *
-    * The feature frame PERSISTS by default — the opposite call from the
-    * chain's scan-reuse rule, and for the measured reason: this is not
-    * a narrow cheap projection but ~2n md5 digests per doc feeding
-    * THREE consumers (sig mins + both verify-join sides), and the
-    * verify joins shuffle the shingle arrays regardless, so persisting
-    * trades one cached write for two full re-hashings of the corpus
-    * (sf0.1 stage probe: 3.4 s → 2.6 s for the stage; the win
-    * compounds across every chain that embeds this stage). At 100 TB
-    * the cache is corpus-token-scale — MEMORY_AND_DISK absorbs it; pass
-    * `reuse = Recompute` when executor disk, not CPU, is the bound. */
-  def nearDeduped(exactKept: DataFrame, reuse: Reuse = Persist): DataFrame = {
-    val feat0 = exactKept
-      .select(col("doc_id"), Dedup.minhashFeatures(col("ts")).as("__mf"))
-      .filter(col("__mf").isNotNull)
-    val feat = reuse match {
-      case Persist => Cache()(feat0)
-      case Recompute => feat0
-    }
-    val shSets = feat.select(col("doc_id"), col("__mf")("shingles").as("sh"))
-    val sig = feat.select(col("doc_id"), col("__mf")("sig").as("sig"))
-    val cand = Dedup.lshCandidates(sig, "doc_id", "sig", bands = 4, rowsPerBand = 2)
-    val dropIds = cand
-      .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-      .filter(Dedup.jaccard(col("sh1"), col("sh2")) >= 0.5)
-      .select(col("id2").as("doc_id")).distinct()
-    exactKept.join(dropIds, Seq("doc_id"), "left_anti")
-  }
+    * The feature frame PERSISTS — the opposite call from the chain's
+    * scan-reuse rule, and for the measured reason: this is not a narrow
+    * cheap projection but ~2n md5 digests per doc feeding THREE
+    * consumers (sig mins + both verify-join sides), and the verify joins
+    * shuffle the shingle arrays regardless, so persisting trades one
+    * cached write for two full re-hashings of the corpus (sf0.1 stage
+    * probe: 3.4 s → 2.6 s for the stage; the win compounds across every
+    * chain that embeds this stage). At 100 TB the cache is
+    * corpus-token-scale — MEMORY_AND_DISK absorbs it. [[report]] and
+    * [[reportPublished]], whose input is a cached stage, recompute it. */
+  def nearDeduped(exactKept: DataFrame, groupCols: Seq[String] = Nil): DataFrame =
+    nearDropped(exactKept, Cache()(features(exactKept, groupCols)), groupCols)
 
-  /** [[nearDeduped]] SHARDED by `groupCol` — candidate pairs form only
-    * within a shard ([[graft.dedup.Dedup.lshCandidatesGrouped]]'s
-    * semantics: the group value rides the bucket join key, so
-    * cross-shard collisions never meet and the occupancy guard counts
-    * per shard). The ordering rule still applies, per shard: exact
-    * dedup first, keyed on (group, content-key). */
-  def nearDedupedGrouped(exactKept: DataFrame, groupCol: String): DataFrame = {
-    // persisted, for the same three-consumer rationale as [[nearDeduped]]
-    val feat = Cache()(exactKept
-      .select(col("doc_id"), col(groupCol), Dedup.minhashFeatures(col("ts")).as("__mf"))
-      .filter(col("__mf").isNotNull))
-    val shSets = feat.select(col("doc_id"), col("__mf")("shingles").as("sh"))
-    val sig = feat.select(col("doc_id"), col(groupCol), col("__mf")("sig").as("sig"))
-    val cand = Dedup.lshCandidatesGrouped(sig, "doc_id", "sig", groupCol,
-      bands = 4, rowsPerBand = 2)
-    val dropIds = cand
-      .join(shSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(shSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-      .filter(Dedup.jaccard(col("sh1"), col("sh2")) >= 0.5)
-      .select(col("id2").as("doc_id")).distinct()
-    exactKept.join(dropIds, Seq("doc_id"), "left_anti")
-  }
+  /** (doc_id, groupCols…, __mf) — [[nearDeduped]]'s MinHash features. */
+  private def features(exactKept: DataFrame, groupCols: Seq[String] = Nil): DataFrame =
+    exactKept.select((col("doc_id") +: groupCols.map(col)) :+
+        Dedup.minhashFeatures(col("ts")).as("__mf"): _*)
+      .filter(col("__mf").isNotNull)
+
+  /** `exactKept` without the higher id of each verified pair over `feat`. */
+  private def nearDropped(exactKept: DataFrame, feat: DataFrame,
+      groupCols: Seq[String] = Nil): DataFrame =
+    exactKept.join(Dedup.minhashPairs(feat, "doc_id", "__mf", groupCols)
+        .select(col("id2").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti")
 
   /** Optional stage 4b — SemDeDup-style semantic dedup between near-dup
     * removal and packing: drop the higher id of every within-cluster
@@ -229,7 +187,9 @@ object Curation {
   }
 
   /** The curated survivor set (doc_id, text, ts). The multi-consumer
-    * gated frame is [[Recompute]]d, not persisted (see [[Reuse]]). */
+    * gated frame is recomputed per consumer, not persisted: its gates are
+    * cheap codegen over a scan of 2 pruned columns (README "Recompute vs
+    * persist"). */
   def curatedDocs(docs: DataFrame): DataFrame = dedupe(gate(docs))
 
   /** Stage 4c — benchmark decontamination ([[Dedup.contaminated]]):
@@ -272,24 +232,30 @@ object Curation {
       k: Int = 3, minOverlap: Int = 2): DataFrame = {
     val scrubbed = Cache()(scrub(docs))
     val gated = Cache()(gate(scrubbed))
-    val ex = Cache()(exactDeduped(gated))
-    // Recompute, not Persist, for the feature frame HERE: the report
+    stageReport(Seq("scrubbed" -> scrubbed, "gated" -> gated), benchmark, k, minOverlap)
+  }
+
+  /** [[report]] and [[reportPublished]]'s shared tail: the last `front`
+    * stage exact-deduped, near-deduped and decontaminated, each cached,
+    * then one (stage, n_docs, n_tokens) row per stage, numbered in
+    * order. */
+  private def stageReport(front: Seq[(String, DataFrame)], benchmark: DataFrame,
+      k: Int, minOverlap: Int): DataFrame = {
+    val ex = Cache()(exactDeduped(front.last._2))
+    // The feature frame is recomputed, not persisted, HERE: the report
     // already caches every stage boundary, so feat's three consumers
     // re-project from the in-memory `ex` rows — cheaper than writing
     // the corpus-scale shingle arrays to a second cache (measured at
-    // sf0.1: the persist default cost q68 ~+1 s; the chain queries,
-    // whose ex is not a cached stage, measure the opposite).
-    val nd = Cache()(nearDeduped(ex, Recompute))
+    // sf0.1: persisting cost q68 ~+1 s; the chain queries, whose ex is
+    // not a cached stage, measure the opposite — [[nearDeduped]]).
+    val nd = Cache()(nearDropped(ex, features(ex)))
     val clean = decontaminate(nd, scrub(benchmark), k, minOverlap)
-    def stat(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(size(col("ts")).cast("bigint")), lit(0L)).as("n_tokens"))
-        .select(lit(name).as("stage"), col("n_docs"), col("n_tokens"))
-    stat("0_scrubbed", scrubbed)
-      .unionByName(stat("1_gated", gated))
-      .unionByName(stat("2_exact_dedup", ex))
-      .unionByName(stat("3_near_dedup", nd))
-      .unionByName(stat("4_decontaminated", clean))
+    (front ++ Seq("exact_dedup" -> ex, "near_dedup" -> nd, "decontaminated" -> clean))
+      .zipWithIndex.map { case ((name, df), i) =>
+        df.agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(size(col("ts")).cast("bigint")), lit(0L)).as("n_tokens"))
+          .select(lit(s"${i}_$name").as("stage"), col("n_docs"), col("n_tokens"))
+      }.reduce(_ unionByName _)
   }
 
   /** The COMPLETE published curation chain, composed end-to-end:
@@ -322,17 +288,14 @@ object Curation {
     //
     // 2. The survivor frame persists UNCONDITIONALLY: it feeds three
     //    consumers (decontamination's shingle stream, its anti-join, and
-    //    the pack), and unlike the projection-lineage trade the [[Reuse]]
-    //    policy governs, its lineage holds every dedup SHUFFLE — one
+    //    the pack), and unlike the projection-lineage trade of the
+    //    gated frame, its lineage holds every dedup SHUFFLE — one
     //    cache write of the chain's smallest frame beats re-executing
     //    its joins and aggregations twice over at any scale.
     val scrubbed = Cache()(scrub(docs))
     val survivors = Cache()(curatedDocs(scrubbed))
     val clean = decontaminate(survivors, scrub(benchmark), k, minOverlap)
-    TextOps.packSequences(
-        clean.select(col("doc_id"), size(col("ts")).cast("bigint").as("n_tokens")),
-        "doc_id", "n_tokens", seqLen)
-      .select("doc_id", "n_tokens", "tok_offset", "first_seq", "last_seq")
+    packed(clean, seqLen)
   }
 
   /** The PUBLISHED pipeline order, fully composed — [[curateFull]]'s
@@ -373,10 +336,7 @@ object Curation {
     val gated = Cache()(repetitionGate(gate(scrubbed), maxTop2GramFrac, maxDup3GramFrac))
     val survivors = Cache()(dedupe(gated))
     val clean = decontaminate(survivors, scrub(benchmark), k, minOverlap)
-    TextOps.packSequences(
-        clean.select(col("doc_id"), size(col("ts")).cast("bigint").as("n_tokens")),
-        "doc_id", "n_tokens", seqLen)
-      .select("doc_id", "n_tokens", "tok_offset", "first_seq", "last_seq")
+    packed(clean, seqLen)
   }
 
   /** The RefinedWeb order (Penedo et al. 2023): [[curatePublished]]'s
@@ -400,11 +360,9 @@ object Curation {
     val gated = Cache()(repetitionGate(gate(scrubbed), maxTop2GramFrac, maxDup3GramFrac))
     val survivors = Cache()(dedupe(gated))
     val clean = Cache()(decontaminate(survivors, scrub(benchmark), k, minOverlap))
-    val spanned = TextOps.dedupSpans(clean, "doc_id", "ts", spanK)
-      .select(col("doc_id"), (col("n_tokens") - col("n_removed")).as("n_tokens"))
-      .filter(col("n_tokens") > 0)
-    TextOps.packSequences(spanned, "doc_id", "n_tokens", seqLen)
-      .select("doc_id", "n_tokens", "tok_offset", "first_seq", "last_seq")
+    val surviving = col("n_tokens") - col("n_removed")
+    packed(TextOps.dedupSpans(clean, "doc_id", "ts", spanK).filter(surviving > 0),
+      seqLen, surviving)
   }
 
   /** The CCNet order end-to-end (Wenzek et al. 2020) — the chain that
@@ -439,9 +397,7 @@ object Curation {
     val kept = ccnetBucketed(docs, reference, maxLineOccurrences, minTokens,
         nBuckets)
       .filter(col("bucket") >= 1 && col("bucket") < nBuckets)
-    TextOps.packSequences(kept.select("doc_id", "n_tokens"),
-        "doc_id", "n_tokens", seqLen)
-      .select("doc_id", "n_tokens", "tok_offset", "first_seq", "last_seq")
+    packed(kept, seqLen, col("n_tokens"))
   }
 
   /** The FineWeb order end-to-end (Penedo et al. 2024) — the chain that
@@ -459,8 +415,8 @@ object Curation {
     *  2. **Dedup is SHARDED per snapshot** (§3.4: MinHash per CC dump —
     *     global dedup measurably hurt their benchmarks): exact dedup
     *     keys on (shard, content-prefix) and the near stage is
-    *     [[nearDedupedGrouped]], so cross-shard duplicates SURVIVE by
-    *     design.
+    *     [[nearDeduped]] with the shard as its group column, so
+    *     cross-shard duplicates SURVIVE by design.
     *
     * Full order: blocklist filter (the URL/domain blocklist analog over
     * the provenance column) → language gate → token floor →
@@ -492,7 +448,7 @@ object Curation {
     val keep = Dedup.exact(gated, col("doc_id"),
         concat_ws("\u0001", col(groupCol), substring(col("text"), 1, 40)))
       .select(col("keep_id").as("doc_id"))
-    val survivors = nearDedupedGrouped(gated.join(keep, Seq("doc_id")), groupCol)
+    val survivors = nearDeduped(gated.join(keep, Seq("doc_id")), Seq(groupCol))
     survivors.select(col("doc_id"), col(groupCol),
         TextOps.redact(col("text"), rules).as("clean"))
       .withColumn("n_tokens", size(TextOps.tokens(col("clean"))).cast("bigint"))
@@ -581,29 +537,22 @@ object Curation {
     val scrubbed = Cache()(scrubLines(docs, maxLineOccurrences = maxLineOccurrences))
     val gated = Cache()(gate(scrubbed))
     val rg = Cache()(repetitionGate(gated, maxTop2GramFrac, maxDup3GramFrac))
-    val ex = Cache()(exactDeduped(rg))
-    // Recompute for the same reason as [[report]]: ex is a cached stage.
-    val nd = Cache()(nearDeduped(ex, Recompute))
-    val clean = decontaminate(nd, scrub(benchmark), k, minOverlap)
-    def stat(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(size(col("ts")).cast("bigint")), lit(0L)).as("n_tokens"))
-        .select(lit(name).as("stage"), col("n_docs"), col("n_tokens"))
-    stat("0_line_scrubbed", scrubbed)
-      .unionByName(stat("1_gated", gated))
-      .unionByName(stat("2_repetition_gated", rg))
-      .unionByName(stat("3_exact_dedup", ex))
-      .unionByName(stat("4_near_dedup", nd))
-      .unionByName(stat("5_decontaminated", clean))
+    stageReport(Seq("line_scrubbed" -> scrubbed, "gated" -> gated,
+      "repetition_gated" -> rg), benchmark, k, minOverlap)
   }
 
   /** Stage 5: survivors packed into `seqLen`-token training sequences —
     * each doc's global token offset (distributed prefix sum) and the
     * first/last sequence ids it lands in. */
   def curate(docs: DataFrame, seqLen: Int = 512): DataFrame =
-    TextOps.packSequences(
-        curatedDocs(docs)
-          .select(col("doc_id"), size(col("ts")).cast("bigint").as("n_tokens")),
+    packed(curatedDocs(docs), seqLen)
+
+  /** The packing tail of every curation chain: `docs` packed by
+    * `nTokens` (their `ts` length unless a stage changed it) into q51's
+    * (doc_id, n_tokens, tok_offset, first_seq, last_seq) shape. */
+  private def packed(docs: DataFrame, seqLen: Int,
+      nTokens: Column = size(col("ts")).cast("bigint")): DataFrame =
+    TextOps.packSequences(docs.select(col("doc_id"), nTokens.as("n_tokens")),
         "doc_id", "n_tokens", seqLen)
       .select("doc_id", "n_tokens", "tok_offset", "first_seq", "last_seq")
 

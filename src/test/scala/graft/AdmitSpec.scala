@@ -284,15 +284,4 @@ class AdmitSpec extends SparkSpec {
     assert(rows(1).isNullAt(rows(1).fieldIndex("simhash")))
     assert(!rows(1).isNullAt(rows(1).fieldIndex("xkey")))
   }
-
-  test("lshCrossCandidates pairs near-identical docs across corpora and skips null signatures") {
-    val freshSide = Dedup.signatureStore(fresh, "doc_id", "text", "ts")
-      .select("doc_id", "sig")
-    val pairs = Dedup.lshCrossCandidates(freshSide, store.select("doc_id", "sig"),
-        "doc_id", "sig", bands = 4, rowsPerBand = 2)
-      .as[(Long, Long)].collect().toSet
-    assert(pairs.contains((10L, 1L)), "verbatim copy must bucket with its original")
-    assert(pairs.contains((11L, 2L)), "prefix-mutated copy must bucket with its original")
-    assert(!pairs.exists(_._1 == 17L), "null-signature docs can't band")
-  }
 }

@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   * one executor classloader (so generated code compiles once), that
   * [[graft.sources.Store]] alone lays out persisted stores, that only
   * the Spark bridge declares a plan's order over an RDD, that no
-  * builder probes a row bound eagerly, and that admission staging and
-  * the bucket occupancy guard are each written once.
+  * builder probes a row bound eagerly, and that admission staging, the
+  * bucket occupancy guard and the banded pair body are each written
+  * once.
   */
 class ConfigSpec extends SparkSpec {
 
@@ -181,6 +182,22 @@ class ConfigSpec extends SparkSpec {
       .filterNot(_.toString == "src/main/scala/graft/functions/SignBuckets.scala"),
       """SignBuckets\(""")
     assert(found.size == 1, found.mkString("\n"))
+  }
+
+  test("src/main holds one banded pair body") {
+    // Every banded near-dup pair search is a Dedup.PairFamily run by
+    // Dedup.nearPairs. The ids-only self-join filter appears there and in
+    // the two searches that carry signatures through their join
+    // (Ann.semanticDedupPairs, Linkage.fuzzyPairs); the shingle-set
+    // rejoin appears once, in the shared exact-Jaccard verify.
+    val selfJoin = sites(scalaFiles("src/main"),
+      java.util.regex.Pattern.quote("""col("id1") < col("id2")"""))
+    assert(selfJoin.sorted == Seq("src/main/scala/graft/ann/Ann.scala",
+      "src/main/scala/graft/dedup/Dedup.scala",
+      "src/main/scala/graft/operators/Linkage.scala"), selfJoin.mkString("\n"))
+    val rejoin = sites(scalaFiles("src/main"),
+      java.util.regex.Pattern.quote("""col("sh").as("sh1")"""))
+    assert(rejoin == Seq("src/main/scala/graft/dedup/Dedup.scala"), rejoin.mkString("\n"))
   }
 
   /** One file name per match of `regex` in `files`. */

@@ -220,7 +220,8 @@ class PlanSpec extends SparkSpec {
     // introduces stringify with their child scans — it changes what
     // EXECUTES (the cached branches hash once, not three times).
     assert(scans == 10,
-      s"curation corpus scan count changed ($scans, expected 10) — revisit Curation.Reuse")
+      s"curation corpus scan count changed ($scans, expected 10) — revisit the " +
+        "recompute-or-persist choice (README \"Recompute vs persist\")")
   }
 
   test("AQE splits the skewed partition of a fact-fact shuffle join") {

@@ -400,6 +400,21 @@ class TextDedupSpec extends SparkSpec {
     assert(pairs.contains((0L, 100L)))
   }
 
+  test("embedding near-dup: the sign-LSH family runs under the banded body's occupancy guard") {
+    // 4 identical vectors share every table's bucket; built through the
+    // one pair body with a bound of 3, the first action raises before the
+    // candidate join instead of pairing them.
+    val v = Seq(0.5f, -0.25f, 0.125f, 1.0f)
+    val df = (1L to 4L).map(i => (i, v)).toDF("vec_id", "embedding")
+    val family = graft.ann.Ann.nearDupFamily(df, "vec_id", "embedding", 0.99,
+      seed = 42, tables = 2, planes = 3, dim = 4)
+    val e = intercept[Exception](Dedup.nearPairs(family.copy(maxBucket = 3)).count())
+    val msg = messageChain(e)
+    assert(msg.contains("nearDupPairs: bucket occupancy 4 exceeds maxBucket=3"), msg)
+    // under the default bound the same frame pairs all six
+    assert(Dedup.nearPairs(family).count() == 6)
+  }
+
   test("lshTopK(broadcastQueries=false): corpus-sized query set plans shuffle joins, same results") {
     // The non-broadcast fallback for unbounded query sets (r4 advice): no
     // forced driver broadcast anywhere in the plan, and bit-identical
